@@ -12,7 +12,6 @@ _dependencies.py:101-130).
 
 from __future__ import annotations
 
-from importlib import import_module
 from importlib.util import find_spec
 
 from marex_spark.exceptions import DependencyError
@@ -54,12 +53,6 @@ def require_dependencies(
             details={"missing": missing},
             suggestions=[f"pip install {' '.join(missing)}"],
         )
-
-
-def import_or_raise(dep_name: str, feature: str = "This functionality"):
-    """Import and return the module, or raise the typed error."""
-    require_dependencies([dep_name], feature)
-    return import_module(dep_name)
 
 
 def get_installation_profile() -> str:

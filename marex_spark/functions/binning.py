@@ -25,8 +25,3 @@ def digitize(c: Column, precision: float, max_value: float) -> Column:
     n_pos = int(round(max_value / precision))
     pos = F.lit(1) + F.floor(c / F.lit(float(precision))).cast("int")
     return F.when(c < 0, F.lit(0)).otherwise(clip(pos, F.lit(1), F.lit(n_pos + 1))).cast("int")
-
-
-def bin_left_edge(bin_idx: Column, precision: float) -> Column:
-    """Left edge of a positive bin produced by :func:`digitize`."""
-    return (bin_idx - F.lit(1)).cast("double") * F.lit(float(precision))

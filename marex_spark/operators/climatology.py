@@ -64,20 +64,6 @@ def partition_by_cells(
     return df.repartition(*[F.col(k) for k in keys])
 
 
-def fixed_climatology(
-    df: DataFrame,
-    keys: tuple[str, ...] = DEFAULT_KEYS,
-    value_col: str = "value",
-) -> DataFrame:
-    """Day-of-year mean climatology over the whole record
-    (detect.py:2365-2373, A1). Returns (doy, *keys, clim)."""
-    return (
-        add_time_keys(df)
-        .groupBy("doy", *keys)
-        .agg(F.avg(value_col).alias("clim"))
-    )
-
-
 def anomaly_fixed_baseline(
     df: DataFrame,
     keys: tuple[str, ...] = DEFAULT_KEYS,

@@ -3,17 +3,17 @@
 The registered query ``decontam_bloom`` (queries/dedup.py) and the
 streaming gate ``bloom_decontaminate_stream`` (streaming/documents.py)
 are thin pins over these functions, so batch, stream, and any
-user-parameterised call share ONE probe family and ONE geometry rule —
-a bitset built by one is probed identically by the others.
+user-parameterised call share ONE geometry rule, ONE probe family and
+ONE per-batch kernel (:func:`bloom_counts`) — a bitset built by one is
+probed identically by the others.
 
 Scale shape: the benchmark side is small by definition (an eval set),
 so it collapses to an (m,k)-derived bitset on the driver; the corpus
-side is a pure map pass — per-row ``array_distinct`` shingling (no
-corpus-wide distinct shuffle), k salted-md5 probes against ONE binary
-plan literal inside whole-stage codegen, then a single map-side-
-combined per-doc aggregate. Zero joins at any corpus size while the
-bitset fits the literal budget; above it, a broadcast bit-table
-semi-join with identical flag semantics.
+side is one ``mapInArrow`` pass (:func:`bloom_probe`) — zero-copy
+shingle spans over the Arrow text buffer, vectorised md5, k probes
+against the bitset packed 8:1 into a broadcast variable, and per-doc
+counts, all inside the task. Zero joins and zero exchanges at any
+corpus or benchmark size.
 """
 
 from __future__ import annotations
@@ -28,9 +28,6 @@ from pyspark.sql import DataFrame, functions as F
 # m saturates on a real 10^6-shingle benchmark and flags everything.
 _BLOOM_K_MAX = 14  # static probe-branch count in the replay oracle SQL
 _BLOOM_M_MIN = 1024
-# Past this the binary literal is ~8 MB+ of plan: warn and fall back to
-# the broadcast bit-table semi-join.
-_BLOOM_MAX_LITERAL_BITS = 1 << 23
 _LN2 = 0.6931471805599453
 
 
@@ -56,8 +53,9 @@ def bloom_pos(col, i: int, m: int):
     false-positive asymptotics; one md5 instead of k salted md5s is
     ~12× fewer hash evaluations on the corpus hot path (measured: the
     k-salted form spent 43 s of the 5M-doc row's 56 s computing md5).
-    THE single definition of the probe family — batch operator,
-    streaming gate, and oracle replay all derive from it. Callers
+    THE single definition of the probe family — the benchmark-side
+    fit, the corpus kernel (:func:`bloom_counts`) and the oracle
+    replay all derive from it. Callers
     probing k positions should materialise h1/h2 as projected columns
     once via :func:`bloom_hash_cols` (HOF lambdas and repeated array
     elements re-evaluate subtrees), then combine with
@@ -110,8 +108,8 @@ def bloom_fit(
     """Fold a benchmark corpus into a Bloom bitset: distinct n-gram
     shingles → derived (m, k) → k salted probes per shingle → one
     m-byte '0'/'1' bitset. Returns ``(bits, m, k)`` — ``bits`` is a
-    plain bytes value usable as a plan literal (batch) or handed to
-    the streaming gate. Two small jobs over the benchmark side only;
+    plain bytes value handed to :func:`bloom_probe` (batch) or to the
+    streaming gate. Two small jobs over the benchmark side only;
     the corpus is never touched."""
     sh = (
         bench_docs.select(
@@ -149,193 +147,18 @@ def bloom_fit(
     return bits.tobytes(), m, k
 
 
-def bloom_flag_from_hashes(bits: bytes, k: int, h1, h2) -> "F.Column":
-    """Boolean Column: all k probe bits set, from pre-materialised
-    hash halves (project them as plain columns first — repeated array
-    elements re-evaluate expression subtrees). The bitset rides as ONE
-    binary literal (a boolean-array literal crosses py4j element by
-    element — minutes at 2^20 bits; bytes is a single call — and
-    binary substring is BYTE-indexed O(1), where string substr is
-    code-point indexed and scans O(position) per probe); referenced
-    once via forall over the k-position array, not k literal copies."""
-    m = len(bits)
-    bitset = F.lit(bits)
-    pos_arr = F.array(
-        *[
-            (bloom_pos_from_hashes(h1, h2, i, m) + 1).cast("int")
-            for i in range(k)
-        ]
-    )
-    return F.forall(
-        pos_arr, lambda p: F.substring(bitset, p, F.lit(1)) == F.lit(b"1")
-    )
-
-
-def bloom_flag_column(bits: bytes, k: int, shingle_col) -> "F.Column":
-    """:func:`bloom_flag_from_hashes` with the hashes inline — fine
-    for one-off expressions; hot paths should project the halves."""
-    h1, h2 = bloom_hash_cols(shingle_col, len(bits))
-    return bloom_flag_from_hashes(bits, k, h1, h2)
-
-
-def bloom_decontaminate(
-    docs: DataFrame,
-    bench_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    out_col: str = "contamination_bloom",
-    max_literal_bits: int | None = None,
-    use_kernel: bool | None = None,
-) -> DataFrame:
-    """Per-document Bloom contamination over ``docs`` against the
-    ``bench_docs`` benchmark: ``(id_col, n_shingles, n_flagged,
-    out_col)`` with flagged ⊇ exact containment (false positives
-    bounded by the derived geometry, false negatives impossible — the
-    property that makes Bloom the right gate before an exact check).
-
-    Corpus plan tiers, all ZERO joins and one exchange:
-
-    - ``m ≤ max_literal_bits`` (default 2^23 ≈ 1M-shingle benchmarks):
-      the bitset rides as a binary PLAN LITERAL and the probe is pure
-      whole-stage codegen.
-    - larger ``m``: probe positions still compute JVM-side (codegen
-      md5), the bitset PACKS 8:1 into a numpy uint8 array shipped as
-      a broadcast VARIABLE (m/8 bytes — 16 MB at m=2^27, where the
-      literal would be 16 MB of plan per reference and the old
-      bit-table join broadcast ~10^8 positions ≈ 1 GB), and one
-      vectorised mapInArrow gather checks all k bits per shingle.
-
-    Both tiers are equality-pinned against each other in
-    tests/test_dedup_skew.py.
-
-    Default corpus path (``use_kernel``, env ``MAREX_BLOOM_KERNEL=0``
-    to disable): ONE ``mapInArrow`` pass — zero-copy shingle spans
-    over the Arrow text buffer, vectorised md5, packed-bitset probes
-    and per-doc counts all inside the kernel, so the plan has ZERO
-    exchanges and no exploded corpus rows. The JVM expression tiers
-    below remain the cross-checked reference (equality-pinned in
-    tests/test_dedup_skew.py): the phase decomposition
-    (tools/profile_decontam.py) measured their shingle construction
-    at ~15 s and the k-probe forall at ~5 s of the 5M-doc row's 30 s,
-    vs ~0.3 s for md5 itself — the strings were the cost, not the
-    hash (guide §4.2)."""
-    if max_literal_bits is None:
-        max_literal_bits = _BLOOM_MAX_LITERAL_BITS
-    if use_kernel is None:
-        import os
-
-        use_kernel = os.environ.get("MAREX_BLOOM_KERNEL", "1") != "0"
-    bits, m, k = bloom_fit(bench_docs, text_col=text_col, n=n)
-    if use_kernel:
-        return _bloom_probe_kernel(
-            docs, bits, m, k, text_col, id_col, n, out_col
-        )
-    shingles = shingle_array(F.col(text_col), n)
-    h1, h2 = bloom_hash_cols(F.col("shingle"), m)
-    # ONE md5 per shingle (K-M double hashing), materialised as plain
-    # columns so the k probe positions are integer arithmetic
-    probed = docs.select(id_col, F.explode(shingles).alias("shingle")).select(
-        id_col, h1.alias("_h1"), h2.alias("_h2")
-    )
-    if m <= max_literal_bits:
-        flagged = bloom_flag_from_hashes(
-            bits, k, F.col("_h1"), F.col("_h2")
-        )
-        agg = probed.groupBy(id_col).agg(
-            F.count("*").alias("n"),
-            F.sum(flagged.cast("long")).alias("nh"),
-        )
-    else:
-        from marex_spark.logging_config import get_logger
-
-        get_logger(__name__).warning(
-            "bloom_decontaminate: derived bitset m=%d exceeds the %d-bit "
-            "literal budget; shipping it packed (%d bytes) as a "
-            "broadcast variable with a mapInArrow probe kernel "
-            "(same flag semantics, still zero joins)",
-            m,
-            max_literal_bits,
-            m // 8,
-        )
-        from collections.abc import Iterator
-
-        import numpy as np
-        import pyarrow as pa
-
-        packed = np.packbits(
-            np.frombuffer(bits, dtype=np.uint8) == 0x31, bitorder="little"
-        )
-        bc = docs.sparkSession.sparkContext.broadcast(packed.tobytes())
-        id_type = docs.schema[id_col].dataType.simpleString()
-        pos_arr = F.array(
-            *[
-                bloom_pos_from_hashes(F.col("_h1"), F.col("_h2"), i, m)
-                for i in range(k)
-            ]
-        )
-        mid = probed.select(id_col, pos_arr.alias("ps"))
-
-        def _probe(batches) -> Iterator:
-            pb = np.frombuffer(bc.value, dtype=np.uint8)
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                tbl = pa.Table.from_batches([batch]).combine_chunks()
-                ps_col = tbl["ps"].chunk(0)
-                # fixed k positions per row, never null → flat reshape
-                # (list_flatten respects offsets, unlike .values)
-                import pyarrow.compute as pc
-
-                flat = pc.list_flatten(ps_col).to_numpy().astype(np.int64)
-                ps = flat.reshape(-1, k)
-                hit = ((pb[ps >> 3] >> (ps & 7).astype(np.uint8)) & 1).all(
-                    axis=1
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [tbl[id_col].chunk(0), pa.array(hit.astype(np.int64))],
-                    names=[id_col, "flagged"],
-                )
-
-        agg = (
-            mid.mapInArrow(_probe, schema=f"{id_col} {id_type}, flagged long")
-            .groupBy(id_col)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("flagged").alias("nh"),
-            )
-        )
-    return agg.select(
-        id_col,
-        F.col("n").cast("long").alias("n_shingles"),
-        F.col("nh").cast("long").alias("n_flagged"),
-        (F.col("nh") / F.col("n").cast("double")).alias(out_col),
-    )
-
-
-def _bloom_probe_kernel(
-    docs: DataFrame,
-    bits: bytes,
-    m: int,
-    k: int,
-    text_col: str,
-    id_col: str,
-    n: int,
-    out_col: str,
-) -> DataFrame:
-    """The default corpus probe: one ``mapInArrow`` over
-    ``(id_col, text_col)`` emitting per-doc ``(id, n, nh)`` directly —
-    shingles are (start, len) spans over the batch's own string
-    buffer (zero copies), dedup/md5/probe run vectorised, and the
-    aggregate never leaves the task, so the corpus pays NO exchange
-    at all (the JVM tiers pay one for the per-doc groupBy). Docs with
-    zero shingles are absent from the output, exactly like the
-    exploded form. Value-pinned against the JVM tiers in
-    tests/test_dedup_skew.py and by the oracle gate."""
-    from collections.abc import Iterator
-
+def bloom_counts(text, packed, m: int, k: int, n: int = 5):
+    """The per-batch Bloom kernel: ``(n_shingles, n_flagged)`` int64
+    arrays, one entry per row of the pyarrow string array ``text``.
+    ``packed`` is the m-bit bitset packed 8:1 little-endian (a uint8
+    array). Shingles are the distinct n-word windows of
+    ``split(text, ' ')`` (empty tokens kept, the Spark split
+    semantics); NULL text and docs under n words count (0, 0). A
+    shingle is flagged iff all k probe positions ``(h1 + i·h2) mod m``
+    of its md5 halves are set (:func:`bloom_pos`). Spark-free, so the
+    batch operator, the streaming gate and the property tests run the
+    same code."""
     import numpy as np
-    import pyarrow as pa
 
     from marex_spark.operators.md5np import (
         dedup_spans,
@@ -345,6 +168,45 @@ def _bloom_probe_kernel(
         string_spans,
     )
 
+    data, offsets, valid = string_spans(text)
+    row_idx, starts, lens = shingle_spans(data, offsets, valid, n)
+    w = md5_words(data, starts, lens)
+    keep = dedup_spans(data, row_idx, starts, lens, w)
+    ri = row_idx[keep]
+    h1, h2 = halves60(w[keep])
+    h1 %= m
+    h2 %= m
+    flag = np.ones(len(ri), dtype=bool)
+    for i in range(k):
+        p = (h1 + i * h2) % m
+        flag &= ((packed[p >> 3] >> (p & 7).astype(np.uint8)) & 1) == 1
+    nrows = len(valid)
+    return (
+        np.bincount(ri, minlength=nrows).astype(np.int64),
+        np.bincount(ri[flag], minlength=nrows).astype(np.int64),
+    )
+
+
+def bloom_probe(
+    docs: DataFrame,
+    bits: bytes,
+    k: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 5,
+) -> DataFrame:
+    """``(id_col, n_shingles, n_flagged)`` for EVERY row of ``docs``
+    (batch or streaming) against the '0'/'1' bitset ``bits`` (m =
+    ``len(bits)``) — one ``mapInArrow`` running :func:`bloom_counts`
+    per Arrow batch. The bitset ships packed 8:1 once as a broadcast
+    variable (m/8 bytes); the plan has no join, no exchange and no
+    state, so on a stream every micro-batch is append-safe."""
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pyarrow as pa
+
+    m = len(bits)
     packed = np.packbits(
         np.frombuffer(bits, dtype=np.uint8) == 0x31, bitorder="little"
     )
@@ -356,39 +218,44 @@ def _bloom_probe_kernel(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            data, offsets, valid = string_spans(tbl[text_col])
-            row_idx, starts, lens = shingle_spans(data, offsets, valid, n)
-            w = md5_words(data, starts, lens)
-            keep = dedup_spans(data, row_idx, starts, lens, w)
-            ri = row_idx[keep]
-            h1, h2 = halves60(w[keep])
-            h1m = h1 % m
-            h2m = h2 % m
-            flag = np.ones(len(ri), dtype=bool)
-            for i in range(k):
-                p = (h1m + i * h2m) % m
-                flag &= ((pb[p >> 3] >> (p & 7).astype(np.uint8)) & 1) == 1
-            cnt = np.bincount(ri, minlength=batch.num_rows)
-            hit = np.bincount(ri[flag], minlength=batch.num_rows)
-            sel = np.flatnonzero(cnt > 0)
-            if not len(sel):
-                continue
+            cnt, hit = bloom_counts(batch.column(text_col), pb, m, k, n)
             yield pa.RecordBatch.from_arrays(
-                [
-                    tbl[id_col].chunk(0).take(pa.array(sel)),
-                    pa.array(cnt[sel].astype(np.int64)),
-                    pa.array(hit[sel].astype(np.int64)),
-                ],
-                names=[id_col, "n", "nh"],
+                [batch.column(id_col), pa.array(cnt), pa.array(hit)],
+                names=[id_col, "n_shingles", "n_flagged"],
             )
 
-    agg = docs.select(id_col, text_col).mapInArrow(
-        _probe, schema=f"{id_col} {id_type}, n long, nh long"
+    return docs.select(id_col, text_col).mapInArrow(
+        _probe, schema=f"{id_col} {id_type}, n_shingles long, n_flagged long"
     )
-    return agg.select(
-        id_col,
-        F.col("n").cast("long").alias("n_shingles"),
-        F.col("nh").cast("long").alias("n_flagged"),
-        (F.col("nh") / F.col("n").cast("double")).alias(out_col),
+
+
+def bloom_decontaminate(
+    docs: DataFrame,
+    bench_docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 5,
+    out_col: str = "contamination_bloom",
+) -> DataFrame:
+    """Per-document Bloom contamination over ``docs`` against the
+    ``bench_docs`` benchmark: ``(id_col, n_shingles, n_flagged,
+    out_col)`` with flagged ⊇ exact containment (false positives
+    bounded by the derived geometry, false negatives impossible — the
+    property that makes Bloom the right gate before an exact check).
+    Docs with no shingle (NULL text, fewer than ``n`` words) are
+    absent, like the exploded-shingle form the oracle replays.
+
+    Plan: :func:`bloom_fit` on the benchmark side, then ONE
+    :func:`bloom_probe` pass over the corpus and a map-side
+    ``n_shingles > 0`` filter — zero joins, zero exchanges, no
+    exploded corpus rows. The JVM literal-bitset form this kernel
+    replaced is kept as the equality reference in tests/reference
+    (a phase decomposition measured its shingle construction at
+    ~15 s and the k-probe forall at ~5 s of the 5M-doc row's 30 s,
+    vs ~0.3 s for md5 itself — the strings were the cost, not the
+    hash)."""
+    bits, _, k = bloom_fit(bench_docs, text_col=text_col, n=n)
+    out = bloom_probe(docs, bits, k, text_col, id_col, n)
+    return out.filter(F.col("n_shingles") > 0).withColumn(
+        out_col, F.col("n_flagged") / F.col("n_shingles").cast("double")
     )

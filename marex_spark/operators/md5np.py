@@ -3,11 +3,11 @@
 The cross-engine hash convention every dedup/sketch query replays is
 ``md5(string)`` → hex → integer fields (``conv(substring(...), 16, 10)``
 in Spark, ``CAST('0x' || substr(...) AS BIGINT)`` in DuckDB). The JVM
-expression chain is exact but allocation-heavy on wide corpora: the
-decontam phase decomposition (tools/profile_decontam.py, guide §1)
-measured the 5M-doc row at scan 0.7 s / shingle +15.0 s / md5 +0.3 s /
-conv +1.2 s / k-probe +5.4 s / agg +1.8 s — the string *construction*
-and the per-probe substring dominate, not md5 itself. This module
+expression chain is exact but allocation-heavy on wide corpora: a
+phase decomposition of the JVM decontam plan measured the 5M-doc row
+at scan 0.7 s / shingle +15.0 s / md5 +0.3 s / conv +1.2 s / k-probe
++5.4 s / agg +1.8 s — the string *construction* and the per-probe
+substring dominate, not md5 itself. This module
 computes the same bytes with no per-row objects:
 
 - ``shingle_spans``: n-word shingles as (start, len) spans over the
@@ -54,6 +54,8 @@ _INIT = (0x67452301, 0xEFCDAB89, 0x98BADCFE, 0x10325476)
 # stays cache-resident per task — the unchunked form was 8× slower,
 # pure DRAM traffic on full-width temporaries.
 _LANE_CHUNK = 16384
+# Byte budget of one dedup_spans verification gather (per side).
+_VERIFY_BYTES = 1 << 22
 
 
 def _compress(
@@ -186,9 +188,10 @@ def halves32(words: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def string_spans(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(data, starts, lens, valid) of a pyarrow String/LargeString
-    array — the zero-copy view every kernel here slices. Handles chunk
-    slice offsets. Returns (data_u8, offsets_i64, valid_bool)."""
+    """``(data, offsets, valid)`` of a pyarrow String/LargeString
+    array — the zero-copy view every kernel here slices: the uint8
+    data buffer, the ``len(arr) + 1`` int64 offsets into it (slice
+    offset applied) and the boolean validity mask."""
     import pyarrow as pa
 
     if isinstance(arr, pa.ChunkedArray):
@@ -282,15 +285,22 @@ def dedup_spans(
         # duplicate shingles in practice; the check keeps it exact)
         a = order[dup_pos - 1]
         b = order[dup_pos]
-        len_eq = lens[a] == lens[b]
-        bytes_eq = len_eq.copy()
-        if bytes_eq.any():
-            w = int(lens[b][len_eq].max(initial=0))
-            cols = np.arange(w)
-            av = data[starts[a][len_eq][:, None] + cols[None, :]]
-            bv = data[starts[b][len_eq][:, None] + cols[None, :]]
-            mask = cols[None, :] < lens[b][len_eq][:, None]
-            bytes_eq[len_eq] = np.all((av == bv) | ~mask, axis=1)
+        bytes_eq = lens[a] == lens[b]
+        # verify per length class: every gather reads exactly the
+        # span's own bytes (never past the data buffer's end) and the
+        # temporary is bounded by _VERIFY_BYTES, not by pairs × the
+        # longest duplicate in the batch
+        eq_idx = np.flatnonzero(bytes_eq)
+        L = lens[b[eq_idx]]
+        for ln in np.unique(L):
+            cls = eq_idx[L == ln]
+            cols = np.arange(int(ln))
+            step = max(1, _VERIFY_BYTES // max(int(ln), 1))
+            for c0 in range(0, len(cls), step):
+                sel = cls[c0 : c0 + step]
+                av = data[starts[a[sel]][:, None] + cols[None, :]]
+                bv = data[starts[b[sel]][:, None] + cols[None, :]]
+                bytes_eq[sel] = np.all(av == bv, axis=1)
         if not bytes_eq.all():  # pragma: no cover - md5 collision
             return _dedup_exact_fallback(data, row_idx, starts, lens)
         same[dup_pos] = bytes_eq

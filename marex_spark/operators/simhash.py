@@ -19,9 +19,10 @@ engine. Bit 63 makes the BIGINT fingerprint negative; band extraction
 therefore uses ``shiftright + AND-mask`` (sign-safe), never modulo.
 
 Scale shape:
-- Fingerprinting: tokenize → ONE md5 per word → ``bits`` map-side
-  combinable SUM aggregates in a single per-doc groupBy. One exchange,
-  whole-stage codegen throughout, no fan-out beyond the word explode.
+- Fingerprinting: ONE ``mapInArrow`` pass (:func:`simhash_batch` per
+  Arrow batch) — token spans over the batch's string buffer, one
+  vectorised md5 per word, exact per-doc vote counts. Zero exchanges
+  and no word explode; batch and stream run the same kernel.
 - Pair generation: per-band equi-join on 16-bit keys (65,536 values
   per band × 4 bands). Buckets are only hot where the corpus really
   contains mass near-duplicates; for those, ``star_cap`` switches the
@@ -36,147 +37,21 @@ Scale shape:
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_MIN_LONG = -(1 << 63)
 
-
-def simhash_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
-    fp_name: str = "simhash",
-    lane_bits: int = 16,
-    use_kernel: bool | None = None,
-) -> DataFrame:
-    """``(id_col, fp_name)`` — one ``bits``-wide SimHash per document:
-    md5-derived word hashes vote ±1 per bit position (term frequency
-    weights the vote — the classic formulation), the sign of each
-    vote sets the bit. One shuffle, map-side combinable, no fan-out.
-
-    Vote aggregation is LANE-PACKED (r8): instead of ``bits`` separate
-    ±1 SUM buffers, each aggregate packs ``63 // lane_bits`` per-bit
-    ones-counts into one long (3 lanes for the default 16-bit lanes —
-    the packed sum stays ≤ 2^63 − 1 for every legal document, see the
-    in-code note); the sign test replays as
-    ``2·ones_b > n_words`` (exactly the old ``Σ±1 > 0`` in integers,
-    so fingerprint VALUES are unchanged and every oracle/fixture
-    still holds — pinned by the map-only equality test and the
-    brute-force suite). Measured at 1M docs (SCALE.md r8): the
-    aggregation stage drops 5.2 → 1.7 s (3×, AT the md5 hash-only
-    floor); the whole operator 5.2-7.6 → 4.6-5.4 s — the remainder is
-    the doc-level combine plus the overflow guard below, whose
-    ``raise_error`` forces that final 1M-row stage out of codegen
-    (~1.5 s, the price of refusing to corrupt silently). A lane holds
-    counts up to ``2^lane_bits - 1`` words per document; documents
-    beyond that raise inside the job with the doc id — raise
-    ``lane_bits`` (e.g. 32) for monster documents.
-
-    Default path (r10, ``use_kernel`` / env ``MAREX_SIMHASH_KERNEL=0``
-    to disable): ONE map-only Arrow kernel — token spans over the
-    batch's string buffer, vectorised md5, per-doc vote counts and
-    the sign pack all inside the task, so fingerprinting pays ZERO
-    exchanges and no word explode (the phase decomposition measured
-    the groupBy form's aggregate+guard+combine at ~4.2 s of the 1M-doc
-    row vs ~0.7 s for md5+conv). Values are bit-identical (equality-
-    pinned in tests; exact int counts, so no lane-overflow raise —
-    monster documents fingerprint correctly instead of raising)."""
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in 1..64, got {bits}")
-    if lane_bits not in (8, 16, 32):
-        raise ValueError(f"lane_bits must be 8, 16 or 32, got {lane_bits}")
-    if use_kernel is None:
-        import os
-
-        use_kernel = os.environ.get("MAREX_SIMHASH_KERNEL", "1") != "0"
-    if use_kernel:
-        return _simhash_kernel(df, text_col, id_col, bits, fp_name)
-    tok = df.select(
-        id_col, F.explode(F.split(F.col(text_col), " ")).alias("word")
-    )
-    m = F.md5("word")
-    wh = tok.select(
-        id_col,
-        F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("lo"),
-        F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("hi"),
-    )
-
-    def bit_of(b):
-        src = F.col("lo") if b < 32 else F.col("hi")
-        return F.shiftright(src, b % 32).bitwiseAND(F.lit(1))
-
-    # Pack at most floor(63 / lane_bits) lanes per aggregate: the SUM
-    # over a doc's words is then bounded by (2^lane_bits - 1) ·
-    # Σ_{i<L} 2^(i·lane_bits) = 2^(L·lane_bits) - 1 ≤ 2^63 - 1 for any
-    # doc within lane_cap — it can never trip Spark's ANSI
-    # ARITHMETIC_OVERFLOW before the friendly lane-overflow guard
-    # below gets to fire. (A 64//lane_bits packing put the top lane at
-    # bit 48 for 16-bit lanes, overflowing signed int64 from ~32,768
-    # words — half the documented 65,535-word envelope.)
-    lanes_per_agg = max(1, 63 // lane_bits)
-    n_aggs = (bits + lanes_per_agg - 1) // lanes_per_agg
-    aggs = []
-    for k in range(n_aggs):
-        expr = None
-        for lane in range(lanes_per_agg):
-            b = k * lanes_per_agg + lane
-            if b >= bits:
-                break
-            t = F.shiftleft(bit_of(b), lane_bits * lane)
-            expr = t if expr is None else expr + t
-        aggs.append(F.sum(expr).alias(f"p{k}"))
-    aggs.append(F.count("*").alias("__nw"))
-    agg = wh.groupBy(id_col).agg(*aggs)
-    lane_cap = (1 << lane_bits) - 1
-    agg = agg.filter(
-        F.when(F.col("__nw") <= lane_cap, F.lit(True)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"simhash_fingerprints: document exceeds {lane_cap} "
-                        "words (lane overflow); re-run with larger "
-                        "lane_bits — doc "
-                    ),
-                    F.col(id_col).cast("string"),
-                )
-            )
-        )
-    )
-    mask = F.lit(lane_cap)
-    terms = []
-    for b in range(bits):
-        k, lane = divmod(b, lanes_per_agg)
-        ones = F.shiftright(F.col(f"p{k}"), lane_bits * lane).bitwiseAND(mask)
-        terms.append(
-            F.when(
-                ones * 2 > F.col("__nw"),
-                F.lit(_MIN_LONG if b == 63 else (1 << b)),
-            ).otherwise(F.lit(0))
-        )
-    combine = reduce(lambda a, c: a + c, terms)
-    return agg.select(id_col, combine.cast("long").alias(fp_name))
-
-
-def _simhash_kernel(
-    df: DataFrame, text_col: str, id_col: str, bits: int, fp_name: str
-) -> DataFrame:
-    """Map-only Arrow fingerprint kernel: one ``mapInArrow`` over
-    ``(id_col, text_col)`` emitting ``(id, fp)`` — tokens are (start,
-    len) spans over the batch's own string buffer (split on single
-    space, empties kept, exactly like ``explode(split(...))``),
-    md5 runs vectorised, the ±1 votes become per-doc ones-counts via
-    one ``reduceat``, and the sign test replays ``2·ones > n_words``.
-    NULL-text docs are absent from the output, exactly like the
-    exploded form. Value-pinned against the groupBy form in
-    tests/test_simhash_pairs.py and by the oracle gate."""
-    from collections.abc import Iterator
-
+def simhash_batch(text, bits: int = 64):
+    """The per-batch SimHash kernel: ``(rows, fp)`` for the pyarrow
+    string array ``text`` — the indices of its non-NULL rows and their
+    ``bits``-wide fingerprints (int64; bit 63 makes it negative).
+    Tokens are ``split(text, ' ')`` with empties kept (an empty or
+    all-space text still votes); each word's md5 gives a 64-bit hash
+    ``(hi << 32) | lo`` from hex chars 9-16 and 1-8, every word votes
+    ±1 per bit (term frequency weights the vote), and bit b is set iff
+    ``2·ones_b > n_words``. Counts are exact integers, so documents of
+    any length fingerprint correctly. Spark-free."""
     import numpy as np
-    import pyarrow as pa
 
     from marex_spark.operators.md5np import (
         halves32,
@@ -185,143 +60,66 @@ def _simhash_kernel(
         string_spans,
     )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    nbits = bits
-
-    def _fp(batches) -> Iterator:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            data, offsets, valid = string_spans(tbl[text_col])
-            # n=1 "shingles" = the split tokens themselves (empties
-            # and trailing empties kept — split semantics)
-            row_idx, starts, lens = shingle_spans(data, offsets, valid, 1)
-            if not len(row_idx):
-                continue
-            w = md5_words(data, starts, lens)
-            # 64-bit word hash: bit b<32 from lo (hex chars 1-8), bit
-            # b>=32 from hi (chars 9-16) — h64 = (hi << 32) | lo
-            lo, hi = halves32(w)
-            h64 = (hi.astype(np.uint64) << np.uint64(32)) | lo.astype(
-                np.uint64
-            )
-            # docs appear as contiguous row_idx runs (row-major spans).
-            # Per-bit 1-D reduceat: the (ntok × 64) bit matrix with an
-            # axis-0 reduceat was 17× slower (strided reduction over a
-            # 40 MB temporary vs 64 cache-resident passes).
-            doc_ids, first = np.unique(row_idx, return_index=True)
-            ones = np.empty((len(first), nbits), dtype=np.int64)
-            for b in range(nbits):
-                bits_b = ((h64 >> np.uint64(b)) & np.uint64(1)).astype(
-                    np.int64
-                )
-                ones[:, b] = np.add.reduceat(bits_b, first)
-            nw = np.diff(np.append(first, len(row_idx)))
-            fp_bits = (2 * ones) > nw[:, None]
-            weights = (np.uint64(1) << np.arange(nbits, dtype=np.uint64))
-            fp = (fp_bits.astype(np.uint64) * weights[None, :]).sum(
-                axis=1, dtype=np.uint64
-            ).view(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    tbl[id_col].chunk(0).take(pa.array(doc_ids)),
-                    pa.array(fp),
-                ],
-                names=[id_col, fp_name],
-            )
-
-    return df.select(id_col, text_col).mapInArrow(
-        _fp, schema=f"{id_col} {id_type}, {fp_name} long"
+    data, offsets, valid = string_spans(text)
+    # n=1 "shingles" = the split tokens themselves
+    row_idx, starts, lens = shingle_spans(data, offsets, valid, 1)
+    if not len(row_idx):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    lo, hi = halves32(md5_words(data, starts, lens))
+    h64 = (hi.astype(np.uint64) << np.uint64(32)) | lo.astype(np.uint64)
+    # docs appear as contiguous row_idx runs (row-major spans).
+    # Per-bit 1-D reduceat: the (ntok × 64) bit matrix with an axis-0
+    # reduceat was 17× slower (strided reduction over a 40 MB
+    # temporary vs 64 cache-resident passes).
+    rows, first = np.unique(row_idx, return_index=True)
+    ones = np.empty((len(first), bits), dtype=np.int64)
+    for b in range(bits):
+        bit_b = ((h64 >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
+        ones[:, b] = np.add.reduceat(bit_b, first)
+    nw = np.diff(np.append(first, len(row_idx)))
+    fp_bits = (2 * ones) > nw[:, None]
+    weights = np.uint64(1) << np.arange(bits, dtype=np.uint64)
+    fp = (fp_bits.astype(np.uint64) * weights[None, :]).sum(
+        axis=1, dtype=np.uint64
     )
+    return rows, fp.view(np.int64)
 
 
-def simhash_column(text_col: str = "text", bits: int = 64):
-    """The SimHash fingerprint as ONE map-only column expression — no
-    groupBy, so it evaluates on a stream (where a per-doc aggregation
-    would be unbounded state) and adds zero exchanges in batch.
-    Value-identical to :func:`simhash_fingerprints` (equality-locked);
-    see :func:`simhash_fingerprints_map_only` for the measured CPU
-    trade-off that makes the groupBy form the batch default."""
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in 1..64, got {bits}")
-    words = F.split(F.col(text_col), " ")
-    # one md5 per word, split into 32-bit halves (same hash as the
-    # groupBy form — fingerprints are bit-identical)
-    hashes = F.transform(
-        words,
-        lambda w: F.struct(
-            F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long").alias("lo"),
-            F.conv(F.substring(F.md5(w), 9, 8), 16, 10).cast("long").alias("hi"),
-        ),
-    )
-    zeros = F.array_repeat(F.lit(0).cast("long"), bits)
-    idx = F.sequence(F.lit(0), F.lit(bits - 1))
-
-    def vote(acc, h):
-        # bit b of the 64-bit word hash via exact double math (powers
-        # of two are exact doubles; halves are < 2^32): sign-safe and
-        # column-indexable, unlike shiftright's literal-only Python API
-        def bit_of(b):
-            src = F.when(b < 32, h["lo"]).otherwise(h["hi"])
-            sh = b % 32
-            return (
-                F.floor(src / F.pow(F.lit(2.0), sh.cast("double"))).cast("long")
-                % 2
-            )
-
-        return F.zip_with(acc, idx, lambda a, b: a + bit_of(b) * 2 - 1)
-
-    votes = F.aggregate(hashes, zeros, vote)
-    packed = F.aggregate(
-        F.zip_with(
-            votes,
-            idx,
-            lambda v, b: F.when(
-                v > 0,
-                F.when(b == 63, F.lit(_MIN_LONG)).otherwise(
-                    F.pow(F.lit(2.0), b.cast("double")).cast("long")
-                ),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    return packed.cast("long")
-
-
-def simhash_fingerprints_map_only(
+def simhash_fingerprints(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 64,
     fp_name: str = "simhash",
 ) -> DataFrame:
-    """ZERO-EXCHANGE variant of :func:`simhash_fingerprints` — value-
-    identical output (equality-locked in tests), different plan shape:
-    instead of explode → groupBy (one corpus exchange carrying a row
-    per doc), the per-doc vote loop runs as array expressions inside
-    the row (:func:`simhash_column`) — ``transform`` hashes each word
-    once, ``aggregate`` folds ±1 votes into a ``bits``-wide counter
-    array, and a final fold packs the sign bits. The whole fingerprint
-    is a pure map over the scan: at 100 TB the fingerprinting stage
-    shuffles NOTHING.
+    """``(id_col, fp_name)`` — one ``bits``-wide SimHash per document
+    of ``df`` (batch or streaming): one ``mapInArrow`` running
+    :func:`simhash_batch` per Arrow batch. NULL-text documents are
+    absent, like the exploded form the oracle replays
+    (:func:`simhash_fingerprints_sql`). The plan adds ZERO exchanges
+    and no word explode: the phase decomposition of the explode+groupBy
+    form it replaced measured its aggregate+combine at ~4.2 s of the
+    1M-doc row vs ~0.7 s for md5 itself. That form is kept as the
+    equality reference in tests/reference."""
+    from collections.abc import Iterator
 
-    NULL text: the groupBy form drops a NULL-text document entirely
-    (``explode(split(NULL))`` emits no rows — and the DuckDB oracle's
-    UNNEST agrees), so this form filters NULL text up front to stay
-    value-identical; without the filter the array fold would emit a
-    spurious ``(doc_id, NULL)`` fingerprint row.
+    import pyarrow as pa
 
-    Trade-off — MEASURED, not assumed (SCALE.md round 8, quiet box,
-    1M docs ~70 MB text): groupBy form 7.6 s, this form 143.9 s — the
-    interpreted HigherOrderFunction vote fold costs ~19× more CPU than
-    the one doc-keyed exchange it saves. The groupBy form is therefore
-    the default engine everywhere; use this one only when an exchange
-    is genuinely unaffordable (e.g. a map-only streaming gate, where
-    a shuffle is not just slow but impossible)."""
-    return df.filter(F.col(text_col).isNotNull()).select(
-        id_col, simhash_column(text_col, bits).alias(fp_name)
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in 1..64, got {bits}")
+    id_type = df.schema[id_col].dataType.simpleString()
+
+    def _fp(batches) -> Iterator:
+        for batch in batches:
+            rows, fp = simhash_batch(batch.column(text_col), bits)
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(id_col).take(pa.array(rows)), pa.array(fp)],
+                    names=[id_col, fp_name],
+                )
+
+    return df.select(id_col, text_col).mapInArrow(
+        _fp, schema=f"{id_col} {id_type}, {fp_name} long"
     )
 
 

@@ -362,9 +362,8 @@ def _simhash_sql() -> str:
 def dedup_simhash(spark, sf_dir):
     """64-bit SimHash per doc (Manku 2007 geometry): one md5 per word
     split into two 32-bit integer halves, ±1 votes per bit position,
-    sign of the vote sets the bit. Bits unrolled as 64 map-side
-    combinable aggregate exprs: ONE shuffle, whole-stage codegen
-    throughout. Bit 63 makes the BIGINT negative by design; all
+    sign of the vote sets the bit. One map-only Arrow kernel pass:
+    ZERO shuffles. Bit 63 makes the BIGINT negative by design; all
     downstream band math is shift+mask (sign-safe)."""
     docs = load_table(spark, sf_dir, "documents")
     return simhash_fingerprints(docs, bits=_SH_BITS)
@@ -808,14 +807,13 @@ def dedup_paragraphs(spark, sf_dir):
 # ----------------------------------------- Bloom-filter decontamination
 
 # The operator tier lives in operators/dedup.py (geometry derivation,
-# probe family, per-row shingle arrays, literal/fallback probe plans);
-# this module pins the registered query over it and generates the
-# DuckDB replay oracle. Names re-exported for the streaming gate and
+# probe family, per-row shingle arrays, the Arrow probe kernel); this
+# module pins the registered query over it and generates the DuckDB
+# replay oracle. Names re-exported for the streaming gate and
 # the test suite (one probe family everywhere).
 from marex_spark.operators.dedup import (  # noqa: E402,F401
     _BLOOM_K_MAX,
     _BLOOM_M_MIN,
-    _BLOOM_MAX_LITERAL_BITS,
     _LN2,
     bloom_decontaminate,
     bloom_geometry,
@@ -895,13 +893,12 @@ def decontam_bloom(spark, sf_dir):
     Pins :func:`marex_spark.operators.dedup.bloom_decontaminate` at
     today's constants (5-gram shingles, benchmark = source 'src0',
     corpus = everything else; round6 on the fraction for the hash
-    gate). Scale shape lives with the operator: derived (m, k), ONE
-    binary bitset literal probed in codegen, per-row array_distinct
-    shingling (no corpus-wide distinct shuffle), ZERO joins on the
-    corpus side (plan-pinned in tests/test_plans.py — the
-    benchmark/training split is a pushed-down source filter); above
-    the ~8M-bit literal budget the operator logs a warning and falls
-    back to a broadcast bit-table semi-join with identical flags."""
+    gate). Scale shape lives with the operator: derived (m, k), the
+    bitset packed 8:1 in a broadcast variable, and ONE mapInArrow
+    kernel that shingles, hashes, probes and counts per doc — ZERO
+    joins and ZERO exchanges on the corpus side at any benchmark size
+    (plan-pinned in tests/test_plans.py — the benchmark/training split
+    is a pushed-down source filter)."""
     docs = load_table(spark, sf_dir, "documents")
     out = bloom_decontaminate(
         docs.filter(F.col("source") != "src0"),

@@ -61,10 +61,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_star_schema(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in STAR_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every star table as a temp view (mirrors the driver's
-    DuckDB view registration, so SQL-form queries read the same names)."""
-    for name in STAR_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -256,7 +256,6 @@ def bloom_decontaminate_stream(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 5,
-    max_literal_bits: int | None = None,
 ) -> DataFrame:
     """Bloom-filter contamination gate for a document stream — the
     ZERO-state, zero-join form of :func:`decontaminate_stream`.
@@ -265,130 +264,23 @@ def bloom_decontaminate_stream(
     benchmark's shingles — pass operators/dedup.bloom_fit's ``bytes``
     (b"0"/b"1" per bit) directly, or any boolean sequence (normalised
     to the same bytes form here) — and ``k`` the probe count that
-    built it; both sides of the geometry
-    operators/dedup.bloom_geometry derives from the benchmark size
-    (pass the same k; a mismatched k changes the flag set). The probe
-    family (Kirsch–Mitzenmacher double hashing: one md5 per shingle,
-    positions ``(h1 + i·h2) mod m``), the shingle construction, AND
-    the flag expression are IMPORTED from that module — one
-    definition, so a doc flagged here is flagged there by
-    construction; the hash halves materialise per shingle via one
-    ``transform`` pass so the HOF lambda never recomputes the md5 per
-    probe. The bitset rides the plan as ONE binary literal probed by
-    byte-indexed O(1) substring — a Python list literal crosses py4j
-    element by element (minutes at 2^20 bits) and array element_at on
-    a 2^20-slot literal was the same trap the batch tier already
-    documents — so every micro-batch is a pure map pass: no
-    stream-static join, no broadcast exchange, no watermark
-    requirement — the cheapest possible first gate in front of the
-    exact decontamination join. Emits the per-document shingle counts
-    ``(id_col, n_shingles, n_flagged)`` per micro-batch row (one row
-    per input doc; append-safe).
+    built it (pass the same k; a mismatched k changes the flag set).
 
-    Above ``max_literal_bits`` (default: the batch tier's
-    ``_BLOOM_MAX_LITERAL_BITS``; real decontamination benchmarks reach
-    m=2^24, a 16 MB literal re-embedded in every micro-batch plan) the
-    bitset instead ships PACKED 8:1 ONCE as a broadcast variable and a
-    per-row ``mapInArrow`` kernel gathers the k JVM-computed positions
-    per shingle — same flag semantics (equality-pinned in the tests),
-    same one-row-per-doc append-safe shape, still zero joins and zero
-    state at any m."""
-    from marex_spark.operators.dedup import (
-        _BLOOM_MAX_LITERAL_BITS,
-        bloom_flag_from_hashes,
-        bloom_hash_cols,
-        bloom_pos_from_hashes,
-        shingle_array,
-    )
+    Every micro-batch runs operators/dedup.bloom_probe — the SAME
+    per-batch kernel as the batch operator, so a doc flagged here is
+    flagged there by construction: one ``mapInArrow`` with the bitset
+    packed 8:1 in a broadcast variable, no stream-static join, no
+    exchange, no watermark requirement — the cheapest possible first
+    gate in front of the exact decontamination join. Emits
+    ``(id_col, n_shingles, n_flagged)`` for EVERY input doc, including
+    ``(id, 0, 0)`` for NULL or sub-``n``-word text (append-safe)."""
+    from marex_spark.operators.dedup import bloom_probe
 
     if isinstance(bloom_bits, (bytes, bytearray)):
         bits = bytes(bloom_bits)
     else:
         bits = bytes(bytearray(49 if v else 48 for v in bloom_bits))
-    if max_literal_bits is None:
-        max_literal_bits = _BLOOM_MAX_LITERAL_BITS
-    m = len(bits)
-    shingles = shingle_array(text_col, n)
-
-    def _hashes(s):
-        h1, h2 = bloom_hash_cols(s, m)
-        return F.struct(h1.alias("h1"), h2.alias("h2"))
-
-    hashed = F.transform(shingles, _hashes)
-
-    if m <= max_literal_bits:
-
-        def _hit(hs):
-            return bloom_flag_from_hashes(bits, k, hs["h1"], hs["h2"])
-
-        return stream.select(
-            id_col,
-            F.size(shingles).cast("long").alias("n_shingles"),
-            F.size(F.filter(hashed, _hit)).cast("long").alias("n_flagged"),
-        )
-
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    packed = np.packbits(
-        np.frombuffer(bits, dtype=np.uint8) == 0x31, bitorder="little"
-    )
-    bc = stream.sparkSession.sparkContext.broadcast(packed.tobytes())
-    id_type = stream.schema[id_col].dataType.simpleString()
-    # k positions per shingle, computed JVM-side from the materialised
-    # hash halves → array<array<long>> per doc; the kernel only gathers
-    poss = F.transform(
-        hashed,
-        lambda hs: F.array(
-            *[
-                bloom_pos_from_hashes(hs["h1"], hs["h2"], i, m)
-                for i in range(k)
-            ]
-        ),
-    )
-    mid = stream.select(id_col, poss.alias("_ps"))
-
-    def _probe(batches) -> Iterator:
-        pb = np.frombuffer(bc.value, dtype=np.uint8)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            outer = tbl["_ps"].chunk(0)
-            offs = np.asarray(outer.offsets)  # per-doc shingle counts
-            counts = np.diff(offs).astype(np.int64)
-            # inner lists are fixed k, never null → flat reshape
-            # (list_flatten respects offsets/slices, unlike .values)
-            flat = (
-                pc.list_flatten(pc.list_flatten(outer))
-                .to_numpy()
-                .astype(np.int64)
-            )
-            if flat.size:
-                ps = flat.reshape(-1, k)
-                hit = (
-                    (pb[ps >> 3] >> (ps & 7).astype(np.uint8)) & 1
-                ).all(axis=1)
-            else:
-                hit = np.zeros(0, dtype=bool)
-            cum = np.concatenate([[0], np.cumsum(hit.astype(np.int64))])
-            o = offs - offs[0]
-            flagged = cum[o[1:]] - cum[o[:-1]]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    tbl[id_col].chunk(0),
-                    pa.array(counts),
-                    pa.array(flagged.astype(np.int64)),
-                ],
-                names=[id_col, "n_shingles", "n_flagged"],
-            )
-
-    return mid.mapInArrow(
-        _probe, schema=f"{id_col} {id_type}, n_shingles long, n_flagged long"
-    )
+    return bloom_probe(stream, bits, k, text_col, id_col, n)
 
 
 def theta_profile_stream(
@@ -443,15 +335,15 @@ def simhash_near_dup_stream(
     :func:`near_dup_stream` (LSH gates shingle-set Jaccard; this gates
     bit-level fingerprint distance, Manku 2007's crawler setting).
 
-    The stream side computes its 64-bit fingerprint MAP-ONLY
-    (operators/simhash.py ``simhash_column`` — the one context where
-    its measured 19× CPU premium over the groupBy form is the price of
-    admission: a per-doc aggregation on a stream is unbounded state),
-    derives its band keys sign-safely, and stream-static joins the
-    static band index (``simhash_bands`` over the corpus fingerprints;
-    at 100 TB a parquet table keyed by (band, key)). Candidates are
-    verified with one xor+bit_count. Zero stream state; every
-    micro-batch is append-safe.
+    The stream side fingerprints through operators/simhash.py
+    ``simhash_fingerprints`` — the batch operator's map-only Arrow
+    kernel, so no per-doc aggregation and no state — and slices its
+    band keys with ``simhash_bands``, the same sign-safe layout as the
+    static band index over the corpus fingerprints (at 100 TB a
+    parquet table keyed by (band, key)). It then stream-static joins
+    that index; candidates are verified with one xor+bit_count.
+    NULL-text docs carry no fingerprint and never hit. Zero stream
+    state; every micro-batch is append-safe.
 
     Returns (stream id, corpus_doc_id, hamming, band) hits — a pair
     matching in several bands emits one row per matching band (a
@@ -459,33 +351,18 @@ def simhash_near_dup_stream(
     from marex_spark.operators.simhash import (
         _check_banding,
         simhash_bands,
-        simhash_column,
+        simhash_fingerprints,
     )
 
     _check_banding(bands, band_bits, max_hamming)
-    mask = (1 << band_bits) - 1
-    fp = simhash_column(text_col)
-    # NULL text folds to a NULL fingerprint in the map-only form; the
-    # batch groupBy form (and the oracle) drops such docs — match that.
-    sb = stream.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), fp.alias("_fp")
-    ).select(
+    sb = simhash_bands(
+        simhash_fingerprints(stream, text_col, id_col),
+        bands,
+        band_bits,
         id_col,
-        "_fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("_fp"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select(id_col, "_fp", F.col("_b.band").alias("band"), F.col("_b.key").alias("key"))
+    ).select(
+        F.col("doc_id").alias(id_col), F.col("fp").alias("_fp"), "band", "key"
+    )
     idx = simhash_bands(corpus_fps, bands, band_bits).select(
         F.col("doc_id").alias("corpus_doc_id"),
         F.col("fp").alias("_cfp"),

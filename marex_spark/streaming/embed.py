@@ -13,22 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def pq_encode_cols(vec_col: str, books: list[list[list[float]]]):
-    """One code Column per subspace for fitted PQ codebooks
-    (operators/embed.pq_fit) — slice + literal-centroid argmin, the
-    same expression the batch encoder uses."""
-    from marex_spark.operators.embed import kmeans_assign_cols
-
-    m = len(books)
-    sd = len(books[0][0])
-    cols = []
-    for j in range(m):
-        sl = F.slice(vec_col, j * sd + 1, sd)
-        code, _ = kmeans_assign_cols(sl, books[j])
-        cols.append(code.alias(f"pq_code{j}"))
-    return cols
-
-
 def pq_score_stream(
     stream: DataFrame,
     books: list[list[list[float]]],

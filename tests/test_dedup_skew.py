@@ -160,18 +160,28 @@ class TestBloomGeometry:
         assert n_fp / 2000 < 0.03, n_fp
 
 
-def test_decontam_bloom_all_tiers_agree(spark, monkeypatch):
-    """The default Arrow kernel (r10), the JVM literal tier and the
-    JVM packed-broadcast tier (literal budget → 0) must produce
-    exactly the same rows — the guarantee that every corpus path is a
-    plan change, not a semantics change."""
-    import marex_spark.operators.dedup as od
+def test_decontam_bloom_all_tiers_agree(spark):
+    """The Arrow probe kernel behind decontam_bloom and the JVM
+    literal-bitset reference (tests/reference/bloom.py) must produce
+    exactly the same rows on the same benchmark/training split — the
+    guarantee that the kernel is a plan change, not a semantics
+    change."""
     import marex_spark.queries.dedup as dq
+    from marex_spark.queries.registry import round6
+    from tests.reference.bloom import bloom_decontaminate_literal
 
     kern = {tuple(r) for r in dq.decontam_bloom(spark, SF).collect()}
-    monkeypatch.setenv("MAREX_BLOOM_KERNEL", "0")
-    lit = {tuple(r) for r in dq.decontam_bloom(spark, SF).collect()}
-    monkeypatch.setattr(od, "_BLOOM_MAX_LITERAL_BITS", 0)
-    fb = {tuple(r) for r in dq.decontam_bloom(spark, SF).collect()}
+    docs = load_table(spark, SF, "documents")
+    ref = bloom_decontaminate_literal(
+        docs.filter(F.col("source") != "src0"),
+        docs.filter(F.col("source") == "src0"),
+        n=5,
+    ).select(
+        "doc_id",
+        "n_shingles",
+        "n_flagged",
+        round6(F.col("contamination_bloom")).alias("contamination_bloom"),
+    )
+    lit = {tuple(r) for r in ref.collect()}
     assert kern == lit
-    assert lit == fb
+    assert any(r[2] > 0 for r in kern), "fixture must flag some docs"

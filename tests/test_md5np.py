@@ -146,3 +146,24 @@ def test_shingle_spans_random_fuzz_vs_reference():
         ref = [x.encode() for x in _ref_shingles(t, 5)]
         assert got[i] == ref, (i, t)
         assert sorted(kept[i]) == sorted(set(ref)), (i, t)
+
+
+def test_dedup_spans_short_duplicate_at_buffer_end():
+    """A short duplicate shingle ending the Arrow data buffer next to
+    long duplicate shingles in an earlier row: the byte verification
+    must read only each span's own bytes (it once gathered the longest
+    duplicate's width from every pair and indexed past the buffer)."""
+    texts = [" ".join(["alpha" * 20, "beta" * 20] * 6), "x y x y"]
+    arr = pa.array(texts)
+    data, offsets, valid = string_spans(arr)
+    row_idx, starts, lens = shingle_spans(data, offsets, valid, 2)
+    w = md5_words(data, starts, lens)
+    keep = dedup_spans(data, row_idx, starts, lens, w)
+    for i, t in enumerate(texts):
+        kept = {
+            data[s : s + ln].tobytes().decode()
+            for k, r, s, ln in zip(keep, row_idx, starts, lens)
+            if k and r == i
+        }
+        assert kept == set(_ref_shingles(t, 2))
+        assert int((keep & (row_idx == i)).sum()) == len(kept)

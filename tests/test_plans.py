@@ -388,14 +388,13 @@ def test_mesh_morphology_kernel_single_shuffle(spark):
 
 
 def test_decontam_bloom_corpus_side_is_map_only(spark):
-    """The corpus side is ONE Arrow kernel pass (r10): the bitset
-    rides as a broadcast variable, shingling/md5/probe/per-doc counts
-    all happen inside mapInArrow — no join, broadcast or otherwise,
+    """The corpus side is ONE Arrow kernel pass: the bitset rides as
+    a broadcast variable, shingling/md5/probe/per-doc counts all
+    happen inside mapInArrow — no join, broadcast or otherwise,
     between the training shingles and any benchmark-derived table,
     the benchmark/training split is a pushed-down source filter, and
-    the corpus pays ZERO exchanges (the old JVM literal tier paid one
-    for the per-doc groupBy; it remains the equality-pinned reference
-    behind use_kernel=False)."""
+    the corpus pays ZERO exchanges (the JVM literal-bitset reference
+    in tests/reference pays one for its per-doc groupBy)."""
     from marex_spark.plans import exchange_count, plan_string
     from marex_spark.queries.dedup import decontam_bloom
 
@@ -438,25 +437,22 @@ def test_semdedup_pairs_blocked_by_cluster_no_corpus_broadcast(spark):
     assert "cent_id" in plan
 
 
-def test_stream_bloom_gate_both_tiers_map_only(spark):
-    """The streaming Bloom gate must stay a pure map pass in BOTH
-    tiers (streaming/documents.py): the literal tier probes a binary
-    literal inside codegen; the packed tier above the literal budget
-    is one MapInArrow over JVM-computed positions with the bitset as
-    a broadcast VARIABLE — zero joins and zero exchanges either way,
-    so every micro-batch is stateless and append-safe."""
+def test_stream_bloom_gate_is_map_only(spark):
+    """The streaming Bloom gate must stay a pure map pass: one
+    MapInArrow (the batch operator's probe kernel) with the bitset as
+    a broadcast VARIABLE — zero joins and zero exchanges, so every
+    micro-batch is stateless and append-safe."""
     from marex_spark.plans import exchange_count, plan_string
     from marex_spark.streaming.documents import bloom_decontaminate_stream
 
     docs = spark.createDataFrame(
         [(1, "a b c d e f g h i j")], "doc_id long, text string"
     )
-    bits = bytes(b"0" * 128)
-    for max_bits in (1 << 20, 0):  # literal tier, then packed tier
-        out = bloom_decontaminate_stream(docs, bits, k=3, max_literal_bits=max_bits)
-        plan = plan_string(out)
-        assert plan.count("Join") == 0, plan[:1500]
-        assert exchange_count(out) == 0, (max_bits, exchange_count(out))
+    out = bloom_decontaminate_stream(docs, bytes(b"0" * 128), k=3)
+    plan = plan_string(out)
+    assert "MapInArrow" in plan, plan[:1500]
+    assert plan.count("Join") == 0, plan[:1500]
+    assert exchange_count(out) == 0, exchange_count(out)
 
 
 def test_domain_cap_group_limit_prunes_map_side(spark):

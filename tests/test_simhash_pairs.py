@@ -114,46 +114,15 @@ def test_negative_fingerprint_band_keys(spark):
     assert [got[f"k{b}"] for b in range(4)] == want
 
 
-def test_map_only_fingerprints_equal_groupby_form(spark):
-    """simhash_fingerprints_map_only (zero-exchange array-fold form)
-    must be bit-identical to the explode+groupBy form, including
-    negative fingerprints (bit 63) and empty/whitespace edge texts."""
-    from marex_spark.operators.simhash import (
-        simhash_fingerprints,
-        simhash_fingerprints_map_only,
-    )
-    from marex_spark.plans import exchange_count
-    from marex_spark.sources.parquet import load_table
-
-    docs = load_table(spark, SF, "documents").limit(200)
-    edge = spark.createDataFrame(
-        [(90001, ""), (90002, "x"), (90003, "a a a"), (90004, "  "),
-         (90005, None)],
-        "doc_id long, text string",
-    )
-    both = docs.select("doc_id", "text").unionByName(edge)
-    a = {r.doc_id: r.simhash for r in simhash_fingerprints(both).collect()}
-    b = {
-        r.doc_id: r.simhash
-        for r in simhash_fingerprints_map_only(both).collect()
-    }
-    assert a == b
-    assert 90005 not in a, "NULL-text doc must be dropped by both forms"
-    assert any(v < 0 for v in a.values()), "fixture should exercise bit 63"
-    # zero-exchange claim checked on a plain scan (the limit/union in
-    # the equality fixture adds its own exchange)
-    plain = load_table(spark, SF, "documents")
-    assert exchange_count(simhash_fingerprints_map_only(plain)) == 0
-
-
 def test_kernel_fingerprints_equal_groupby_form(spark):
-    """The Arrow fingerprint kernel (r10 default) must be
-    bit-identical to the explode+groupBy JVM form, including negative
-    fingerprints (bit 63), empty/whitespace edge texts and NULL-text
-    drops — and it must add ZERO exchanges."""
+    """The Arrow fingerprint kernel must be bit-identical to the
+    explode+groupBy reference (tests/reference/simhash.py), including
+    negative fingerprints (bit 63), empty/whitespace edge texts and
+    NULL-text drops — and it must add ZERO exchanges."""
     from marex_spark.operators.simhash import simhash_fingerprints
     from marex_spark.plans import exchange_count
     from marex_spark.sources.parquet import load_table
+    from tests.reference.simhash import simhash_fingerprints_groupby
 
     docs = load_table(spark, SF, "documents").limit(200)
     edge = spark.createDataFrame(
@@ -164,17 +133,14 @@ def test_kernel_fingerprints_equal_groupby_form(spark):
     both = docs.select("doc_id", "text").unionByName(edge)
     a = {
         r.doc_id: r.simhash
-        for r in simhash_fingerprints(both, use_kernel=False).collect()
+        for r in simhash_fingerprints_groupby(both).collect()
     }
-    b = {
-        r.doc_id: r.simhash
-        for r in simhash_fingerprints(both, use_kernel=True).collect()
-    }
+    b = {r.doc_id: r.simhash for r in simhash_fingerprints(both).collect()}
     assert a == b
     assert 90005 not in b, "NULL-text doc must be dropped by both forms"
     assert any(v < 0 for v in b.values()), "fixture should exercise bit 63"
     plain = load_table(spark, SF, "documents")
-    assert exchange_count(simhash_fingerprints(plain, use_kernel=True)) == 0
+    assert exchange_count(simhash_fingerprints(plain)) == 0
 
 
 def test_banding_completeness_property(spark):
@@ -229,48 +195,33 @@ def test_banding_completeness_property(spark):
     assert len(want) > 50, f"adversarial set too thin: {len(want)}"
 
 
-def test_lane_overflow_raises_not_corrupts(spark):
-    """A document with more words than a vote lane can count must fail
-    loudly inside the job (silent lane overflow would corrupt the
-    fingerprint). Exercised at lane_bits=8 (cap 255 words)."""
-    import pytest
-
+def test_kernel_equals_reference_on_long_docs(spark):
+    """The kernel counts votes in exact integers, so documents far
+    past any fixed-width vote lane (256 words = one past an 8-bit
+    lane; 40,000 words) must fingerprint exactly like the reference."""
     from marex_spark.operators.simhash import simhash_fingerprints
+    from tests.reference.simhash import simhash_fingerprints_groupby
 
-    ok = spark.createDataFrame(
-        [(1, " ".join(["w"] * 255))], "doc_id long, text string"
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(["w"] * 256)),
+            (2, " ".join(f"t{i % 97}" for i in range(40_000))),
+        ],
+        "doc_id long, text string",
     )
-    assert (
-        simhash_fingerprints(ok, lane_bits=8, use_kernel=False).count() == 1
+    got = sorted(map(tuple, simhash_fingerprints(docs).collect()))
+    assert got == sorted(
+        map(tuple, simhash_fingerprints_groupby(docs).collect())
     )
-    over = spark.createDataFrame(
-        [(2, " ".join(["w"] * 256))], "doc_id long, text string"
-    )
-    # with <= floor(63/lane_bits) lanes per aggregate the packed sum
-    # can never trip Spark's ANSI ARITHMETIC_OVERFLOW first, so the
-    # friendly post-agg guard (with the doc id) always gets to fire
-    with pytest.raises(Exception, match="lane overflow"):
-        simhash_fingerprints(over, lane_bits=8, use_kernel=False).collect()
-    # same doc is fine at the default 16-bit lanes
-    assert simhash_fingerprints(over, use_kernel=False).count() == 1
-    # the Arrow kernel (r10 default) has no lanes — exact int counts,
-    # so the same doc fingerprints correctly at any width and equals
-    # the wide-lane JVM form
-    assert (
-        simhash_fingerprints(over, use_kernel=True).collect()
-        == simhash_fingerprints(over, lane_bits=32, use_kernel=False).collect()
-    )
+    assert len(got) == 2
 
 
 def test_documented_word_envelope_no_ansi_overflow(spark):
-    """ADVICE r8 repro: with 64//lane_bits packing, a 40,000-repeated-
-    word document (well inside the documented 65,535-word cap for
-    16-bit lanes) aborted with a raw ANSI ARITHMETIC_OVERFLOW — the
-    top lane sat at bit 48 and the packed SUM crossed 2^63. The
-    63//lane_bits packing must take ANY document within the cap
-    cleanly, and the fingerprint must equal the term-frequency math
-    (all-same-word doc => fingerprint == the word's own bit pattern
-    under the sign rule, i.e. same as the 1-word doc)."""
+    """A 40,000-repeated-word document (once an ANSI overflow in a
+    lane-packed vote sum) must fingerprint cleanly, and the
+    fingerprint must equal the term-frequency math (all-same-word doc
+    => fingerprint == the word's own bit pattern under the sign rule,
+    i.e. same as the 1-word doc)."""
     from marex_spark.operators.simhash import simhash_fingerprints
 
     big = spark.createDataFrame(

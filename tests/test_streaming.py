@@ -500,16 +500,19 @@ def test_stream_ivfpq_residual_scoring_matches_batch(spark, tmp_path):
 
 
 def test_stream_bloom_decontaminate_matches_batch(doc_stream_env):
-    """The streaming Bloom gate is a pure map pass over an array-
-    literal bitset; its per-doc flag counts must equal a batch
-    evaluation of the SAME expression, and every exact-contaminated
-    doc (decontaminate_stream's join) must also be Bloom-flagged (no
-    false negatives — the defining Bloom property)."""
+    """The streaming Bloom gate runs the batch operator's Arrow probe
+    kernel per micro-batch. A real drain must equal a batch evaluation
+    of the same gate; every doc with shingles must carry the JVM
+    literal-bitset reference's counts; short docs emit (id, 0, 0); and
+    every exact-contaminated doc (decontaminate_stream's join) must
+    also be Bloom-flagged (no false negatives — the defining Bloom
+    property)."""
     from marex_spark.queries.dedup import _bloom_pos, bloom_geometry
     from marex_spark.streaming.documents import (
         bloom_decontaminate_stream,
         decontaminate_stream,
     )
+    from tests.reference.bloom import bloom_counts_literal
 
     spark, tmp, src, df = doc_stream_env
     bench_ws = df.filter(F.col("doc_id") == 0).select(
@@ -529,45 +532,31 @@ def test_stream_bloom_decontaminate_matches_batch(doc_stream_env):
     bits = [False] * m
     for r in pos:
         bits[int(r[0])] = True
+    as_bytes = bytes(bytearray(49 if v else 48 for v in bits))
 
-    stream = spark.readStream.schema(df.schema).parquet(src)
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
     out = _drain(
         bloom_decontaminate_stream(stream, bits, k=k), spark, tmp, "bloom_out"
     )
+    got = sorted(map(tuple, out.collect()))
     batch = bloom_decontaminate_stream(df, bits, k=k)
-    assert sorted(map(tuple, out.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
+    assert got == sorted(map(tuple, batch.collect()))
+    assert len(got) == df.count(), "one row per input doc"
     # bloom_fit's bytes bitset (b"0"/b"1" per bit) is accepted directly
     # and must flag identically to the boolean-list form
-    as_bytes = bytes(bytearray(49 if v else 48 for v in bits))
     batch_bytes = bloom_decontaminate_stream(df, as_bytes, k=k)
-    assert sorted(map(tuple, batch_bytes.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
+    assert sorted(map(tuple, batch_bytes.collect())) == got
+    ref = {tuple(r) for r in bloom_counts_literal(df, as_bytes, k).collect()}
+    assert {r for r in got if r[1] > 0} == ref
+    assert (90, 0, 0) in got, "a 1-word doc emits (id, 0, 0)"
     bloom_flagged = {r.doc_id for r in out.filter("n_flagged > 0").collect()}
     exact = decontaminate_stream(df, bench_ws)
     exact_flagged = {r.doc_id for r in exact.select("doc_id").distinct().collect()}
     assert exact_flagged <= bloom_flagged  # no false negatives
-
-    # above the literal budget the packed-broadcast mapInArrow tier
-    # must produce the identical per-doc counts — batch evaluation AND
-    # a real micro-batch drain (mapInArrow on a streaming DataFrame)
-    packed_batch = bloom_decontaminate_stream(
-        df, as_bytes, k=k, max_literal_bits=0
-    )
-    assert sorted(map(tuple, packed_batch.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-    packed_out = _drain(
-        bloom_decontaminate_stream(stream, as_bytes, k=k, max_literal_bits=0),
-        spark,
-        tmp,
-        "bloom_packed_out",
-    )
-    assert sorted(map(tuple, packed_out.collect())) == sorted(
-        map(tuple, out.collect())
-    )
 
 
 def test_stream_theta_profile_merges_to_batch_estimate(spark):
