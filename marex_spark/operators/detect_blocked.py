@@ -39,43 +39,27 @@ def _band_shuffle(df: DataFrame, key: str, parallelism: int) -> DataFrame:
     """The ONE exchange of the blocked detect path: place every row of a
     band ``key`` in a single task, balanced across the cluster.
 
-    Modes (env ``MAREX_BAND_SHUFFLE``, a scale knob — the default is
-    size-adaptive, never a constant tuned for one box):
+    Hash-partitions into ``f × parallelism`` partitions, with the
+    over-partitioning factor ``f = clamp(est_bytes / 512 MiB, 1, 8)``
+    derived from the optimizer's size estimate of the child. Rationale
+    (measured same-box r9, interleaved reps, min): murmur3 over a
+    handful of consecutive band ints is clumpy at ``parallelism``
+    partitions (40 bands → max 4/partition at 32; 240 → ~12), a
+    straggler that sets the stage makespan when per-band kernel cost is
+    large — on the 4.8 GB band_100x input 8× over-partitioning cut the
+    row from 23.7 s to 12.5 s by dropping max load to 1-2 bands and
+    letting the scheduler bin-pack the surplus tasks. But each surplus
+    task also costs an Arrow stream setup (~10-20 ms), a flat ~2 s at
+    256 partitions that DOMINATES small inputs (37 MB shifting-hobday
+    row: 3.2 s at 8× vs 1.2 s at 1×). Deriving f from input size picks
+    the right factor at both ends (guide §2: derive partition counts
+    from input size, not a constant). ``repartitionByRange`` is not an
+    option: its boundary sampling executes the child twice, 70 s on a
+    multi-GB packed scan.
 
-    - ``auto`` (default): hash into ``f × parallelism`` partitions with
-      the over-partitioning factor ``f = clamp(est_bytes / 512 MiB,
-      1, 8)`` derived from the optimizer's size estimate of the child.
-      Rationale, all three arms measured same-box r9 (interleaved
-      reps, min): murmur3 over a handful of consecutive band ints is
-      clumpy at ``parallelism`` partitions (40 bands → max 4/partition
-      at 32; 240 → ~12), a straggler that sets the stage makespan when
-      per-band kernel cost is large — on the 4.8 GB band_100x input
-      8× over-partitioning cut the row from 23.7 s (r8 floor) to 12.5 s
-      by dropping max load to 1-2 bands and letting the scheduler
-      bin-pack the surplus tasks. But each surplus task also costs an
-      Arrow stream setup (~10-20 ms), a flat ~2 s at 256 partitions
-      that DOMINATES small inputs (37 MB shifting-hobday row: 3.2 s at
-      8× vs 1.2 s at 1×, consistent across reps). Deriving f from input
-      size picks the right arm at both ends (guide §2: derive partition
-      counts from input size, not a constant).
-    - ``range``: exact contiguous balance, but ``repartitionByRange``
-      executes the child TWICE (boundary sampling) — on a multi-GB
-      packed scan the sampling pass alone measured 70 s. Right only
-      when the input is tiny or recomputation is trivially cheap.
-    - ``hash``/``hash4``/``hash8``: fixed factors 1/4/8, kept for A/B.
-
-    ``MAREX_BAND_SHUFFLE_FACTOR=<1..8>`` pins the auto mode's factor
-    directly (deployment knob; also skips the size-estimate read).
+    ``MAREX_BAND_SHUFFLE_FACTOR=<1..8>`` pins the factor directly
+    (deployment knob; also skips the size-estimate read).
     """
-    mode = os.environ.get("MAREX_BAND_SHUFFLE", "auto")
-    if mode == "range":
-        return df.repartitionByRange(parallelism, key)
-    if mode == "hash":
-        return df.repartition(parallelism, key)
-    if mode == "hash4":
-        return df.repartition(4 * parallelism, key)
-    if mode == "hash8":
-        return df.repartition(8 * parallelism, key)
     # explicit factor override first (documented scale knob): skips the
     # size-estimate read entirely, so deployments pinned by it are
     # immune to private-API drift AND skip its extra analysis pass

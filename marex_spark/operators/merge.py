@@ -4,17 +4,21 @@ the reference's ``split_and_merge_objects`` serial mode
 (track.py:5357-5419 / 4827-4884) and t-2→t-1 ID consolidation
 (track.py:2554-2656).
 
-Tier structure mirrors the reference: the per-timestep resolution loop
-is inherently sequential in time (timestep t's labels depend on t-1's
-post-partitioning labels), so — exactly like the reference, which
-``.compute()``s each time chunk onto the driver (track.py:3386) — the
-resolution kernel runs driver-side over the *sparse* labelled cells
-(only extreme cells, id > 0), vectorised with numpy per transition.
+The per-timestep resolution loop is inherently sequential in time
+(timestep t's labels depend on t-1's post-partitioning labels); its
+kernel runs over the *sparse* labelled cells (only extreme cells,
+id > 0), vectorised with numpy per transition, and only ever needs
+the previous block's last two slices plus the small props dicts.
 Everything before (labelling, morphology) and after (event-graph CC,
-remap, stats) stays distributed. For cluster scale the kernel is
-chunk-streamable: it only ever needs three timesteps of sparse cells
-plus the small props dict in memory; a batched/iterative variant
-(reference track.py:3804-4814) is the v2 scale path.
+remap, stats) stays distributed. Two engines run that one block
+kernel (:func:`_resolve_block`), mirroring the reference's two forms:
+
+- :func:`split_merge_events_chunked` — the serial chunk loop
+  (track.py:3377-3420): pages cell-budgeted chunks onto the driver;
+  also the resume path of incremental extension;
+- :func:`split_merge_events_parallel` — the batched iteration tier
+  (track.py:3804-4814): time blocks resolved concurrently on the
+  executors with a Jacobi carry fixpoint (the default).
 """
 
 from __future__ import annotations
@@ -26,6 +30,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from marex_spark.logging_config import get_logger
+
+_log = get_logger(__name__)
 
 
 # --------------------------------------------------------------- kernels
@@ -411,48 +419,22 @@ def _partition_nn_mesh_hops(
     return assign[child_cells]
 
 
-# round count of the most recent split_merge_events_parallel call —
-# introspection for tests/benchmarks (2-3 expected; n_blocks worst case)
-LAST_PARALLEL_ROUNDS = 0
-# section wall-times of the most recent parallel call (name → seconds),
-# populated unconditionally (a dict assignment per section is free) —
-# tools/profile_merge10.py reads it to attribute resolver cost
-LAST_PARALLEL_TIMINGS: dict = {}
-# POST-round stale-block counts of the most recent parallel call:
-# entry r is how many blocks round r+1 would re-resolve, so [9, 3, 0]
-# means rounds processed [all, 9, 3] blocks
-_PARALLEL_STALE_LOG: list = []
-
-# Driver-materialisation budget for the SERIAL tiers (one-shot collects
-# the whole series; chunked pages per chunk). ~40 bytes/sparse cell in
-# pandas → 50M cells ≈ 2 GB, a sane driver ceiling. The parallel tier
-# (split_merge_events_parallel, the default) never materialises more
-# than one block per executor task and has no such bound.
+# Driver-materialisation budget for one page of the CHUNKED engine
+# (~40 bytes/sparse cell in pandas → 50M cells ≈ 2 GB, a sane driver
+# ceiling). A page exceeds TARGET_BLOCK_CELLS only when a single
+# timestep does, so this guards against one giant step. The parallel
+# engine (the default) never materialises more than one block per
+# executor task and has no such bound.
 SERIAL_CELL_BUDGET = 50_000_000
 
 # Mesh CSRs above this ship as a Spark broadcast variable instead of a
 # task-closure capture (once per executor vs once per task serialize).
 _MESH_ADJ_BCAST_BYTES = 8 << 20
 
-# Auto-sized parallel blocks cap their sparse-cell count here — the
-# per-task materialisation bound (~40 bytes/cell in pandas → ~80 MB).
+# Sparse-cell budget of one resolver block: the chunked engine's page
+# size and the cap on auto-sized parallel blocks — the per-task (or
+# per-page) materialisation bound (~40 bytes/cell in pandas → ~80 MB).
 TARGET_BLOCK_CELLS = 2_000_000
-
-# Stale re-resolution rounds (Jacobi rounds ≥ 1) whose total cell count
-# fits this budget run their block kernels ON THE DRIVER (Gauss-Seidel
-# in time order). DEFAULT 0 = always distributed: once the partitioned
-# cell cache + broadcast-carry form made a distributed stale round cost
-# ~2 s at sf0.1 (tools/ab_merge_stale.py), the driver path measured
-# STRICTLY worse at every probed size — its kernels run serially
-# (~1 s/block × 9 stale blocks) and its resolved blocks pay an Arrow
-# re-upload at stitch time (16.8 s vs 9.7 s whole-resolver minima), and
-# at sf0.01 the resolver converges with no stale round at all, so there
-# is no small-scale constituency either. The old cost model ("~4-8 s
-# of fixed Spark overhead per round vs ~0.3 s/block of kernel")
-# described the pre-cache per-round shuffle, which no longer exists.
-# Kept as an A/B knob; equality of both paths stays pinned in
-# tests/test_merge.py::test_parallel_stale_driver_path_equals_distributed.
-PARALLEL_STALE_DRIVER_CELLS = 0
 
 
 def _guard_serial_cells(n_cells: int, budget: int | None, what: str) -> None:
@@ -461,11 +443,12 @@ def _guard_serial_cells(n_cells: int, budget: int | None, what: str) -> None:
         from marex_spark.exceptions import TrackingError
 
         raise TrackingError(
-            f"{what} would materialise {n_cells:,} sparse cells on the "
-            f"driver (budget {limit:,}) — use the distributed-parallel "
-            "resolver instead (track_events(..., merge_parallel=True) / "
-            "split_merge_events_parallel), or raise max_driver_cells "
-            "explicitly if this driver really has the memory",
+            f"{what} would page {n_cells:,} sparse cells onto the "
+            f"driver at once (budget {limit:,}) — use the distributed-"
+            "parallel resolver instead (track_events(..., "
+            "merge_parallel=True) / split_merge_events_parallel), or "
+            "raise max_driver_cells explicitly if this driver really "
+            "has the memory",
             details={"n_cells": int(n_cells), "budget": int(limit)},
         )
 
@@ -801,148 +784,7 @@ class _Resolver:
             )
 
 
-def split_merge_serial(
-    cells: pd.DataFrame,
-    nx: int = 0,
-    overlap_threshold: float = 0.5,
-    wrap_x: bool = True,
-    max_iter_per_step: int = 10,
-    time_col: str = "time",
-    geometry: str = "grid",
-    nn_partitioning: bool = False,
-    max_distance: float | None = None,
-    mesh_adj: MeshAdj | None = None,
-    ny: int = 0,
-) -> tuple[pd.DataFrame, MergeLedger]:
-    """Sequential merge/split resolution over sparse labelled cells.
-
-    geometry="grid": input (time_col, y, x, obj_id); pixel centroids
-    with periodic x, wrapped-Euclidean partitioning (structured mode,
-    track.py:4827-4884). geometry="sphere": input (time_col, cell,
-    lat, lon, obj_id); spherical centroids + haversine partitioning
-    (unstructured mode, track.py:5357-5419).
-
-    Obj ids are unique across time, monotonically increasing
-    (label_components output). Returns (relabelled cells, ledger).
-    Semantics follow the reference serial loop: per timestep,
-    consolidate t-1 against t-2 (M10), then partition multi-parent
-    children among parents by nearest parent centroid (M9 + ledger),
-    iterating within the timestep until no merging children remain.
-    """
-    resolver = _Resolver(
-        nx=nx,
-        wrap_x=wrap_x,
-        overlap_threshold=overlap_threshold,
-        max_iter_per_step=max_iter_per_step,
-        grid=geometry == "grid",
-        nn_partitioning=nn_partitioning,
-        max_distance=max_distance,
-        mesh_adj=mesh_adj,
-        ny=ny,
-    )
-    grid = resolver.grid
-    slices, times = resolver.build_slices(cells, time_col)
-    for ti in range(len(times)):
-        resolver.register_slice(slices[ti])
-    resolver.next_new_id = int(cells["obj_id"].max()) + 1 if len(cells) else 1
-
-    for ti in range(1, len(times)):
-        if ti >= 2:
-            resolver.consolidate(slices[ti - 2], slices[ti - 1])
-        resolver.transition(slices[ti - 1], slices[ti], times[ti])
-
-    # final consolidation of the last timestep (end-of-chunk rule,
-    # track.py:3602-3615)
-    if len(times) >= 2:
-        resolver.consolidate(slices[len(times) - 2], slices[len(times) - 1])
-    ledger = resolver.ledger
-
-    def _frame(ti: int) -> pd.DataFrame:
-        sl = slices[ti]
-        if grid:
-            return pd.DataFrame(
-                {time_col: times[ti], "y": sl["c1"], "x": sl["c2"], "obj_id": sl["id"]}
-            )
-        return pd.DataFrame(
-            {
-                time_col: times[ti],
-                "cell": sl["key"],
-                "lat": sl["c1"],
-                "lon": sl["c2"],
-                "obj_id": sl["id"],
-            }
-        )
-
-    out = (
-        pd.concat([_frame(ti) for ti in range(len(times))], ignore_index=True)
-        if len(times)
-        else cells.iloc[0:0]
-    )
-    return out, ledger
-
-
 # ------------------------------------------------------- Spark orchestration
-
-
-def split_merge_events(
-    labels: DataFrame,
-    nx: int,
-    overlap_threshold: float = 0.5,
-    wrap_x: bool = True,
-    time_col: str = "time",
-    nn_partitioning: bool = False,
-    max_distance: float | None = None,
-    max_iter_per_step: int = 10,
-    max_driver_cells: int | None = None,
-    ny: int = 0,
-) -> tuple[DataFrame, DataFrame]:
-    """Distributed-in / distributed-out wrapper around the sequential
-    resolution kernel: collect the sparse labelled cells (Arrow), run
-    the driver loop, return (relabelled labels, merge ledger) as
-    DataFrames. The ledger uses ArrayType columns instead of the
-    reference's -1-padded matrices (track.py:3776-3793 → SURVEY §1.3).
-
-    Fails fast (TrackingError) when the series holds more than
-    ``max_driver_cells`` (default :data:`SERIAL_CELL_BUDGET`) sparse
-    cells instead of OOMing the driver mid-collect — the parallel tier
-    is the scale path; this one-shot tier mirrors the reference's own
-    driver-sequential ``.compute()`` (track.py:3386)."""
-    spark = labels.sparkSession
-    labels = labels.localCheckpoint()  # counted, then collected: one compute
-    _guard_serial_cells(labels.count(), max_driver_cells, "split_merge_events")
-    pdf = labels.select(time_col, "y", "x", "obj_id").toPandas()
-    out, ledger = split_merge_serial(
-        pdf,
-        nx=nx,
-        overlap_threshold=overlap_threshold,
-        wrap_x=wrap_x,
-        time_col=time_col,
-        nn_partitioning=nn_partitioning,
-        max_distance=max_distance,
-        max_iter_per_step=max_iter_per_step,
-        ny=ny,
-    )
-    time_type = labels.schema[time_col].dataType.simpleString()
-    out_df = spark.createDataFrame(
-        out, schema=f"{time_col} {time_type}, y long, x long, obj_id long"
-    )
-    ledger_pdf = pd.DataFrame(
-        {
-            "merge_id": np.arange(1, len(ledger.times) + 1, dtype=np.int64),
-            time_col: ledger.times,
-            "parent_ids": [list(map(int, a)) for a in ledger.parent_ids],
-            "child_ids": [list(map(int, a)) for a in ledger.child_ids],
-            "overlap_areas": [list(map(int, a)) for a in ledger.areas],
-        }
-    )
-    ledger_df = spark.createDataFrame(
-        ledger_pdf,
-        schema=(
-            f"merge_id long, {time_col} {time_type}, parent_ids array<long>, "
-            "child_ids array<long>, overlap_areas array<long>"
-        ),
-    )
-    return out_df.localCheckpoint(), ledger_df
 
 
 def _resolve_block(resolver: "_Resolver", carry: list, slices: dict, stimes: list) -> None:
@@ -973,6 +815,8 @@ def _resolve_block(resolver: "_Resolver", carry: list, slices: dict, stimes: lis
 
 
 def _ledger_df(spark, ledger: MergeLedger, time_col: str, time_type: str) -> DataFrame:
+    """Merge ledger as a DataFrame: ArrayType columns instead of the
+    reference's -1-padded matrices (track.py:3776-3793 → SURVEY §1.3)."""
     pdf = pd.DataFrame(
         {
             "merge_id": np.arange(1, len(ledger.times) + 1, dtype=np.int64),
@@ -1037,7 +881,7 @@ def _write_chunk_parquet(
     Spark job — so no multi-MB task closures). Timestamps normalise to
     microseconds (Spark's parquet default; ns columns would need the
     legacy nanos flag) and integer columns widen to int64 so the read
-    schema matches the one-shot tier exactly."""
+    schema matches the input labels' exactly."""
     import os
 
     import pyarrow as pa
@@ -1058,8 +902,7 @@ def _write_chunk_parquet(
 
 def split_merge_events_chunked(
     labels: DataFrame,
-    nx: int,
-    chunk_steps: int = 64,
+    nx: int = 0,
     overlap_threshold: float = 0.5,
     wrap_x: bool = True,
     time_col: str = "time",
@@ -1073,18 +916,25 @@ def split_merge_events_chunked(
     cell_geo: DataFrame | None = None,
     max_driver_cells: int | None = None,
     page_dir: str | None = None,
-    target_chunk_cells: int | None = None,
     mesh_adj: MeshAdj | None = None,
     ny: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
-    """Memory-bounded variant of :func:`split_merge_events` — the
-    reference's chunk loop (track.py:3377-3420): pull ``chunk_steps``
-    timesteps of sparse cells at a time (time-range filter pushed down
-    to the materialised labels), resolve them against the carry (the
-    previous chunk's last two post-resolution slices + the props
-    dicts), emit the chunk, advance. Driver memory is O(chunk) instead
-    of O(series); output and ledger are identical to the one-shot
-    serial kernel (asserted in tests/test_merge.py).
+    """Driver-paged merge resolution — the reference's chunk loop
+    (track.py:3377-3420): pull one chunk of whole timesteps holding at
+    most :data:`TARGET_BLOCK_CELLS` sparse cells at a time, resolve it
+    against the carry (the previous chunk's last two post-resolution
+    slices + the props dicts), emit the chunk, advance. Driver memory
+    is O(chunk) instead of O(series), and chunk boundaries never change
+    the output: it equals resolving the whole series in one block
+    (asserted against tests/reference/merge.py in tests/test_merge.py).
+    Returns (relabelled labels, merge ledger) as DataFrames.
+
+    ``geometry="grid"`` takes (time, y, x, obj_id) labels: pixel
+    centroids, wrapped-Euclidean partitioning. ``geometry="sphere"``
+    takes (time, cell, obj_id) + ``cell_geo`` (cell, lat, lon):
+    spherical centroids, haversine partitioning; NN partitioning uses
+    the hop-BFS over ``mesh_adj`` when given (max_distance in HOPS),
+    else geodesic nearest-member (max_distance in degrees).
 
     Resumability: the complete sequencing state between chunks is
     (carry slices, id counter) — the same fact the parallel tier's
@@ -1105,9 +955,9 @@ def split_merge_events_chunked(
     spilled ONCE to parquet partitioned by chunk index, and each page
     fetch reads only its own chunk directory. Filtering the in-memory
     labels per chunk instead would scan every label partition per
-    chunk — at a daily century with 64-step chunks that is 560 chunks
-    × the full partition count in scheduled tasks, the dominant cost
-    of the loop. ``page_dir`` roots the spill (default: the local tmp
+    chunk — at production density that is hundreds of chunks × the
+    full partition count in scheduled tasks, the dominant cost of the
+    loop. ``page_dir`` roots the spill (default: the local tmp
     dir — pass a shared-FS scratch path on a real cluster, same
     contract as ``Tracker.temp_dir``); the directory is deleted before
     returning."""
@@ -1142,31 +992,31 @@ def split_merge_events_chunked(
         labels = labels.withColumn(
             time_col, F.unix_micros(F.col(time_col))
         )
-    # one aggregation yields BOTH the timestep list and per-time cell
-    # counts; the counts size-guard every chunk before anything is
-    # paged to the driver (fail fast, never OOM mid-series)
-    tcounts = labels.groupBy(time_col).count().orderBy(time_col).collect()
-    times = [r[0] for r in tcounts]
-    counts = [int(r[1]) for r in tcounts]
-    if target_chunk_cells:
-        # cell-budget chunking: the tier's true driver-memory bound is
-        # CELLS paged per chunk, not steps — a sparse series collapses
-        # into few pages (each paging job costs more than the resolve),
-        # a dense one still splits. Boundaries never change the output
-        # (chunked == one-shot for ANY chunking, tests/test_merge.py).
-        bounds = [0]
-        acc = 0
-        for i, c in enumerate(counts):
-            if acc and acc + c > target_chunk_cells:
-                bounds.append(i)
-                acc = 0
-            acc += c
-        bounds.append(len(counts))
-    else:
-        bounds = list(range(0, len(counts), chunk_steps)) + [len(counts)]
-        if len(bounds) >= 2 and bounds[-2] == bounds[-1]:
-            bounds.pop()
-    chunk_spans = list(zip(bounds[:-1], bounds[1:]))
+    # ONE pre-pass job yields the timestep list, the per-time cell
+    # counts and the max id together; the counts size-guard every chunk
+    # before anything is paged to the driver (fail fast, never OOM
+    # mid-series)
+    tstats = sorted(
+        labels.groupBy(time_col)
+        .agg(F.count(F.lit(1)).alias("_n"), F.max("obj_id").alias("_mx"))
+        .collect(),
+        key=lambda r: r[0],
+    )
+    times = [r[0] for r in tstats]
+    counts = [int(r["_n"]) for r in tstats]
+    # cell-budget chunking: the engine's true driver-memory bound is
+    # CELLS paged per chunk, not steps — a sparse series collapses into
+    # few pages (each paging job costs more than the resolve), a dense
+    # one still splits
+    bounds = [0]
+    acc = 0
+    for i, c in enumerate(counts):
+        if acc and acc + c > TARGET_BLOCK_CELLS:
+            bounds.append(i)
+            acc = 0
+        acc += c
+    bounds.append(len(counts))
+    chunk_spans = list(zip(bounds[:-1], bounds[1:])) if times else []
     for a, b in chunk_spans:
         _guard_serial_cells(
             sum(counts[a:b]),
@@ -1185,8 +1035,8 @@ def split_merge_events_chunked(
         ny=ny,
     )
     resolver.next_new_id = (
-        labels.agg(F.max("obj_id")).first()[0] or 0
-    ) + 1
+        max((r["_mx"] for r in tstats if r["_mx"] is not None), default=0) + 1
+    )
 
     out_frames: list[DataFrame] = []
     carry: list[tuple] = []  # [(time, slice)] — last two resolved slices
@@ -1222,8 +1072,8 @@ def split_merge_events_chunked(
     root = page_dir or tempfile.gettempdir()
     # resolved chunks leave the driver as parquet FILES (pyarrow,
     # driver-side write; one distributed read + localCheckpoint at the
-    # end) — never as createDataFrame task closures: a 64-step chunk is
-    # several MB, and closure-shipping it per task draws TaskSetManager
+    # end) — never as createDataFrame task closures: a full chunk is
+    # tens of MB, and closure-shipping it per task draws TaskSetManager
     # "very large task" warnings and real scheduler pressure at scale
     out_path = f"{root}/marex_chunk_out_{uuid.uuid4().hex}"
     if n_chunks >= 4:
@@ -1376,7 +1226,6 @@ def split_merge_events_parallel(
     nn_partitioning: bool = False,
     max_distance: float | None = None,
     max_iter_per_step: int = 10,
-    max_rounds: int | None = None,
     labels_materialized: bool = False,
     geometry: str = "grid",
     cell_geo: DataFrame | None = None,
@@ -1407,21 +1256,23 @@ def split_merge_events_parallel(
     blocks through Arrow; the re-resolved blocks' full frames come
     from one post-convergence final pass, re-run against the exact
     carries they were last resolved with (deterministic kernel ⇒
-    byte-identical frames). (A driver-side
-    Gauss–Seidel stale path exists behind
-    ``PARALLEL_STALE_DRIVER_CELLS``, default 0/off — it measured
-    strictly slower once distributed rounds stopped paying a
-    per-round shuffle; see the constant's comment.)
+    byte-identical frames).
     Block-local new ids live in disjoint namespaces
     (``global_max + 1 + block·2^33``) and are renumbered afterwards in
     (block, creation-order) order — exactly the serial counter's time
-    order — so output and ledger match ``split_merge_events`` exactly
-    (asserted in tests/test_merge.py::test_parallel_matches_oneshot).
+    order — so output and ledger equal resolving the whole series as
+    one block (asserted against tests/reference/merge.py in
+    tests/test_merge.py and tests/test_unstructured.py). A series that
+    fits one block goes to :func:`split_merge_events_chunked` instead.
 
     ``geometry="sphere"`` runs the unstructured-mesh form (input
     (time, cell, obj_id) + ``cell_geo`` (cell, lat, lon); haversine
-    partitioning) — same Jacobi structure, pinned equal to the serial
-    unstructured resolver in tests/test_unstructured.py.
+    partitioning; NN partitioning hop-BFS over ``mesh_edges`` (cell,
+    nbr) when given) — same Jacobi structure.
+
+    Each call logs one DEBUG record (logger ``marex_spark.operators.
+    merge``) with the block count, the round count and the stale-block
+    count after each round.
     """
     grid = geometry == "grid"
     spark = labels.sparkSession
@@ -1438,22 +1289,8 @@ def split_merge_events_parallel(
             F.broadcast(cell_geo.select("cell", "lat", "lon")), "cell"
         )
         labels_materialized = False  # the geo join is a new plan
-    import time as _time
-
-    LAST_PARALLEL_TIMINGS.clear()
-    _t0 = _time.time()
-
-    def _mark(section: str) -> None:
-        nonlocal _t0
-        now = _time.time()
-        LAST_PARALLEL_TIMINGS[section] = round(
-            LAST_PARALLEL_TIMINGS.get(section, 0.0) + now - _t0, 3
-        )
-        _t0 = now
-
     if not labels_materialized:
         labels = labels.localCheckpoint()
-    _mark("input_checkpoint")
     # ONE pre-pass job: per-time cell counts + running max id give the
     # distinct times, the total cell count, AND global_max together
     # (they used to be three separate jobs — distinct().collect(),
@@ -1469,7 +1306,6 @@ def split_merge_events_parallel(
     global_max = int(
         max((r["_mx"] for r in time_stats if r["_mx"] is not None), default=0)
     )
-    _mark("prepass_agg")
     time_type = labels.schema[time_col].dataType.simpleString()
     if block_steps is None and times:
         # AUTO block size, two binding constraints:
@@ -1490,49 +1326,6 @@ def split_merge_events_parallel(
     elif block_steps is None:
         block_steps = 64
     n_blocks = max(1, -(-len(times) // block_steps))
-    if n_blocks <= 1:
-        if grid:
-            return split_merge_events_chunked(
-                labels,
-                nx=nx,
-                chunk_steps=block_steps,
-                overlap_threshold=overlap_threshold,
-                wrap_x=wrap_x,
-                time_col=time_col,
-                nn_partitioning=nn_partitioning,
-                max_distance=max_distance,
-                max_iter_per_step=max_iter_per_step,
-                labels_materialized=True,
-                max_driver_cells=max_driver_cells,
-                ny=ny,
-            )
-        return split_merge_events_unstructured(
-            labels_raw,
-            cell_geo,
-            overlap_threshold=overlap_threshold,
-            time_col=time_col,
-            nn_partitioning=nn_partitioning,
-            max_distance=max_distance,
-            max_driver_cells=max_driver_cells,
-            mesh_edges=mesh_edges,
-        )
-
-    block_of = {t: i // block_steps for i, t in enumerate(times)}
-    # per-block cell counts (from the pre-pass per-time counts) — sizes
-    # the stale-round driver fast path
-    block_cells = [0] * n_blocks
-    for i, r in enumerate(time_stats):
-        block_cells[i // block_steps] += int(r["_n"])
-    carry_times = set()  # last two times of every non-final block
-    for b in range(n_blocks - 1):
-        carry_times.update(times[: (b + 1) * block_steps][-2:])
-    blocks_df = F.broadcast(
-        spark.createDataFrame(
-            [(t, b) for t, b in block_of.items()],
-            schema=f"{time_col} {time_type}, block long",
-        )
-    )
-    stride = 1 << 33  # global_max computed in the pre-pass above
     # hop-BFS NN adjacency: small meshes ride in the block-kernel
     # closure (the same ship-the-edge-list pattern as mesh
     # morphology); past _MESH_ADJ_BCAST_BYTES the CSR ships ONCE per
@@ -1543,6 +1336,37 @@ def split_merge_events_parallel(
         if (not grid and nn_partitioning and mesh_edges is not None)
         else None
     )
+    if n_blocks <= 1:
+        # one block has no carry to iterate on: the chunked engine
+        # resolves it with no Jacobi round
+        return split_merge_events_chunked(
+            labels if grid else labels_raw,
+            nx=nx,
+            overlap_threshold=overlap_threshold,
+            wrap_x=wrap_x,
+            time_col=time_col,
+            nn_partitioning=nn_partitioning,
+            max_distance=max_distance,
+            max_iter_per_step=max_iter_per_step,
+            labels_materialized=True,
+            geometry=geometry,
+            cell_geo=cell_geo,
+            max_driver_cells=max_driver_cells,
+            mesh_adj=mesh_adj,
+            ny=ny,
+        )
+
+    block_of = {t: i // block_steps for i, t in enumerate(times)}
+    carry_times = set()  # last two times of every non-final block
+    for b in range(n_blocks - 1):
+        carry_times.update(times[: (b + 1) * block_steps][-2:])
+    blocks_df = F.broadcast(
+        spark.createDataFrame(
+            [(t, b) for t, b in block_of.items()],
+            schema=f"{time_col} {time_type}, block long",
+        )
+    )
+    stride = 1 << 33  # global_max computed in the pre-pass above
     mesh_adj_bc = None
     if mesh_adj is not None and mesh_adj.nbytes() > _MESH_ADJ_BCAST_BYTES:
         mesh_adj_bc = spark.sparkContext.broadcast(mesh_adj)
@@ -1556,7 +1380,6 @@ def split_merge_events_parallel(
     cells_b = labels.select(time_col, *coord_cols, "obj_id").join(
         blocks_df, time_col
     )
-    _mark("cells_b_plan")
 
     out_schema = (
         f"block long, kind int, seq long, k long, {time_col} {time_type}, "
@@ -1731,7 +1554,7 @@ def split_merge_events_parallel(
     # clustering through a filter, so rounds >= 1 run with ZERO
     # exchanges and no repeated boundary-sampling scan — the A/B that
     # motivated this measured ~3-6.5 s of fixed cost per stale round
-    # in the shuffle-per-round form, tools/ab_merge_stale.py).
+    # in the shuffle-per-round form).
     from pyspark.storagelevel import StorageLevel
 
     n_part = max(n_blocks, spark.sparkContext.defaultParallelism)
@@ -1747,18 +1570,12 @@ def split_merge_events_parallel(
         )
     else:
         seed_pdf = pd.DataFrame(columns=seed_cols)
-    _mark("seed_collect")
     carry_in: dict[int, pd.DataFrame | None] = {0: None}
     for b in range(n_blocks - 1):
         g = seed_pdf[seed_pdf["block"] == b][[time_col, *coord_cols, "obj_id"]]
         carry_in[b + 1] = g if len(g) else None
     _UNRESOLVED = object()
     carry_used: dict[int, object] = {b: _UNRESOLVED for b in range(n_blocks)}
-    latest: dict[int, int] = {}
-    round_dfs: list[DataFrame] = []
-    rounds_cap = max_rounds or (n_blocks + 1)
-    global LAST_PARALLEL_ROUNDS
-    LAST_PARALLEL_ROUNDS = 0
 
     def _same_carry(a, b):
         if a is None or b is None:
@@ -1766,87 +1583,41 @@ def split_merge_events_parallel(
         return _carry_key(a) == _carry_key(b)
 
     stale = list(range(n_blocks))
-    _PARALLEL_STALE_LOG.clear()
-    driver_latest: dict[int, pd.DataFrame] = {}
-    # blocks re-resolved in a carries-only distributed round: their full
+    # POST-round stale counts: entry r is how many blocks round r+1
+    # re-resolves, so [3, 1, 0] means rounds processed [all, 3, 1]
+    stale_log: list[int] = []
+    # blocks re-resolved in a carries-only stale round: their full
     # frames are re-materialised ONCE by the post-convergence final pass
     ever_stale: set[int] = set()
     carry_bcs: list = []
-    for rnd in range(rounds_cap):
+    for rnd in range(n_blocks + 1):
         if not stale:
             break
-        LAST_PARALLEL_ROUNDS += 1
-        if (
-            rnd > 0
-            and sum(block_cells[b] for b in stale) <= PARALLEL_STALE_DRIVER_CELLS
-        ):
-            # stale-round driver fast path: one collect job, then the
-            # SAME block kernel runs locally per stale block — same
-            # inputs, same carries, byte-identical output frames.
-            # Gauss–Seidel in-order carry propagation can converge a
-            # round earlier, but the kernels run SERIALLY and the
-            # resolved blocks must be re-uploaded at stitch time, so
-            # this only pays for genuinely tiny stale sets (A/B:
-            # tools/ab_merge_stale.py — 9 stale blocks driver 16-20 s
-            # vs 6.9+6.4 s for two distributed rounds).
-            stale_pdf = (
-                inp0.filter(F.col("block").isin(stale))
-                .select(*seed_cols)
-                .toPandas()
-            )
-            for b in stale:
-                cells_pdf = stale_pdf[stale_pdf["block"] == b]
-                c = carry_in[b]
-                carry_used[b] = c
-                if len(cells_pdf) or (c is not None and len(c)):
-                    out_pdf = _block_kernel_core(b, cells_pdf, c)
-                    driver_latest[b] = out_pdf
-                    latest.pop(b, None)
-                    ever_stale.discard(b)
-                    g = out_pdf[
-                        (out_pdf["kind"] == 0)
-                        & out_pdf[time_col].isin(carry_times)
-                    ][[time_col, *coord_cols, "obj_id"]]
-                else:  # block with no cells AND no carry (groupBy would
-                    g = cells_pdf  # never have called the kernel either)
-                if b + 1 < n_blocks and carry_times:
-                    carry_in[b + 1] = g if len(g) else None
-            stale = [
-                b
-                for b in range(n_blocks)
-                if carry_used[b] is _UNRESOLVED
-                or not _same_carry(carry_in[b], carry_used[b])
-            ]
-            _PARALLEL_STALE_LOG.append(len(stale))
-            _mark(f"round{rnd}_driver")
-            continue
-        # distributed round: a bare filter of the cached partitioned
-        # cells (no exchange — RangePartitioning(block) survives the
-        # filter and satisfies the groupBy clustering, plan-checked in
-        # tests), carries ride a per-round broadcast.
+        # a bare filter of the cached partitioned cells (no exchange —
+        # RangePartitioning(block) survives the filter and satisfies
+        # the groupBy clustering, plan-checked in tests), carries ride
+        # a per-round broadcast
         inp = inp0 if rnd == 0 else inp0.filter(F.col("block").isin(stale))
         carry_bc = spark.sparkContext.broadcast(
             {b: carry_in[b] for b in stale if carry_in[b] is not None}
         )
         carry_bcs.append(carry_bc)
-        _mark(f"round{rnd}_bcast")
         if rnd == 0:
-            fresh = (
+            round0 = fresh = (
                 inp.groupBy("block")
                 .applyInPandas(_mk_round_kernel(carry_bc), schema=out_schema)
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            round_dfs.append(fresh)
         else:
-            # stale rounds (r10): only the carries are ever consumed
-            # between rounds, so the kernel emits JUST each block's last
-            # two post-resolution slices — the round's one job collects
+            # stale rounds: only the carries are ever consumed between
+            # rounds, so the kernel emits JUST each block's last two
+            # post-resolution slices — the round's one job collects
             # them directly, with no full-output Arrow pass and no
-            # persist (the A/B that motivated this measured the full
-            # re-materialisation at ~1.5-2 s of each 2.5 s stale round
-            # at sf0.1; the re-resolved blocks' full frames come from
-            # the post-convergence final pass below, byte-identical
-            # because the kernel is deterministic in (cells, carry)).
+            # persist (the full re-materialisation measured ~1.5-2 s of
+            # each 2.5 s stale round at sf0.1; the re-resolved blocks'
+            # full frames come from the post-convergence final pass
+            # below, byte-identical because the kernel is deterministic
+            # in (cells, carry)).
             ever_stale.update(stale)
             fresh = inp.groupBy("block").applyInPandas(
                 _mk_round_kernel(carry_bc, carries_only=True),
@@ -1854,16 +1625,10 @@ def split_merge_events_parallel(
             )
         for b in stale:
             carry_used[b] = carry_in[b]
-            if rnd == 0:
-                latest[b] = 0
-            else:
-                latest.pop(b, None)
-            driver_latest.pop(b, None)
         if carry_times:
             co = fresh.filter(
                 (F.col("kind") == 0) & F.col(time_col).isin(list(carry_times))
             ).toPandas()
-            _mark(f"round{rnd}_job")
             for b in stale:
                 if b + 1 < n_blocks:
                     g = co[co["block"] == b][[time_col, *coord_cols, "obj_id"]]
@@ -1874,27 +1639,36 @@ def split_merge_events_parallel(
             if carry_used[b] is _UNRESOLVED
             or not _same_carry(carry_in[b], carry_used[b])
         ]
-        _PARALLEL_STALE_LOG.append(len(stale))
-        _mark(f"round{rnd}")
+        stale_log.append(len(stale))
+    _log.debug(
+        "split_merge_events_parallel: %d blocks, %d rounds, stale after "
+        "each round %s",
+        n_blocks,
+        len(stale_log),
+        stale_log,
+        extra={
+            "merge_blocks": n_blocks,
+            "merge_rounds": len(stale_log),
+            "merge_stale": list(stale_log),
+        },
+    )
     if stale:
-        # only reachable with a caller-supplied max_rounds below the
-        # guaranteed-convergence bound (#blocks + 1) — returning
-        # silently would violate the byte-identical-to-serial contract
+        # invariant: block b is exact after <= b+1 rounds, so #blocks+1
+        # rounds always converge — returning here would silently break
+        # the equal-to-one-block-resolution contract
         from marex_spark.exceptions import ProcessingError
 
         raise ProcessingError(
-            "parallel merge resolution did not converge within max_rounds",
-            details={"rounds": LAST_PARALLEL_ROUNDS, "n_blocks": n_blocks},
-            suggestions=["raise max_rounds (defaults to #blocks + 1, which always converges)"],
+            "parallel merge resolution did not converge",
+            details={"rounds": len(stale_log), "n_blocks": n_blocks},
         )
 
-    # post-convergence final pass: blocks whose full frames were never
-    # materialised (re-resolved in a carries-only stale round, not since
-    # driver-resolved) are re-resolved ONCE against the exact carry each
-    # was last resolved with (carry_used — the kernel is deterministic
-    # in (cells, carry), so the frames equal the ones the old per-round
-    # materialisation kept)
+    # post-convergence final pass: blocks re-resolved in a carries-only
+    # stale round are re-resolved ONCE against the exact carry each was
+    # last resolved with (carry_used) and replace their round-0 frames
     final_blocks = sorted(ever_stale)
+    out = round0
+    cached = [round0]
     if final_blocks:
         final_bc = spark.sparkContext.broadcast(
             {
@@ -1910,34 +1684,11 @@ def split_merge_events_parallel(
             .applyInPandas(_mk_round_kernel(final_bc), schema=out_schema)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        round_dfs.append(ffresh)
-        for b in final_blocks:
-            latest[b] = len(round_dfs) - 1
-        _mark("final_pass_plan")
+        cached.append(ffresh)
+        out = out.filter(~F.col("block").isin(final_blocks)).unionByName(ffresh)
 
-    # stitch the final output: every block's LATEST resolution —
-    # distributed rounds from their persisted frames, driver-resolved
-    # blocks re-shipped as ONE Arrow createDataFrame
-    from functools import reduce
-
-    parts = []
-    for rnd, df in enumerate(round_dfs):
-        blocks_r = [b for b, lr in latest.items() if lr == rnd]
-        if blocks_r:
-            parts.append(df.filter(F.col("block").isin(blocks_r)))
-    if driver_latest:
-        parts.append(
-            spark.createDataFrame(
-                pd.concat(driver_latest.values(), ignore_index=True),
-                schema=out_schema,
-            )
-        )
-    out = reduce(DataFrame.unionByName, parts)
-
-    _mark("stitch_union")
     # ---- renumber block-local new ids into the serial time-order counter
     led_pdf = out.filter(F.col("kind") == 2).toPandas()
-    _mark("ledger_collect")
     led_pdf = led_pdf.sort_values(["block", "seq", "k"]).reset_index(drop=True)
     child_arr = led_pdf["obj_id"].to_numpy(np.int64)
     # block offsets are ascending with block, local ids ascending with
@@ -1999,56 +1750,10 @@ def split_merge_events_parallel(
     # DetectResult.unpersist addresses in detect.py). The eager
     # checkpoint cuts lineage, so dropping the references lets the
     # ContextCleaner reclaim cells_b too.
-    _mark("renumber_plan")
     cells_out = cells_out.localCheckpoint()
-    _mark("final_checkpoint")
-    for df in round_dfs:
+    for df in cached:
         df.unpersist()
     inp0.unpersist()
     for bc in carry_bcs:
         bc.unpersist()
     return cells_out, _ledger_df(spark, ledger, time_col, time_type)
-
-
-def split_merge_events_unstructured(
-    labels: DataFrame,
-    cell_geo: DataFrame,
-    overlap_threshold: float = 0.5,
-    time_col: str = "time",
-    nn_partitioning: bool = False,
-    max_distance: float | None = None,
-    max_driver_cells: int | None = None,
-    mesh_edges: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Unstructured-mesh form of :func:`split_merge_events`
-    (track.py:3804+ semantics, serial tier): spherical centroids;
-    NN partitioning uses the reference's hop-BFS over ``mesh_edges``
-    (cell, nbr) when given (max_distance in HOPS), else geodesic
-    nearest-member (max_distance in degrees). ``cell_geo``: (cell, lat,
-    lon). Fails fast past ``max_driver_cells`` (default
-    :data:`SERIAL_CELL_BUDGET`) instead of OOMing the driver."""
-    spark = labels.sparkSession
-    joined = labels.select(time_col, "cell", "obj_id").join(
-        F.broadcast(cell_geo.select("cell", "lat", "lon")), "cell"
-    ).localCheckpoint()
-    _guard_serial_cells(
-        joined.count(), max_driver_cells, "split_merge_events_unstructured"
-    )
-    pdf = joined.toPandas()
-    out, ledger = split_merge_serial(
-        pdf,
-        overlap_threshold=overlap_threshold,
-        time_col=time_col,
-        geometry="sphere",
-        nn_partitioning=nn_partitioning,
-        max_distance=max_distance,
-        mesh_adj=_collect_mesh_adj(mesh_edges, cell_geo)
-        if (nn_partitioning and mesh_edges is not None)
-        else None,
-    )
-    time_type = labels.schema[time_col].dataType.simpleString()
-    out_df = spark.createDataFrame(
-        out[[time_col, "cell", "obj_id"]],
-        schema=f"{time_col} {time_type}, cell long, obj_id long",
-    )
-    return out_df, _ledger_df(spark, ledger, time_col, time_type)

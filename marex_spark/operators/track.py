@@ -192,7 +192,6 @@ def track_events(
     allow_merging: bool = False,
     nn_partitioning: bool = False,
     max_distance: float | None = None,
-    merge_chunk_steps: int | None = 64,
     merge_parallel: bool = True,
     merge_block_steps: int | None = None,
     compact_ids: bool = False,
@@ -230,16 +229,14 @@ def track_events(
     ledger (``extras["merge_ledger"]``), and partition-boundary
     fragments are re-consolidated (M10) before event linking.
 
-    The wall-clock-parallel time-block resolver is the DEFAULT
-    (``merge_parallel=True``: time blocks resolved concurrently with a
-    Jacobi carry fixpoint — byte-identical output for ANY block size
-    per tests/test_merge.py::test_parallel_matches_oneshot).
-    ``merge_block_steps`` sets the block size; ``None`` (default)
-    auto-sizes it from parallelism and a per-block cell budget (see
-    split_merge_events_parallel). Fallbacks: ``merge_parallel=False``
-    for the serial chunked resolver (driver memory O(chunk), paged by
-    ``merge_chunk_steps`` / its cell budget), plus
-    ``merge_chunk_steps=None`` there for the one-shot collect.
+    Two resolver engines produce the same labels and ledger:
+    ``merge_parallel=True`` (default) resolves time blocks concurrently
+    on the executors with a Jacobi carry fixpoint
+    (split_merge_events_parallel; ``merge_block_steps`` sets the block
+    size, ``None`` auto-sizes it from parallelism and a per-block cell
+    budget); ``merge_parallel=False`` runs the driver-paged chunk loop
+    (split_merge_events_chunked; driver memory O(one cell-budgeted
+    page), ``max_driver_cells`` caps a page).
     """
     if labels is None:
         labels = label_components(
@@ -266,7 +263,6 @@ def track_events(
     }
     if allow_merging:
         from marex_spark.operators.merge import (
-            split_merge_events,
             split_merge_events_chunked,
             split_merge_events_parallel,
         )
@@ -285,13 +281,11 @@ def track_events(
                 labels_materialized=True,
                 max_driver_cells=max_driver_cells,
             )
-        elif merge_chunk_steps:
+        else:
             labels, ledger = split_merge_events_chunked(
                 labels,
                 nx=nx,
                 ny=ny,
-                chunk_steps=merge_chunk_steps,
-                target_chunk_cells=2_000_000,
                 overlap_threshold=overlap_threshold,
                 wrap_x=wrap_x,
                 time_col=time_col,
@@ -300,21 +294,9 @@ def track_events(
                 labels_materialized=True,  # label_components checkpoints
                 max_driver_cells=max_driver_cells,
             )
-        else:
-            labels, ledger = split_merge_events(
-                labels,
-                nx=nx,
-                ny=ny,
-                overlap_threshold=overlap_threshold,
-                wrap_x=wrap_x,
-                time_col=time_col,
-                nn_partitioning=nn_partitioning,
-                max_distance=max_distance,
-                max_driver_cells=max_driver_cells,
-            )
-        # every resolver tier returns MATERIALIZED labels (the parallel
-        # tier's cells_out localCheckpoint, the chunked/one-shot tiers'
-        # own checkpoints) — re-checkpointing here paid a second full
+        # both engines return MATERIALIZED labels (the parallel
+        # engine's cells_out localCheckpoint, the chunked engine's
+        # parquet spill) — re-checkpointing here paid a second full
         # materialization of the cell set per tracking run
         extras["merge_ledger"] = ledger
 
@@ -453,8 +435,9 @@ def track_events_unstructured(
                 suggestions=["pass cell_geo=grid dimension table"],
             )
         from marex_spark.operators.merge import (
+            _collect_mesh_adj,
+            split_merge_events_chunked,
             split_merge_events_parallel,
-            split_merge_events_unstructured,
         )
 
         if merge_parallel:
@@ -473,19 +456,24 @@ def track_events_unstructured(
                 mesh_edges=edges if nn_partitioning else None,
             )
         else:
-            labels, ledger = split_merge_events_unstructured(
+            labels, ledger = split_merge_events_chunked(
                 labels,
-                cell_geo,
                 overlap_threshold=overlap_threshold,
                 time_col=time_col,
                 nn_partitioning=nn_partitioning,
                 max_distance=max_distance,
+                geometry="sphere",
+                cell_geo=cell_geo,
                 max_driver_cells=max_driver_cells,
-                mesh_edges=edges if nn_partitioning else None,
+                mesh_adj=(
+                    _collect_mesh_adj(edges, cell_geo)
+                    if nn_partitioning
+                    else None
+                ),
             )
-        # every resolver tier returns MATERIALIZED labels (the parallel
-        # tier's cells_out localCheckpoint, the chunked/one-shot tiers'
-        # own checkpoints) — re-checkpointing here paid a second full
+        # both engines return MATERIALIZED labels (the parallel
+        # engine's cells_out localCheckpoint, the chunked engine's
+        # parquet spill) — re-checkpointing here paid a second full
         # materialization of the cell set per tracking run
         extras["merge_ledger"] = ledger
 
@@ -530,7 +518,6 @@ def extend_track_events(
     allow_merging: bool = False,
     nn_partitioning: bool = False,
     max_distance: float | None = None,
-    merge_chunk_steps: int = 64,
     prior_merge_ledger: DataFrame | None = None,
     prior_head: tuple | None = None,
 ) -> TrackResult:
@@ -574,9 +561,10 @@ def extend_track_events(
     keeps it (pass ``area_filter_absolute`` workflows for exactness).
 
     ``allow_merging=True`` extends a split/merge run: the chunked
-    resolver resumes from (carry = the prior run's last two resolved
-    slices, rebuilt from ``prior_events``; id counter past the prior
-    max), which is the complete between-chunk sequencing state. The
+    resolver (split_merge_events_chunked, paged by its cell budget)
+    resumes from (carry = the prior run's last two resolved slices,
+    rebuilt from ``prior_events``; id counter past the prior max),
+    which is the complete between-chunk sequencing state. The
     resulting partition STRUCTURE and ledger match a from-scratch run,
     but id VALUES are a consistent relabelling rather than numerically
     identical — a full recompute reseeds its id counter from the
@@ -609,7 +597,7 @@ def extend_track_events(
         labels_new, extras["merge_ledger"] = _extend_resume_merge(
             prior_events, labels_new, prior_max_id, time_col,
             overlap_threshold, nn_partitioning, max_distance,
-            merge_chunk_steps, prior_merge_ledger,
+            prior_merge_ledger,
             nx=nx, ny=ny, wrap_x=wrap_x, cell_geo=None,
         )
 
@@ -684,7 +672,6 @@ def _extend_resume_merge(
     overlap_threshold: float,
     nn_partitioning: bool,
     max_distance: float | None,
-    merge_chunk_steps: int,
     prior_merge_ledger: DataFrame | None,
     nx: int = 0,
     ny: int = 0,
@@ -754,8 +741,6 @@ def _extend_resume_merge(
         labels_new,
         nx=nx,
         ny=ny,
-        chunk_steps=merge_chunk_steps,
-        target_chunk_cells=2_000_000,
         overlap_threshold=overlap_threshold,
         wrap_x=wrap_x if grid else False,
         time_col=time_col,
@@ -903,7 +888,6 @@ def extend_track_events_unstructured(
     allow_merging: bool = False,
     nn_partitioning: bool = False,
     max_distance: float | None = None,
-    merge_chunk_steps: int = 64,
     prior_merge_ledger: DataFrame | None = None,
 ) -> TrackResult:
     """Incremental append tracking on an unstructured mesh — the
@@ -913,7 +897,8 @@ def extend_track_events_unstructured(
     recompute).
 
     ``allow_merging=True`` resumes the sphere-geometry chunked resolver
-    from the prior run's last two resolved slices (joined with
+    (split_merge_events_chunked, paged by its cell budget) from the
+    prior run's last two resolved slices (joined with
     ``cell_geo``, which is required) — same structural-parity contract
     as the gridded merge extension (id values are a consistent
     relabelling, partition structure and ledger match a from-scratch
@@ -946,7 +931,7 @@ def extend_track_events_unstructured(
         labels_new, extras["merge_ledger"] = _extend_resume_merge(
             prior_events, labels_new, prior_max_id, time_col,
             overlap_threshold, nn_partitioning, max_distance,
-            merge_chunk_steps, prior_merge_ledger,
+            prior_merge_ledger,
             cell_geo=cell_geo,
             mesh_edges=edges if nn_partitioning else None,
         )

@@ -1,7 +1,9 @@
-"""Equality references for the production Arrow kernels.
+"""Equality references for production code paths.
 
-Each module here is an independent JVM-expression implementation of a
-sketch whose production path is a ``mapInArrow`` kernel. Tests compare
-the kernel against it on the same input; nothing in ``marex_spark``
-imports from here.
+``bloom`` and ``simhash`` are independent JVM-expression
+implementations of sketches whose production path is a ``mapInArrow``
+kernel. ``merge`` resolves a whole series as one block, the sequencing
+the chunked and parallel split/merge engines must reproduce. Tests
+compare production against them on the same input; nothing in
+``marex_spark`` imports from here.
 """

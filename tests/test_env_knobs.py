@@ -10,7 +10,6 @@ from pathlib import Path
 PACKAGE = Path(__file__).resolve().parent.parent / "marex_spark"
 
 PINNED = {
-    "MAREX_BAND_SHUFFLE",
     "MAREX_BAND_SHUFFLE_FACTOR",
     "MAREX_THR_CHUNK_MAX",
     "MAREX_MORPH_BATCH_BOOLS",

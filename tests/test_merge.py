@@ -110,18 +110,16 @@ def test_pieces_follow_parents_before_collision(spark, two_blob_field):
 
 @pytest.mark.parametrize("block_steps", [3, 4])
 def test_parallel_matches_oneshot(spark, two_blob_field, block_steps):
-    """The Jacobi time-block tier must converge to exactly the serial
-    resolver's labels and ledger, including new-id numbering (the
-    collision at t=8 straddles or lands inside a block depending on
-    block_steps, exercising both carry paths)."""
+    """The Jacobi time-block engine must converge to exactly the
+    whole-series (one-shot) resolution's labels and ledger, including
+    new-id numbering (the collision at t=8 straddles or lands inside a
+    block depending on block_steps, exercising both carry paths)."""
     from marex_spark.operators.label import label_components
-    from marex_spark.operators.merge import (
-        split_merge_events,
-        split_merge_events_parallel,
-    )
+    from marex_spark.operators.merge import split_merge_events_parallel
+    from tests.reference.merge import split_merge_reference
 
     labels = label_components(two_blob_field, nx=NX)
-    one, ledger_one = split_merge_events(labels, nx=NX, overlap_threshold=0.5)
+    one, ledger_one = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
     par, ledger_par = split_merge_events_parallel(
         labels, nx=NX, block_steps=block_steps, overlap_threshold=0.5
     )
@@ -140,28 +138,28 @@ def test_parallel_matches_oneshot(spark, two_blob_field, block_steps):
 
 
 @pytest.mark.parametrize("seed,density", [(3, 0.05), (11, 0.12), (29, 0.2)])
-def test_three_tiers_agree_on_random_fields(spark, seed, density):
-    """Serial, chunked and parallel resolvers must agree exactly on
+def test_three_tiers_agree_on_random_fields(spark, monkeypatch, seed, density):
+    """The whole-series reference, the chunked engine (paged into
+    several chunks) and the parallel engine must agree exactly on
     unstructured random fields too — clumpy noise produces empty
     timesteps, singletons, simultaneous merges and splits that the
     analytic two-blob fixture never exercises."""
+    import marex_spark.operators.merge as M
     from marex_spark.operators.label import label_components
-    from marex_spark.operators.merge import (
-        split_merge_events,
-        split_merge_events_chunked,
-        split_merge_events_parallel,
-    )
     from marex_spark.sources.synthetic import synthetic_extremes_gridded
+    from tests.reference.merge import split_merge_reference
 
     field = synthetic_extremes_gridded(
         spark, n_time=12, ny=16, nx=24, density=density, seed=seed
     )
     labels = label_components(field, nx=24)
-    one, l1 = split_merge_events(labels, nx=24, overlap_threshold=0.5)
-    chk, l2 = split_merge_events_chunked(
-        labels, nx=24, chunk_steps=5, overlap_threshold=0.5
+    one, l1 = split_merge_reference(labels, nx=24, overlap_threshold=0.5)
+    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 100)
+    chk, l2 = M.split_merge_events_chunked(
+        labels, nx=24, overlap_threshold=0.5
     )
-    par, l3 = split_merge_events_parallel(
+    assert len(chk.inputFiles()) >= 2  # really paged
+    par, l3 = M.split_merge_events_parallel(
         labels, nx=24, block_steps=5, overlap_threshold=0.5
     )
     a = sorted(map(tuple, one.collect()))
@@ -174,20 +172,21 @@ def test_three_tiers_agree_on_random_fields(spark, seed, density):
     assert led(l1) == led(l2) == led(l3)
 
 
-def test_chunked_matches_oneshot(spark, two_blob_field):
-    """The memory-bounded chunk loop must reproduce the one-shot serial
-    kernel exactly — labels, event count, and ledger."""
+def test_chunked_matches_oneshot(spark, two_blob_field, monkeypatch):
+    """The memory-bounded chunk loop must reproduce the whole-series
+    (one-shot) resolution exactly — labels, event count, and ledger —
+    with a cell budget of two timesteps per page."""
+    import marex_spark.operators.merge as M
     from marex_spark.operators.label import label_components
-    from marex_spark.operators.merge import (
-        split_merge_events,
-        split_merge_events_chunked,
-    )
+    from tests.reference.merge import split_merge_reference
 
     labels = label_components(two_blob_field, nx=NX)
-    one, ledger_one = split_merge_events(labels, nx=NX, overlap_threshold=0.5)
-    chk, ledger_chk = split_merge_events_chunked(
-        labels, nx=NX, chunk_steps=3, overlap_threshold=0.5
+    one, ledger_one = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
+    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 500)  # 242 cells/step
+    chk, ledger_chk = M.split_merge_events_chunked(
+        labels, nx=NX, overlap_threshold=0.5
     )
+    assert len(chk.inputFiles()) >= 4
     a = {(r.time, r.y, r.x, r.obj_id) for r in one.collect()}
     b = {(r.time, r.y, r.x, r.obj_id) for r in chk.collect()}
     assert a == b
@@ -244,9 +243,9 @@ class TestMaxDistance:
         ],
     )
     def test_grid_cap(self, max_distance, expect_nn):
-        from marex_spark.operators.merge import split_merge_serial
+        from tests.reference.merge import resolve_series
 
-        out, _ = split_merge_serial(
+        out, _ = resolve_series(
             self._fixture(), nx=100, overlap_threshold=0.5, wrap_x=False,
             time_col="t", nn_partitioning=True, max_distance=max_distance,
         )
@@ -311,8 +310,8 @@ def test_merge_fixture_centroid_paths_and_identity(spark, two_blob_field):
 
 
 class TestSerialBudgetGuard:
-    """The serial tiers fail fast (typed error naming the parallel
-    tier) instead of OOMing the driver mid-collect."""
+    """The chunked engine fails fast (typed error naming the parallel
+    engine) instead of OOMing the driver mid-collect."""
 
     def _labels(self, spark):
         from marex_spark.operators.label import label_components
@@ -321,52 +320,62 @@ class TestSerialBudgetGuard:
         ext = synthetic_extremes_gridded(spark, n_time=4, ny=8, nx=16, seed=3)
         return label_components(ext, nx=16)
 
-    def test_oneshot_over_budget_fails_fast(self, spark):
-        from marex_spark.exceptions import TrackingError
-        from marex_spark.operators.merge import split_merge_events
-
-        labels = self._labels(spark)
-        with pytest.raises(TrackingError, match="merge_parallel"):
-            split_merge_events(labels, nx=16, max_driver_cells=10)
-        # within budget: runs
-        out, _ = split_merge_events(labels, nx=16, max_driver_cells=10**9)
-        assert out.count() == labels.count()
-
     def test_chunked_over_budget_fails_fast(self, spark):
         from marex_spark.exceptions import TrackingError
         from marex_spark.operators.merge import split_merge_events_chunked
 
         labels = self._labels(spark)
         with pytest.raises(TrackingError, match="merge_parallel"):
-            split_merge_events_chunked(
-                labels, nx=16, chunk_steps=2, max_driver_cells=10
-            )
+            split_merge_events_chunked(labels, nx=16, max_driver_cells=10)
+        # within budget: runs
+        out, _ = split_merge_events_chunked(
+            labels, nx=16, max_driver_cells=10**9
+        )
+        assert out.count() == labels.count()
 
 
-def test_parallel_rounds_are_stale_only(spark):
+def test_parallel_rounds_are_stale_only(spark, two_blob_field):
     """The seeded Jacobi loop must NOT re-resolve every block every
     round: after round 1 (all blocks, seeded carries), later rounds
-    touch only blocks whose carry-in changed — pinned via the stale
-    log so the scale property can't silently regress."""
-    import marex_spark.operators.merge as M
-    from marex_spark.operators.label import label_components
-    from marex_spark.sources.synthetic import synthetic_extremes_gridded
+    touch only blocks whose carry-in changed — pinned via the per-call
+    DEBUG record so the scale property can't silently regress. The
+    fixture must really run a stale round, or this pins nothing."""
+    import logging
 
-    ext = synthetic_extremes_gridded(spark, n_time=40, ny=16, nx=32, seed=13)
-    labels = label_components(ext, nx=32)
-    out, _ = M.split_merge_events_parallel(
-        labels, nx=32, block_steps=5, overlap_threshold=0.5,
-        labels_materialized=True,
-    )
-    out.count()
-    log = list(M._PARALLEL_STALE_LOG)
-    assert log, "no rounds recorded"
-    n_blocks = 8  # 40 steps / 5
-    # round 1 resolves everything; every later round strictly fewer
-    for later in log[:-1][1:] if len(log) > 2 else []:
-        assert later < n_blocks
+    from marex_spark.logging_config import get_logger
+    from marex_spark.operators.label import label_components
+    from marex_spark.operators.merge import split_merge_events_parallel
+
+    records: list[logging.LogRecord] = []
+
+    class _Cap(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    labels = label_components(two_blob_field, nx=NX)
+    log = get_logger("marex_spark.operators.merge")
+    h = _Cap(level=logging.DEBUG)
+    prev_level = log.level
+    log.addHandler(h)
+    log.setLevel(logging.DEBUG)
+    try:
+        split_merge_events_parallel(
+            labels, nx=NX, block_steps=3, overlap_threshold=0.5,
+            labels_materialized=True,
+        )
+    finally:
+        log.removeHandler(h)
+        log.setLevel(prev_level)
+    (rec,) = [r for r in records if hasattr(r, "merge_stale")]
+    n_blocks = 4  # 10 steps / 3
+    assert rec.merge_blocks == n_blocks
+    stale = rec.merge_stale
+    assert rec.merge_rounds == len(stale)
+    assert stale[0] >= 1, stale  # at least one stale round ran
+    # every stale round re-resolves strictly fewer than all blocks
+    assert all(0 < n < n_blocks for n in stale[:-1]), stale
     # the final stability check found nothing stale
-    assert log[-1] == 0 or M.LAST_PARALLEL_ROUNDS <= 2
+    assert stale[-1] == 0, stale
 
 
 # ------------------------------------------------- reference-replay parity
@@ -418,13 +427,13 @@ def test_resolver_equals_reference_replay(nn, max_distance):
         fields, thr=0.5, nn=nn, max_distance=max_distance
     )
 
-    from marex_spark.operators.merge import split_merge_serial
+    from tests.reference.merge import resolve_series
 
     t_idx, ys, xs = np.nonzero(fields)
     cells = pd.DataFrame(
         {"time": t_idx, "y": ys, "x": xs, "obj_id": fields[t_idx, ys, xs]}
     )
-    out, ledger = split_merge_serial(
+    out, ledger = resolve_series(
         cells, nx=NXs, overlap_threshold=0.5,
         nn_partitioning=nn, max_distance=max_distance,
     )
@@ -451,8 +460,15 @@ def test_mesh_nn_hop_bfs_vs_geodesic(spark):
     table is supplied: a chain mesh 0-1-2-3-4 whose cell 2 sits
     geodesically nearer parent B's member but one hop from BOTH parents
     goes to parent A (earlier parent wins equal hop counts), while the
-    geodesic fallback (no edges) assigns it to B."""
-    from marex_spark.operators.merge import split_merge_events_unstructured
+    geodesic fallback (no edges) assigns it to B. Two timesteps fit one
+    block, so the parallel engine hands them to the chunked engine."""
+    from marex_spark.operators.merge import split_merge_events_parallel
+
+    def resolve(**kw):
+        return split_merge_events_parallel(
+            labels, geometry="sphere", cell_geo=geo, overlap_threshold=0.5,
+            time_col="t", nn_partitioning=True, **kw,
+        )
 
     # lon: cell 2 at 22 deg — geodesically nearer cell 3 (30) than 1 (10)
     geo = spark.createDataFrame(
@@ -470,44 +486,33 @@ def test_mesh_nn_hop_bfs_vs_geodesic(spark):
         + [(1, c, 3) for c in range(5)],
         "t long, cell long, obj_id long",
     )
-    out_hop, _ = split_merge_events_unstructured(
-        labels, geo, overlap_threshold=0.5, time_col="t",
-        nn_partitioning=True, mesh_edges=edges,
-    )
+    out_hop, _ = resolve(mesh_edges=edges)
     got = {(r.t, r.cell): r.obj_id for r in out_hop.collect()}
     assert got[(1, 2)] == got[(1, 0)], got   # hop tie -> earlier parent A
     assert got[(1, 3)] == got[(1, 4)]
     assert got[(1, 0)] != got[(1, 3)]
 
-    out_geo, _ = split_merge_events_unstructured(
-        labels, geo, overlap_threshold=0.5, time_col="t",
-        nn_partitioning=True,
-    )
+    out_geo, _ = resolve()
     got2 = {(r.t, r.cell): r.obj_id for r in out_geo.collect()}
     assert got2[(1, 2)] == got2[(1, 3)], got2  # geodesic -> parent B
 
     # max_distance=0 hops: BFS never expands past the seeded overlap
     # cells, so cell 2 takes the centroid fallback (track.py:5227-5238)
     # -> parent B (nearer centroid, lon ~15.5 vs A's ~5)
-    out_fb, _ = split_merge_events_unstructured(
-        labels, geo, overlap_threshold=0.5, time_col="t",
-        nn_partitioning=True, mesh_edges=edges, max_distance=0.0,
-    )
+    out_fb, _ = resolve(mesh_edges=edges, max_distance=0.0)
     got3 = {(r.t, r.cell): r.obj_id for r in out_fb.collect()}
     assert got3[(1, 2)] == got3[(1, 3)], got3
 
 
-def test_chunked_timestamp_tz_safe(spark, two_blob_field):
-    """Non-UTC session timezone: the chunked tier's parquet spill paths
-    must not shift timestamp time columns (toPandas yields session-
-    local wall times, pyarrow reads Spark INT96 as UTC wall — mixing
-    them shifted output by the tz offset). Times ride the spill as
-    epoch micros; output, ledger and one-shot equality all hold."""
-    from marex_spark.operators.merge import (
-        split_merge_events,
-        split_merge_events_chunked,
-    )
+def test_chunked_timestamp_tz_safe(spark, two_blob_field, monkeypatch):
+    """Non-UTC session timezone: the chunked engine's parquet spill
+    paths must not shift timestamp time columns (toPandas yields
+    session-local wall times, pyarrow reads Spark INT96 as UTC wall —
+    mixing them shifted output by the tz offset). Times ride the spill
+    as epoch micros; output, ledger and one-shot equality all hold."""
+    import marex_spark.operators.merge as M
     from marex_spark.operators.label import label_components
+    from tests.reference.merge import split_merge_reference
 
     prev_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
@@ -515,15 +520,17 @@ def test_chunked_timestamp_tz_safe(spark, two_blob_field):
         labels = label_components(
             two_blob_field, nx=NX, time_col="time"
         ).localCheckpoint()
-        one, led_one = split_merge_events(
+        one, led_one = split_merge_reference(
             labels, nx=NX, overlap_threshold=0.5
         )
-        # chunk_steps=2 over 10 steps -> 5 chunks >= 4: pyarrow page
-        # fast path engaged
-        chk, led_chk = split_merge_events_chunked(
-            labels, nx=NX, chunk_steps=2, overlap_threshold=0.5,
+        # a one-step cell budget over 10 steps -> 10 chunks >= 4:
+        # pyarrow page fast path engaged
+        monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 300)
+        chk, led_chk = M.split_merge_events_chunked(
+            labels, nx=NX, overlap_threshold=0.5,
             labels_materialized=True,
         )
+        assert len(chk.inputFiles()) >= 4
         assert chk.schema["time"].dataType.simpleString() == "timestamp"
         a = sorted(map(tuple, one.collect()))
         b = sorted(map(tuple, chk.collect()))
@@ -601,7 +608,7 @@ def test_mesh_adj_broadcast_path_identical(spark, monkeypatch):
     """Past _MESH_ADJ_BCAST_BYTES the parallel tier ships the mesh CSR
     as a Spark broadcast variable instead of a task-closure capture;
     forcing the threshold to 0 must leave the output and ledger
-    byte-identical to the closure path (and to the serial tier)."""
+    byte-identical to the closure path."""
     import datetime as _dt
 
     import marex_spark.operators.merge as mg
@@ -713,46 +720,3 @@ def test_wrapped_distance_helper_parity():
         assert np.isclose(
             d(y1, x1, y2, x2, 80), d(y2, x2, y1, x1, 80), atol=1e-9
         )
-
-
-def test_parallel_stale_driver_path_equals_distributed(
-    spark, two_blob_field, monkeypatch
-):
-    """The stale-round driver fast path (rounds >= 1 under
-    PARALLEL_STALE_DRIVER_CELLS run the block kernel driver-side,
-    Gauss-Seidel in time order) must be byte-identical to keeping
-    every stale round distributed (Jacobi). The default budget is 0
-    (always distributed — the measured-faster arm), so force the
-    driver path with a large budget for one arm and A/B the events
-    AND the ledger."""
-    from marex_spark.operators import merge as M
-    from marex_spark.operators.label import label_components
-
-    labels = label_components(two_blob_field, nx=NX)
-    monkeypatch.setattr(M, "PARALLEL_STALE_DRIVER_CELLS", 4_000_000)
-    drv, ledger_drv = M.split_merge_events_parallel(
-        labels, nx=NX, block_steps=3, overlap_threshold=0.5
-    )
-    drv_rows = {(r.time, r.y, r.x, r.obj_id) for r in drv.collect()}
-    drv_ledger = [
-        (r.time, tuple(r.parent_ids), tuple(r.child_ids), tuple(r.overlap_areas))
-        for r in ledger_drv.collect()
-    ]
-    stale_log_drv = list(M._PARALLEL_STALE_LOG)
-
-    monkeypatch.setattr(M, "PARALLEL_STALE_DRIVER_CELLS", 0)
-    dist, ledger_dist = M.split_merge_events_parallel(
-        labels, nx=NX, block_steps=3, overlap_threshold=0.5
-    )
-    dist_rows = {(r.time, r.y, r.x, r.obj_id) for r in dist.collect()}
-    dist_ledger = [
-        (r.time, tuple(r.parent_ids), tuple(r.child_ids), tuple(r.overlap_areas))
-        for r in ledger_dist.collect()
-    ]
-
-    assert drv_rows == dist_rows
-    assert drv_ledger == dist_ledger
-    # the fixture must actually exercise a stale round on BOTH paths,
-    # or this test silently compares two single-round runs
-    assert len(stale_log_drv) >= 2, stale_log_drv
-    assert len(M._PARALLEL_STALE_LOG) >= 2, M._PARALLEL_STALE_LOG

@@ -63,49 +63,49 @@ def test_unstructured_merging_preserves_identities(spark, ring, two_blob_mesh):
 
 
 def test_unstructured_parallel_matches_serial(spark, ring, two_blob_mesh):
-    """The Jacobi time-block tier in sphere geometry must reproduce the
-    serial unstructured resolver exactly (labels + ledger), with small
-    blocks so carries cross the collision."""
+    """The Jacobi time-block engine in sphere geometry must reproduce
+    the serial resolution exactly (labels + ledger), with small blocks
+    so carries cross the collision. Serial = one block over all 13
+    steps, which the parallel engine hands to the chunked engine; both
+    must also equal the whole-series reference."""
     from marex_spark.operators.label import label_components_unstructured
-    from marex_spark.operators.merge import (
-        split_merge_events_parallel,
-        split_merge_events_unstructured,
-    )
+    from marex_spark.operators.merge import split_merge_events_parallel
+    from tests.reference.merge import split_merge_reference
 
     edges, geo = ring
     labels = label_components_unstructured(two_blob_mesh, edges).localCheckpoint()
-    one, ledger_one = split_merge_events_unstructured(
-        labels, geo, overlap_threshold=0.5
-    )
-    par, ledger_par = split_merge_events_parallel(
-        labels, block_steps=4, overlap_threshold=0.5,
-        geometry="sphere", cell_geo=geo,
-    )
-    a = {(r.time, r.cell, r.obj_id) for r in one.collect()}
-    b = {(r.time, r.cell, r.obj_id) for r in par.collect()}
-    assert a == b
-    la = [
-        (r.time, tuple(r.parent_ids), tuple(r.child_ids))
-        for r in ledger_one.collect()
-    ]
-    lb = [
-        (r.time, tuple(r.parent_ids), tuple(r.child_ids))
-        for r in ledger_par.collect()
-    ]
-    assert la == lb
+
+    def run(block_steps):
+        return split_merge_events_parallel(
+            labels, block_steps=block_steps, overlap_threshold=0.5,
+            geometry="sphere", cell_geo=geo,
+        )
+
+    def rows(out, ledger):
+        return (
+            {(r.time, r.cell, r.obj_id) for r in out.collect()},
+            [
+                (r.time, tuple(r.parent_ids), tuple(r.child_ids))
+                for r in ledger.collect()
+            ],
+        )
+
+    ref = rows(*split_merge_reference(labels, cell_geo=geo, overlap_threshold=0.5))
+    assert rows(*run(13)) == ref
+    assert rows(*run(4)) == ref
 
 
 @pytest.mark.parametrize("seed", [5, 17])
 def test_sphere_tiers_agree_on_random_mesh(spark, ring, seed):
-    """Sphere serial vs parallel on random clumpy mesh activity —
-    beyond the structured colliding-blob path."""
+    """Sphere whole-series reference vs the parallel engine (4-step
+    blocks) vs its single-block chunked fallback (block_steps >= T) on
+    random clumpy mesh activity — beyond the structured colliding-blob
+    path."""
     import datetime as _dt
 
     from marex_spark.operators.label import label_components_unstructured
-    from marex_spark.operators.merge import (
-        split_merge_events_parallel,
-        split_merge_events_unstructured,
-    )
+    from marex_spark.operators.merge import split_merge_events_parallel
+    from tests.reference.merge import split_merge_reference
 
     edges, geo = ring
     t0 = _dt.datetime(2023, 1, 1)
@@ -121,16 +121,19 @@ def test_sphere_tiers_agree_on_random_mesh(spark, ring, seed):
         < 3,
     )
     labels = label_components_unstructured(field, edges)
-    one, l1 = split_merge_events_unstructured(labels, geo, overlap_threshold=0.5)
-    par, l2 = split_merge_events_parallel(
-        labels, block_steps=4, overlap_threshold=0.5,
-        geometry="sphere", cell_geo=geo,
-    )
-    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, par.collect()))
+    one, l1 = split_merge_reference(labels, cell_geo=geo, overlap_threshold=0.5)
     led = lambda df: [  # noqa: E731
         (r.time, tuple(r.parent_ids), tuple(r.child_ids)) for r in df.collect()
     ]
-    assert led(l1) == led(l2)
+    for block_steps in (4, 14):  # 14 steps: one block -> chunked engine
+        par, l2 = split_merge_events_parallel(
+            labels, block_steps=block_steps, overlap_threshold=0.5,
+            geometry="sphere", cell_geo=geo,
+        )
+        assert sorted(map(tuple, one.collect())) == sorted(
+            map(tuple, par.collect())
+        )
+        assert led(l1) == led(l2)
 
 
 def test_unstructured_centroids_follow_path(spark, ring, two_blob_mesh):

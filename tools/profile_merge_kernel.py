@@ -1,7 +1,7 @@
 """cProfile of ONE parallel-merge block kernel (the per-round unit of
-track_merge_parallel_10x): labels one block's worth of timesteps from
-the profile_merge10 fixture, pulls them to pandas, and runs
-_block_kernel_core locally under cProfile.
+track_merge_parallel_10x): labels one block's worth of timesteps of
+the 30-year synthetic SST fixture, pulls them to pandas, and runs
+_resolve_block locally under cProfile.
 
 Usage: python tools/profile_merge_kernel.py [block_steps]
 """
