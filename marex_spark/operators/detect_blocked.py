@@ -34,6 +34,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from marex_spark.operators.timeblocks import (
+    time_from_int64,
+    time_to_int64,
+    time_unit,
+)
+
 
 def _band_shuffle(df: DataFrame, key: str, parallelism: int) -> DataFrame:
     """The ONE exchange of the blocked detect path: place every row of a
@@ -91,25 +97,11 @@ def _band_factor(est_bytes: int) -> int:
     return max(1, min(8, est_bytes >> 29))
 
 
-def _time_unit(ts_type) -> tuple[str, bool]:
-    """(numpy datetime64 unit, is_date) for an arrow temporal type —
-    int64-cast values are in this unit (date32 → days, timestamp → its
-    unit). Dates are timezone-free; timestamps are UTC instants."""
-    import pyarrow as pa
-
-    if pa.types.is_date32(ts_type):
-        return "D", True
-    if pa.types.is_date64(ts_type):
-        return "ms", True
-    if pa.types.is_timestamp(ts_type):
-        return ts_type.unit, False
-    raise TypeError(f"unsupported time column type: {ts_type}")
-
-
 def _time_parts(
     ut: np.ndarray, unit: str, is_date: bool, tz: str
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(doy0, year, epoch_day) per unique time, matching the relational
+    """(doy0, year, epoch_day) per unique time ``ut`` (int64 in the
+    unit of :func:`timeblocks.time_unit`), matching the relational
     path's F.dayofyear / F.year / functions.temporal.epoch_day:
     timestamps are UTC instants interpreted in the SESSION timezone
     (Spark extracts date parts in spark.sql.session.timeZone — raw
@@ -769,10 +761,10 @@ def detect_extremes_blocked(
             return
         tbl = pa.Table.from_batches(blist).combine_chunks()
         ts_type = tbl.schema.field(time_col).type
-        unit, is_date = _time_unit(ts_type)
+        unit, is_date = time_unit(ts_type)
         y = tbl["y"].to_numpy()
         x = tbl["x"].to_numpy().astype(np.int64, copy=False)
-        ts = tbl[time_col].cast(pa.int64()).to_numpy()
+        ts = time_to_int64(tbl[time_col])
         v = tbl[value_col].to_numpy().astype(np.float64, copy=False)
         for band in np.unique(y):
             mask = y == band
@@ -789,7 +781,7 @@ def detect_extremes_blocked(
             tt, xx = np.nonzero(ext)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ut[tt].astype(f"datetime64[{unit}]")).cast(ts_type),
+                    time_from_int64(ut[tt], ts_type),
                     pa.array(np.full(len(tt), band, dtype=np.int32)),
                     pa.array(ux[xx].astype(np.int32)),
                 ],
@@ -850,10 +842,9 @@ def pack_gridded(
             return
         tbl = pa.Table.from_batches(blist).combine_chunks()
         ts_type = tbl.schema.field(time_col).type
-        unit, _ = _time_unit(ts_type)
         y = tbl["y"].to_numpy()
         x = tbl["x"].to_numpy().astype(np.int64, copy=False)
-        ts = tbl[time_col].cast(pa.int64()).to_numpy()
+        ts = time_to_int64(tbl[time_col])
         v = tbl[value_col].to_numpy(zero_copy_only=False).astype(
             np.float64, copy=False
         )
@@ -871,7 +862,7 @@ def pack_gridded(
             )
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ut.astype(f"datetime64[{unit}]")).cast(ts_type),
+                    time_from_int64(ut, ts_type),
                     pa.array(np.full(len(ut), band).astype(np.int32)),
                     vals,
                 ],
@@ -973,9 +964,9 @@ def detect_extremes_blocked_packed(
             return
         tbl = pa.Table.from_batches(blist).combine_chunks()
         ts_type = tbl.schema.field(time_col).type
-        unit, is_date = _time_unit(ts_type)
+        unit, is_date = time_unit(ts_type)
         y = tbl["y"].to_numpy()
-        ts = tbl[time_col].cast(pa.int64()).to_numpy()
+        ts = time_to_int64(tbl[time_col])
         vcol = tbl["vals"].combine_chunks()
         widths = np.diff(vcol.offsets.to_numpy())
         if len(widths) and (widths != widths[0]).any():
@@ -1020,7 +1011,7 @@ def detect_extremes_blocked_packed(
                 tt, xx = np.nonzero(ext)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(ut[tt].astype(f"datetime64[{unit}]")).cast(ts_type),
+                        time_from_int64(ut[tt], ts_type),
                         pa.array(np.full(len(tt), band, dtype=np.int32)),
                         pa.array(xx.astype(np.int32)),
                     ],
@@ -1050,7 +1041,7 @@ def detect_extremes_blocked_packed(
                 tt, xx = np.nonzero(ext)
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(ut[tt].astype(f"datetime64[{unit}]")).cast(ts_type),
+                        time_from_int64(ut[tt], ts_type),
                         pa.array(np.full(len(tt), band, dtype=np.int32)),
                         pa.array(xx.astype(np.int32)),
                     ],

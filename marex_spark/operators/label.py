@@ -4,24 +4,21 @@ ID assignment (W6).
 Reference: marEx labels each 2-D slice with dask_image/scipy
 (track.py:2007-2046) and offsets IDs per time (track.py:2762-2766).
 scipy isn't in this image, so the per-slice kernel is a pure-numpy
-union-find (hooking + pointer-doubling on the sparse edge list) inside
-``applyInPandas`` over ``groupBy(time)`` — the same
+union-find (hooking + pointer-doubling on the sparse edge list) run by
+``timeblocks.map_time_slices`` — one ``mapInArrow`` stream over cells
+hash-partitioned by time, so slices never split: the same
 chunk-function-chunk contract as the reference's ``xr.apply_ufunc``.
-
-Scale: one group = one time slice (a 0.25° global slice ≈ 1M cells ≈
-a few MB in Arrow) — repartition by time first so slices never split.
 The label-propagation alternative (pure DataFrame, M5) lives in
 components.py for the cross-time case.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from marex_spark.operators import timeblocks
 
 
 def _cc_edges(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
@@ -162,6 +159,32 @@ def label_slices_batch(
     return (rank[inv] + 1).astype(np.int32)
 
 
+def _global_ids(
+    local: DataFrame, time_col: str, keys: list[str], materialize: bool = True
+) -> DataFrame:
+    """W6 (track.py:2762-2766): per-slice ``local_id`` + the cumulative
+    per-time max offset → dense, deterministic global ``obj_id``.
+
+    The kernel output is checkpointed because both the offset table and
+    the final join read it. The final output is checkpointed too (unless
+    ``materialize=False``, for plan pins that inspect the join shape):
+    every consumer (overlap self-join, object areas, the chunked
+    resolver's per-chunk paging loop) would otherwise re-run the offsets
+    agg + broadcast join per action — ≈0.6 s × 18 chunks at the sf0.1
+    bench."""
+    from marex_spark.operators.overlap import cumulative_offsets
+
+    local = local.localCheckpoint()
+    per_time_max = local.groupBy(time_col).agg(F.max("local_id").alias("max_id"))
+    offsets = cumulative_offsets(per_time_max, time_col, "max_id")
+    out = local.join(F.broadcast(offsets), time_col).select(
+        time_col,
+        *keys,
+        (F.col("local_id") + F.col("id_offset")).cast("long").alias("obj_id"),
+    )
+    return out.localCheckpoint() if materialize else out
+
+
 def label_components(
     extremes: DataFrame,
     nx: int,
@@ -174,9 +197,10 @@ def label_components(
     """Boolean field → per-time labelled objects, globally unique IDs.
 
     Returns (time, y, x, obj_id) for True cells only. Per-time local
-    labels come from the grouped-UDF kernel; global uniqueness via the
-    W6 cumulative-max-offset window (track.py:2762-2766) — IDs stay
-    dense and deterministic.
+    labels come from the vectorized multi-slice kernel
+    (:func:`label_slices_batch`, one union-find per run of slices);
+    global uniqueness via the W6 cumulative-max-offset window
+    (track.py:2762-2766) — IDs stay dense and deterministic.
 
     ``materialize=False`` returns the un-checkpointed logical plan
     (plan pins in tests/test_plans.py inspect the join shape, which a
@@ -184,72 +208,18 @@ def label_components(
     """
     pts = extremes.filter(F.col(extreme_col)).select(time_col, "y", "x")
 
-    def _label_partition(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        # One partition holds many COMPLETE time slices (hash-partitioned
-        # by time below), labelled by the VECTORIZED multi-slice kernel —
-        # one numpy pipeline per sub-batch instead of a Python loop over
-        # ~10 ms pandas groups (a daily century is ~36k slices; the loop
-        # form made labelling cost 5× the detect stage). Sub-batches of
-        # whole slices cap the working set at ~16M cells.
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        tvals = pdf[time_col].to_numpy()
-        ys_all = pdf["y"].to_numpy()
-        xs_all = pdf["x"].to_numpy()
-        tcodes, _ = pd.factorize(tvals, sort=False)
-        ord_t = np.argsort(tcodes, kind="stable")
-        ts_sorted = tcodes[ord_t]
-        bounds = np.r_[0, np.nonzero(np.diff(ts_sorted))[0] + 1, len(ts_sorted)]
-        cap = 16_000_000
-        lo = 0
-        while lo < len(bounds) - 1:
-            hi = lo + 1
-            while hi < len(bounds) - 1 and bounds[hi + 1] - bounds[lo] <= cap:
-                hi += 1
-            sel = ord_t[bounds[lo] : bounds[hi]]
-            ys = ys_all[sel]
-            xs = xs_all[sel]
-            ids = label_slices_batch(
-                ts_sorted[bounds[lo] : bounds[hi]], ys, xs,
-                nx=nx, connectivity=connectivity, wrap_x=wrap_x,
-            )
-            yield pd.DataFrame(
-                {time_col: tvals[sel], "y": ys, "x": xs, "local_id": ids}
-            )
-            lo = hi
+    def label(slices, cols):
+        ys = cols["y"].astype(np.int32, copy=False)
+        xs = cols["x"].astype(np.int32, copy=False)
+        ids = label_slices_batch(
+            slices, ys, xs, nx=nx, connectivity=connectivity, wrap_x=wrap_x
+        )
+        return slices, {"y": ys, "x": xs, "local_id": ids}
 
-    # Explicit partition count: an AQE-coalesced shuffle would funnel all
-    # time groups into one task and serialise the Python kernel; pinning
-    # numPartitions keeps the kernels parallel across cores.
-    parallelism = pts.sparkSession.sparkContext.defaultParallelism
-    time_type = pts.schema[time_col].dataType.simpleString()
-    schema = f"{time_col} {time_type}, y int, x int, local_id int"
-    labelled = pts.repartition(parallelism, time_col).mapInPandas(
-        _label_partition, schema=schema
+    local = timeblocks.map_time_slices(
+        pts, time_col, label, "y int, x int, local_id int"
     )
-    # Materialise once: both the offset table and the final join read it.
-    labelled = labelled.localCheckpoint()
-
-    from marex_spark.operators.overlap import cumulative_offsets
-
-    per_time_max = labelled.groupBy(time_col).agg(F.max("local_id").alias("max_id"))
-    offsets = cumulative_offsets(per_time_max, time_col, "max_id")
-    out = labelled.join(F.broadcast(offsets), time_col).select(
-        time_col,
-        "y",
-        "x",
-        (F.col("local_id") + F.col("id_offset")).cast("long").alias("obj_id"),
-    )
-    # Checkpoint the FINAL output, not just the kernel's: every consumer
-    # (overlap self-join, object areas, and especially the serial
-    # resolver's per-chunk paging loop) would otherwise re-execute the
-    # offsets agg + broadcast join suffix per action — the chunked merge
-    # tier paid that suffix once PER CHUNK (≈0.6 s × 18 chunks at the
-    # sf0.1 bench). The intermediate checkpoint's blocks are released by
-    # the ContextCleaner once `labelled` is unreachable.
-    return out.localCheckpoint() if materialize else out
+    return _global_ids(local, time_col, ["y", "x"], materialize)
 
 
 def label_components_unstructured(
@@ -257,139 +227,55 @@ def label_components_unstructured(
     edges: DataFrame,
     time_col: str = "time",
     extreme_col: str = "extreme",
-    max_rounds: int = 64,
-    method: str = "kernel",
 ) -> DataFrame:
     """M6: per-time labelling on an unstructured mesh (reference
     track.py:1947-2005 sparse boolean matrix labelling).
 
-    ``method="kernel"`` (default): build the per-timestep INDUCED
-    subgraph (two joins of the edge table against the active set) and
-    run the numpy union-find per slice inside one mapInPandas stream —
-    the same kernel/contract as the structured M4 path. O(1) rounds;
-    the edge table is never broadcast and each slice's work is
-    proportional to its active cells + induced edges.
-
-    ``method="propagate"``: the pure-DataFrame min-label propagation
-    fixpoint (rounds of ``min(label) over self ∪ neighbours``) — kept
-    as the declarative differential form (equivalence pinned in
-    tests/test_unstructured.py); converges in O(component diameter)
-    rounds, which on a high-diameter mesh (a ring, a coastline) is the
-    slow path.
-
-    Output ids match between methods: component label = min member
+    Builds the per-timestep INDUCED subgraph (two joins of the edge
+    table against the active set) and runs the numpy union-find per
+    slice — the same runner and kernel as the structured M4 path. The
+    edge table is never broadcast and each slice's work is proportional
+    to its active cells + induced edges. Component label = min member
     cell id, densified per time, globally offset (W6).
     """
     active = extremes.filter(F.col(extreme_col)).select(time_col, "cell")
-    if method == "kernel":
-        return _label_unstructured_kernel(active, edges, time_col)
-    labels = active.withColumn("lbl", F.col("cell").cast("long"))
-    sym = edges.select("cell", "nbr").union(
-        edges.select(F.col("nbr").alias("cell"), F.col("cell").alias("nbr"))
-    ).distinct()
-
-    for _ in range(max_rounds):
-        # propagate: each active cell takes min(own, neighbours' labels)
-        nbr_lbl = (
-            labels.join(sym, "cell")
-            .select(time_col, F.col("nbr").alias("cell"), "lbl")
-            .join(active, [time_col, "cell"], "left_semi")
-        )
-        new_labels = (
-            labels.select(time_col, "cell", "lbl")
-            .union(nbr_lbl)
-            .groupBy(time_col, "cell")
-            .agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(
-                labels.alias("o"),
-                [time_col, "cell"],
-            )
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-
-    w = Window.partitionBy(time_col).orderBy("lbl")
-    per_time = labels.select(
-        time_col, "cell", F.dense_rank().over(w).cast("int").alias("local_id")
-    )
-    from marex_spark.operators.overlap import cumulative_offsets
-
-    per_time_max = per_time.groupBy(time_col).agg(F.max("local_id").alias("max_id"))
-    offsets = cumulative_offsets(per_time_max, time_col, "max_id")
-    # final-output checkpoint: same rationale as label_components
-    return per_time.join(F.broadcast(offsets), time_col).select(
-        time_col,
-        "cell",
-        (F.col("local_id") + F.col("id_offset")).cast("long").alias("obj_id"),
-    ).localCheckpoint()
-
-
-def _label_unstructured_kernel(
-    active: DataFrame, edges: DataFrame, time_col: str
-) -> DataFrame:
-    """Kernel tier of M6: stream each timestep's active cells + induced
-    edges through the numpy union-find (_cc_edges), exactly like the
-    structured per-slice path."""
-    spark = active.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    time_type = active.schema[time_col].dataType.simpleString()
-
-    sym = edges.select("cell", "nbr")
+    # every active cell streams as a self-loop, so a slice's node set is
+    # its distinct ``cell`` values and isolated cells stay in it
     e_act = (
-        sym.join(active, "cell")
+        edges.select("cell", "nbr")
+        .join(active, "cell")
         .join(
             active.select(time_col, F.col("cell").alias("nbr")),
             [time_col, "nbr"],
         )
-        .select(time_col, "cell", F.col("nbr"))
     )
     stream = active.select(
-        time_col, "cell", F.lit(None).cast("long").alias("nbr")
-    ).unionByName(e_act.select(time_col, "cell", F.col("nbr").cast("long")))
+        time_col, F.col("cell").cast("long"), F.col("cell").cast("long").alias("nbr")
+    ).unionByName(
+        e_act.select(time_col, F.col("cell").cast("long"), F.col("nbr").cast("long"))
+    )
 
-    def _run(pdfs: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        for t, g in pdf.groupby(time_col, sort=False):
-            nodes_mask = g["nbr"].isna()
-            cells = np.sort(g.loc[nodes_mask, "cell"].to_numpy(np.int64))
-            eu = g.loc[~nodes_mask, "cell"].to_numpy(np.int64)
-            ev = g.loc[~nodes_mask, "nbr"].to_numpy(np.int64)
-            u = np.searchsorted(cells, eu)
-            v = np.searchsorted(cells, ev)
-            roots = _cc_edges(len(cells), u, v)
+    def label(slices, cols):
+        cell, nbr = cols["cell"], cols["nbr"]
+        bounds = np.searchsorted(slices, np.arange(slices[-1] + 2))
+        out_t, out_c, out_id = [], [], []
+        for ti in range(len(bounds) - 1):
+            lo, hi = bounds[ti], bounds[ti + 1]
+            cells = np.unique(cell[lo:hi])
+            u = np.searchsorted(cells, cell[lo:hi])
+            v = np.searchsorted(cells, nbr[lo:hi])
             # local ids 1..k ordered by each component's min cell id
             # (cells sorted → root index order IS min-cell order)
-            _, local = np.unique(roots, return_inverse=True)
-            yield pd.DataFrame(
-                {
-                    time_col: t,
-                    "cell": cells,
-                    "local_id": (local + 1).astype(np.int32),
-                }
-            )
+            _, local = np.unique(_cc_edges(len(cells), u, v), return_inverse=True)
+            out_t.append(np.full(len(cells), ti))
+            out_c.append(cells)
+            out_id.append((local + 1).astype(np.int32))
+        return np.concatenate(out_t), {
+            "cell": np.concatenate(out_c),
+            "local_id": np.concatenate(out_id),
+        }
 
-    schema = f"{time_col} {time_type}, cell long, local_id int"
-    per_time = stream.repartition(parallelism, time_col).mapInPandas(
-        _run, schema=schema
-    ).localCheckpoint()
-
-    from marex_spark.operators.overlap import cumulative_offsets
-
-    per_time_max = per_time.groupBy(time_col).agg(F.max("local_id").alias("max_id"))
-    offsets = cumulative_offsets(per_time_max, time_col, "max_id")
-    # final-output checkpoint: same rationale as label_components
-    return per_time.join(F.broadcast(offsets), time_col).select(
-        time_col,
-        "cell",
-        (F.col("local_id") + F.col("id_offset")).cast("long").alias("obj_id"),
-    ).localCheckpoint()
+    local = timeblocks.map_time_slices(
+        stream, time_col, label, "cell long, local_id int"
+    )
+    return _global_ids(local, time_col, ["cell"])

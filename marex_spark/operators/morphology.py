@@ -24,18 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from marex_spark.functions.temporal import epoch_day
-
-# Sub-batch budget (bools) for the stacked dense-morphology kernel —
-# cache-residency sized; see the comment at its use in
-# morph_close_open_blocked and tools/ab_morph_batch_mp.py. The 2M
-# default assumes ~32 concurrent single-thread tasks sharing one L3
-# (the measured host profile); deployments with fewer task slots or
-# larger caches can raise it via MAREX_MORPH_BATCH_BOOLS.
-import os as _os
-
-_MORPH_BATCH_BOOLS = int(
-    _os.environ.get("MAREX_MORPH_BATCH_BOOLS", "2000000")
-)
+from marex_spark.operators import timeblocks
 
 
 def disk_offsets(radius: int) -> list[tuple[int, int]]:
@@ -208,79 +197,36 @@ def morph_close_open_blocked(
     wrap_x: bool = True,
     time_col: str = "time",
 ) -> DataFrame:
-    """Closing-then-opening over sparse True cells, one dense numpy
-    kernel per timestep (the scale form of the M1 pair: the reference
-    runs C-backed binary_closing/opening per dask chunk,
+    """Closing-then-opening over sparse True cells by a dense numpy
+    kernel over whole slices (the scale form of the M1 pair: the
+    reference runs C-backed binary_closing/opening per dask chunk,
     track.py:1630-1634; the relational offset-explode form pays a
     49-197× row fan-out per morphology op — measured 350 s for a
     35M-cell-day preprocess at R=4 vs ~seconds here). One shuffle by
-    time; every slice is an independent kernel, same parallelism model
-    as labelling. Semantics pinned equal to
+    time; slices stay independent, same parallelism model as
+    labelling. Semantics pinned equal to
     binary_erode(binary_dilate(...)) + the opening in
-    tests/test_morphology.py."""
-    from collections.abc import Iterator
+    tests/test_morphology.py.
 
+    The kernel rolls a (T, ny, nx) stack of consecutive slices at once
+    (per-slice rolls were pure Python overhead); a stack holds as many
+    slices as fit ny·nx each into
+    :data:`~marex_spark.operators.timeblocks.SLICE_BATCH_CELLS`, at
+    least one."""
     import numpy as np
-    import pyarrow as pa
 
     offsets = disk_offsets(radius)
-    spark = true_cells.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    time_type = true_cells.schema[time_col].dataType.simpleString()
 
-    def _run(batches) -> Iterator:
-        blist = list(batches)
-        if not blist or sum(b.num_rows for b in blist) == 0:
-            return
-        tbl = pa.Table.from_batches(blist).combine_chunks()
-        ts_type = tbl.schema.field(time_col).type
-        ts = tbl[time_col].cast(pa.int64()).to_numpy()
-        ys = tbl["y"].to_numpy()
-        xs = tbl["x"].to_numpy()
-        ut, t_inv = np.unique(ts, return_inverse=True)
-        # Stacked (T, ny, nx) kernel: the 4 morphology stages roll the
-        # whole sub-batch of slices at once instead of per-timestep
-        # (49 rolls/stage at R=4 — per-slice loops were pure overhead).
-        # Sub-batch budget sized for CACHE RESIDENCY, not just peak
-        # memory: each roll pass re-touches the whole padded stack, so
-        # a 64 MB stack is pure DRAM traffic and 32 concurrent tasks
-        # thrash each other — at production dims (720×1440) the
-        # 32-way kernel wave measured 9.7-16.4 s/task at a 64 MB budget
-        # vs 1.8-2.6 s at 2 MB (~1 slice/stack there), identical
-        # outputs (tools/ab_morph_batch_mp.py). Slices stay batched
-        # where they are small (625/stack at the 40×80 bench grid), so
-        # the per-slice Python overhead this stacking removed does not
-        # return; slices remain fully independent.
-        per = max(1, _MORPH_BATCH_BOOLS // (ny * nx))
-        # rows sorted by slice index once, sub-batches sliced as
-        # contiguous ranges — at production dims per=1, so the old
-        # per-sub-batch boolean mask re-scanned every partition row
-        # once per TIMESTEP (O(T·n_rows) scatter prep)
-        order = np.argsort(t_inv, kind="stable")
-        t_srt, ys_srt, xs_srt = t_inv[order], ys[order], xs[order]
-        starts = np.searchsorted(t_srt, np.arange(len(ut) + 1))
-        for lo in range(0, len(ut), per):
-            hi = min(lo + per, len(ut))
-            r0, r1 = starts[lo], starts[hi]
-            g = np.zeros((hi - lo, ny, nx), dtype=bool)
-            g[t_srt[r0:r1] - lo, ys_srt[r0:r1], xs_srt[r0:r1]] = True
-            closed = _erode_np(_dilate_np(g, offsets, wrap_x), offsets, wrap_x)
-            opened = _dilate_np(
-                _erode_np(closed, offsets, wrap_x), offsets, wrap_x
-            )
-            tt, yy, xx = np.nonzero(opened)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ut[tt + lo]).cast(ts_type),
-                    pa.array(yy.astype(np.int32)),
-                    pa.array(xx.astype(np.int32)),
-                ],
-                names=[time_col, "y", "x"],
-            )
+    def close_open(slices, cols):
+        g = np.zeros((slices[-1] + 1, ny, nx), dtype=bool)
+        g[slices, cols["y"], cols["x"]] = True
+        closed = _erode_np(_dilate_np(g, offsets, wrap_x), offsets, wrap_x)
+        opened = _dilate_np(_erode_np(closed, offsets, wrap_x), offsets, wrap_x)
+        tt, yy, xx = np.nonzero(opened)
+        return tt, {"y": yy.astype(np.int32), "x": xx.astype(np.int32)}
 
-    out_schema = f"{time_col} {time_type}, y int, x int"
-    return true_cells.repartition(parallelism, time_col).mapInArrow(
-        _run, schema=out_schema
+    return timeblocks.map_time_slices(
+        true_cells, time_col, close_open, "y int, x int", slice_cells=ny * nx
     )
 
 
@@ -298,8 +244,10 @@ def fill_holes(
     opening (remove specks ≤ R). Input: boolean long field (dense or
     sparse-True); output rows = input rows ∪ filled-in cells, so a
     sparse input keeps its fill-ins (a plain left join silently dropped
-    them). ``blocked=True`` (default) runs the per-slice dense kernel;
-    ``False`` keeps the pure-relational offset-explode form (the
+    them). ``blocked=True`` (default) runs the dense kernel of
+    :func:`morph_close_open_blocked` over stacks of whole slices,
+    capped at ``timeblocks.SLICE_BATCH_CELLS`` grid cells; ``False``
+    keeps the pure-relational offset-explode form (the
     oracle-replayable algebra trk_m1 pins)."""
     true_cells = extremes.filter(F.col(extreme_col)).select(time_col, "y", "x")
     if blocked:
@@ -561,10 +509,7 @@ def morph_close_open_unstructured(
     parity. The default keeps the engine contract (one-directional
     edge tables welcome).
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pyarrow as pa
 
     n_edges = edges.count()
     if n_edges > max_driver_edges:
@@ -583,24 +528,11 @@ def morph_close_open_unstructured(
     key = uu * (max(int(uu.max()), int(vv.max())) + 2) + vv
     _, idx = np.unique(key, return_index=True)
     uu, vv = uu[idx], vv[idx]
-    spark = true_cells.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    time_type = true_cells.schema[time_col].dataType.simpleString()
+    n_mesh = max(int(uu.max()), int(vv.max())) + 1
 
-    def _run(batches) -> Iterator:
-        blist = list(batches)
-        if not blist or sum(b.num_rows for b in blist) == 0:
-            return
-        tbl = pa.Table.from_batches(blist).combine_chunks()
-        ts_type = tbl.schema.field(time_col).type
-        # date32 refuses a direct int64 cast; widen via int32
-        tcol = tbl[time_col]
-        if pa.types.is_date32(ts_type):
-            tcol = tcol.cast(pa.int32())
-        ts = tcol.cast(pa.int64()).to_numpy()
-        cs = tbl["cell"].to_numpy()
-        nc = max(int(uu.max()), int(vv.max()), int(cs.max()) if len(cs) else 0) + 1
-        ut, t_inv = np.unique(ts, return_inverse=True)
+    def close_open(slices, cols):
+        cs = cols["cell"]
+        nc = max(n_mesh, int(cs.max()) + 1)
 
         def dilate(p):
             grown = np.bincount(uu, weights=p[vv], minlength=nc) > 0
@@ -610,9 +542,11 @@ def morph_close_open_unstructured(
             missing = np.bincount(uu, weights=(~p)[vv], minlength=nc) > 0
             return p & ~missing
 
-        for ti in range(len(ut)):
+        bounds = np.searchsorted(slices, np.arange(slices[-1] + 2))
+        out_t, out_c = [], []
+        for ti in range(len(bounds) - 1):
             p = np.zeros(nc, dtype=bool)
-            p[cs[t_inv == ti]] = True
+            p[cs[bounds[ti] : bounds[ti + 1]]] = True
             for r in (radius, refill_radius):
                 if r <= 0:
                     continue
@@ -623,17 +557,8 @@ def morph_close_open_unstructured(
                 for _ in range(r):
                     p = dilate(p)
             (keep,) = np.nonzero(p)
-            tvals = np.full(len(keep), ut[ti])
-            if pa.types.is_date32(ts_type):
-                tarr = pa.array(tvals.astype(np.int32)).cast(ts_type)
-            else:
-                tarr = pa.array(tvals).cast(ts_type)
-            yield pa.RecordBatch.from_arrays(
-                [tarr, pa.array(keep.astype(np.int64))],
-                names=[time_col, "cell"],
-            )
+            out_t.append(np.full(len(keep), ti))
+            out_c.append(keep.astype(np.int64))
+        return np.concatenate(out_t), {"cell": np.concatenate(out_c)}
 
-    out_schema = f"{time_col} {time_type}, cell long"
-    return true_cells.repartition(parallelism, time_col).mapInArrow(
-        _run, schema=out_schema
-    )
+    return timeblocks.map_time_slices(true_cells, time_col, close_open, "cell long")

@@ -124,13 +124,6 @@ class Tracker:
     checkpoint: str | None = None  # 'save' | 'load' | None (track.py:138,342)
     temp_dir: str | None = None
     dimensions: dict | None = None  # canonical -> actual column names
-    # Reuse the area filter's labels as tracking input (gridded path):
-    # skips the second labelling pass — one full shuffle + kernel pass
-    # over all extreme cells. Event structure is identical; only the
-    # arbitrary obj-id numbering differs from the two-pass form
-    # (tests/test_track.py::TestFusedLabelling). Disabled automatically
-    # when a checkpoint strategy needs the boolean field on disk.
-    fuse_labelling: bool = True
     # Replicate the reference's structured-grid area-filter quirk
     # (track.py:1891-1892 "object_ids_keep[0] = -1  # Don't keep
     # ID=0"): regionprops never emits background 0, so that line
@@ -442,11 +435,9 @@ class Tracker:
                 )
         dense = cells.withColumn(self.extreme_col, F.lit(True)).localCheckpoint()
 
-        quartile = self.area_filter_quartile
+        quartile = self._area_quartile()
         absolute = self.area_filter_absolute
-        if quartile is None and absolute is None:
-            quartile = 0.5  # reference default (track.py:96)
-        if (quartile or 0) <= 0 and absolute is None:
+        if quartile <= 0 and absolute is None:
             if return_labels:
                 return label_components_unstructured(
                     dense, self.edges, time_col=self.time_col,
@@ -508,6 +499,34 @@ class Tracker:
             .drop("_k")
         )
 
+    def _area_quartile(self) -> float:
+        """The small-object quartile in effect: 0.5 when neither area
+        filter is given (reference default, track.py:94-96), 0 under
+        an absolute floor."""
+        if self.area_filter_quartile is None and self.area_filter_absolute is None:
+            return 0.5
+        return self.area_filter_quartile or 0.0
+
+    def _preprocess_gridded(self, return_labels: bool = False) -> DataFrame:
+        """Gridded preprocessing with this tracker's settings: the
+        boolean field, or its surviving labelled cells."""
+        return preprocess_extremes(
+            self.data_bin,
+            ny=self.ny or 0,
+            nx=self.nx,
+            r_fill=self.R_fill,
+            t_fill=self.T_fill,
+            area_quartile=self._area_quartile(),
+            wrap_x=not self.regional_mode,
+            time_col=self.time_col,
+            extreme_col=self.extreme_col,
+            area_filter_absolute=self.area_filter_absolute,
+            return_labels=return_labels,
+            connectivity=self.connectivity,
+            mask=self._valid_mask_df(),
+            drop_first_object=self.drop_first_object,
+        )
+
     # -- public API --------------------------------------------------
 
     def _checkpoint_path(self) -> str:
@@ -542,24 +561,7 @@ class Tracker:
             if self.unstructured_grid:
                 out = self._preprocess_unstructured(self._apply_mask(self.data_bin))
             else:
-                quartile = self.area_filter_quartile
-                if quartile is None and self.area_filter_absolute is None:
-                    quartile = 0.5  # reference default
-                out = preprocess_extremes(
-                    self.data_bin,
-                    ny=self.ny or 0,
-                    nx=self.nx,
-                    r_fill=self.R_fill,
-                    t_fill=self.T_fill,
-                    area_quartile=quartile or 0.0,
-                    wrap_x=not self.regional_mode,
-                    time_col=self.time_col,
-                    extreme_col=self.extreme_col,
-                    area_filter_absolute=self.area_filter_absolute,
-                    connectivity=self.connectivity,
-                    mask=self._valid_mask_df(),
-                    drop_first_object=self.drop_first_object,
-                )
+                out = self._preprocess_gridded()
         if ckpt == "save":
             from marex_spark.sources.io import checkpoint_parquet
 
@@ -614,26 +616,24 @@ class Tracker:
             raw_area = raw_src.filter(F.col(self.extreme_col)).count()
 
         # hole/gap filling WITHOUT the area filter
-        saved_q, saved_a = self.area_filter_quartile, self.area_filter_absolute
+        saved = (
+            self.area_filter_quartile,
+            self.area_filter_absolute,
+            self.drop_first_object,
+        )
         self.area_filter_quartile, self.area_filter_absolute = 0.0, None
+        self.drop_first_object = False
         try:
             if self.unstructured_grid:
                 filled = self._preprocess_unstructured(raw_src)
             else:
-                filled = preprocess_extremes(
-                    self.data_bin,
-                    ny=self.ny or 0,
-                    nx=self.nx,
-                    r_fill=self.R_fill,
-                    t_fill=self.T_fill,
-                    area_quartile=0.0,
-                    wrap_x=not self.regional_mode,
-                    time_col=self.time_col,
-                    extreme_col=self.extreme_col,
-                    mask=self._valid_mask_df(),
-                )
+                filled = self._preprocess_gridded()
         finally:
-            self.area_filter_quartile, self.area_filter_absolute = saved_q, saved_a
+            (
+                self.area_filter_quartile,
+                self.area_filter_absolute,
+                self.drop_first_object,
+            ) = saved
         filled = filled.localCheckpoint()
 
         if self.unstructured_grid:
@@ -662,9 +662,7 @@ class Tracker:
         else:
             areas = object_areas(labels, time_col=self.time_col)
 
-        quartile = self.area_filter_quartile
-        if quartile is None and self.area_filter_absolute is None:
-            quartile = 0.5
+        quartile = self._area_quartile()
         if self.unstructured_grid:
             # the reference's mesh conventions (track.py:1812-1849):
             # count-based, strictly-above threshold, percentile (and
@@ -677,7 +675,7 @@ class Tracker:
             else:
                 thr = float(
                     eligible.agg(
-                        F.percentile("n_cells", F.lit(quartile or 0.0))
+                        F.percentile("n_cells", F.lit(quartile))
                     ).first()[0]
                 )
             # total_area_IDed / accepted_area_fraction are COUNT-based
@@ -706,7 +704,7 @@ class Tracker:
             else:
                 thr = float(
                     areas.agg(
-                        F.percentile("area", F.lit(quartile or 0.0))
+                        F.percentile("area", F.lit(quartile))
                     ).first()[0]
                 )
             # reference quirk (track.py:1891-1892): the kept set and its
@@ -747,9 +745,10 @@ class Tracker:
         form. ``checkpoint`` overrides the instance strategy for the
         preprocessing stage.
 
-        On the gridded path the area filter's labels feed tracking
-        directly by default (``fuse_labelling``), skipping the second
-        labelling pass."""
+        Unless a checkpoint strategy needs the boolean field on disk,
+        the area filter's labels feed tracking directly, skipping a
+        second labelling pass: event structure is identical, only the
+        arbitrary obj-id numbering differs."""
         if checkpoint:
             if checkpoint not in ("save", "load"):
                 raise ConfigurationError(
@@ -771,16 +770,18 @@ class Tracker:
         return res
 
     def _run_impl(self) -> TrackResult:
-        if self.unstructured_grid:
-            mesh_labels = None
-            cleaned = None
-            if self.fuse_labelling and self.checkpoint not in ("save", "load"):
-                mesh_labels = self._preprocess_unstructured(
+        labels = None
+        if self.checkpoint in ("save", "load"):
+            cleaned = self.run_preprocess()
+        else:
+            cleaned = self.data_bin.limit(0)  # unused when labels given
+            if self.unstructured_grid:
+                labels = self._preprocess_unstructured(
                     self._apply_mask(self.data_bin), return_labels=True
                 )
-                cleaned = self.data_bin.limit(0)
             else:
-                cleaned = self.run_preprocess()
+                labels = self._preprocess_gridded(return_labels=True)
+        if self.unstructured_grid:
             return track_events_unstructured(
                 cleaned,
                 self.edges,
@@ -793,34 +794,9 @@ class Tracker:
                 max_distance=self.max_distance,
                 merge_parallel=self.merge_parallel,
                 compact_ids=self.compact_ids,
-                labels=mesh_labels,
+                labels=labels,
             )
         gy = self._grid_y_with_area()
-        labels = None
-        ckpt = self.checkpoint in ("save", "load")
-        if self.fuse_labelling and not ckpt:
-            quartile = self.area_filter_quartile
-            if quartile is None and self.area_filter_absolute is None:
-                quartile = 0.5  # reference default
-            labels = preprocess_extremes(
-                self.data_bin,
-                ny=self.ny or 0,
-                nx=self.nx,
-                r_fill=self.R_fill,
-                t_fill=self.T_fill,
-                area_quartile=quartile or 0.0,
-                wrap_x=not self.regional_mode,
-                time_col=self.time_col,
-                extreme_col=self.extreme_col,
-                area_filter_absolute=self.area_filter_absolute,
-                return_labels=True,
-                connectivity=self.connectivity,
-                mask=self._valid_mask_df(),
-                drop_first_object=self.drop_first_object,
-            )
-            cleaned = self.data_bin.limit(0)  # unused when labels given
-        else:
-            cleaned = self.run_preprocess()
         res = track_events(
             cleaned,
             nx=self.nx,

@@ -12,7 +12,6 @@ PACKAGE = Path(__file__).resolve().parent.parent / "marex_spark"
 PINNED = {
     "MAREX_BAND_SHUFFLE_FACTOR",
     "MAREX_THR_CHUNK_MAX",
-    "MAREX_MORPH_BATCH_BOOLS",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
 }

@@ -92,8 +92,10 @@ def test_overlap_graph_is_single_data_shuffle(spark):
 
 
 def test_labelling_is_single_shuffle_per_pass(spark):
-    """M4 labelling: the mapInPandas kernel pass contains exactly one
-    Exchange (the time hash-partitioning); the offset join broadcasts."""
+    """M4 labelling: the mapInArrow kernel pass has one Exchange (the
+    time hash-partitioning) and is checkpointed; after it, the W6
+    offset suffix adds only metadata-sized exchanges and the labelled
+    cells join the offsets by broadcast."""
     from marex_spark.operators.label import label_components
     from marex_spark.sources.synthetic import synthetic_extremes_gridded
 

@@ -108,34 +108,40 @@ class TestRunParity:
     """tracker(...).run() must equal the functional pipeline it wraps."""
 
     def test_run_matches_functional_composition(self, spark):
+        """The facade reuses the area filter's labels as tracking input:
+        the same ids as preprocess_extremes(return_labels=True) handed
+        to track_events(labels=...)."""
         ext = synthetic_extremes_gridded(spark, n_time=10, ny=NY, nx=NX)
         t = tracker(
             ext, ny=NY, nx=NX, R_fill=2, T_fill=2,
             area_filter_quartile=0.25, allow_merging=False,
-            overlap_threshold=0.5, fuse_labelling=False,
+            overlap_threshold=0.5,
         )
         got = t.run().events
 
-        cleaned = preprocess_extremes(
+        labels = preprocess_extremes(
             ext, ny=NY, nx=NX, r_fill=2, t_fill=2, area_quartile=0.25,
             # the facade defaults to the reference's first-object-drop
             # quirk (track.py:1891-1892) — the composition must too
-            drop_first_object=True,
+            drop_first_object=True, return_labels=True,
         )
         # the facade's no-merge tracking uses the reference's 3-D
         # touch-linking semantics (link_adjacency), not the gated
         # exact-cell overlap form
         want = track_events(
-            cleaned, nx=NX, compute_stats=False, link_adjacency=True
+            ext.limit(0), nx=NX, compute_stats=False, link_adjacency=True,
+            labels=labels,
         ).events
 
-        g = got.groupBy("event_id").count().orderBy("event_id").collect()
-        w = want.groupBy("event_id").count().orderBy("event_id").collect()
-        assert [tuple(r) for r in g] == [tuple(r) for r in w]
+        cols = ["time", "y", "x", "obj_id", "event_id"]
+        g = sorted(map(tuple, got.select(*cols).collect()))
+        w = sorted(map(tuple, want.select(*cols).collect()))
+        assert g and g == w
 
     def test_fused_default_same_structure(self, spark):
-        """The default fused path: same cells, same event partition
-        structure as the two-pass form (ids renumber)."""
+        """Reusing the filter's labels gives the same cells and event
+        partition structure as relabelling the preprocessed field
+        (run_preprocess() + track_events); only the ids renumber."""
         from collections import defaultdict
 
         ext = synthetic_extremes_gridded(spark, n_time=10, ny=NY, nx=NX)
@@ -146,13 +152,16 @@ class TestRunParity:
                 groups[r.event_id].add((str(r.time), r.y, r.x))
             return frozenset(frozenset(v) for v in groups.values())
 
-        kw = dict(
-            ny=NY, nx=NX, R_fill=2, T_fill=2,
+        t = tracker(
+            ext, ny=NY, nx=NX, R_fill=2, T_fill=2,
             area_filter_quartile=0.25, allow_merging=False,
             overlap_threshold=0.5,
         )
-        fused = tracker(ext, **kw).run().events
-        two_pass = tracker(ext, fuse_labelling=False, **kw).run().events
+        fused = t.run().events
+        two_pass = track_events(
+            t.run_preprocess(), nx=NX, compute_stats=False,
+            link_adjacency=True,
+        ).events
         assert structure(fused) == structure(two_pass)
 
     def test_default_area_quartile_is_half(self, spark):

@@ -158,11 +158,12 @@ def test_unstructured_centroids_follow_path(spark, ring, two_blob_mesh):
 
 @pytest.mark.slow
 def test_label_kernel_matches_propagation(spark):
-    """The kernel tier (per-slice induced-subgraph union-find) must
-    produce identical global ids to the declarative min-label
-    propagation fixpoint — including on a high-diameter mesh (a ring),
-    where propagation needs O(diameter) rounds."""
+    """The per-slice induced-subgraph union-find must produce identical
+    global ids to the declarative min-label propagation fixpoint
+    (tests/reference/label.py) — including on a high-diameter mesh (a
+    ring), where propagation needs O(diameter) rounds."""
     from marex_spark.operators.label import label_components_unstructured
+    from tests.reference.label import label_unstructured_propagate
 
     n = 60
     cells = spark.range(n).select(F.col("id").cast("long").alias("cell"))
@@ -178,15 +179,11 @@ def test_label_kernel_matches_propagation(spark):
     ext = spark.createDataFrame(act, "t long, cell long, extreme boolean")
     a = {
         (r.t, r.cell, r.obj_id)
-        for r in label_components_unstructured(
-            ext, edges, time_col="t", method="kernel"
-        ).collect()
+        for r in label_components_unstructured(ext, edges, time_col="t").collect()
     }
     b = {
         (r.t, r.cell, r.obj_id)
-        for r in label_components_unstructured(
-            ext, edges, time_col="t", method="propagate"
-        ).collect()
+        for r in label_unstructured_propagate(ext, edges, time_col="t").collect()
     }
     assert a == b
     # day-2 arcs: exactly two components
