@@ -20,11 +20,13 @@ boolean matrix power (track.py:5422-5468); erosion is its dual.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from marex_spark.functions.temporal import epoch_day
 from marex_spark.operators import timeblocks
+from marex_spark.operators.label import label_slices_batch
 
 
 def disk_offsets(radius: int) -> list[tuple[int, int]]:
@@ -130,8 +132,6 @@ def _dilate_np(g, offsets, wrap_x: bool):
     default R=8), for the identical set union. Non-separable offset
     sets (never produced by disk_offsets) fall back to the plain
     shift-OR loop."""
-    import numpy as np
-
     R = max(max(abs(dy), abs(dx)) for dy, dx in offsets)
     ny, nx = g.shape[-2:]
     lead = g.shape[:-2]
@@ -189,6 +189,143 @@ def _erode_np(g, offsets, wrap_x: bool):
     return ~_dilate_np(~g, offsets, wrap_x)
 
 
+def _close_open_np(g, offsets, wrap_x: bool):
+    """Closing then opening of a dense slice stack by the SE offsets."""
+    closed = _erode_np(_dilate_np(g, offsets, wrap_x), offsets, wrap_x)
+    return _dilate_np(_erode_np(closed, offsets, wrap_x), offsets, wrap_x)
+
+
+def _close_open_cells(slices, ys, xs, radius, ny, nx, wrap_x, batch_cells):
+    """:func:`_close_open_np` on sparse cells sorted by slice, in dense
+    stacks of whole slices capped at ``batch_cells`` grid cells (at
+    least one slice)."""
+    offsets = disk_offsets(radius)
+    present, pos = np.unique(slices, return_inverse=True)
+    per_stack = max(1, batch_cells // (ny * nx))
+    out = []
+    for k0 in range(0, len(present), per_stack):
+        r0, r1 = np.searchsorted(pos, [k0, k0 + per_stack])
+        g = np.zeros((min(per_stack, len(present) - k0), ny, nx), dtype=bool)
+        g[pos[r0:r1] - k0, ys[r0:r1], xs[r0:r1]] = True
+        tt, yy, xx = np.nonzero(_close_open_np(g, offsets, wrap_x))
+        out.append((present[tt + k0], yy.astype(np.int32), xx.astype(np.int32)))
+    if not out:
+        return slices, ys, xs
+    return tuple(np.concatenate(parts) for parts in zip(*out))
+
+
+def _masked(valid, slices, ys, xs):
+    """Cells on valid grid points only; ``valid`` is a dense (rows, nx)
+    bool grid, rows past its end are invalid. ``None`` keeps all."""
+    if valid is None:
+        return slices, ys, xs
+    ok = ys < valid.shape[0]
+    ok[ok] = valid[ys[ok], xs[ok]]
+    return slices[ok], ys[ok], xs[ok]
+
+
+def _runs(start, n):
+    """Concatenated ``arange(start[i], start[i] + n[i])``."""
+    return np.repeat(start, n) + np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+
+
+def _gap_cells(days, own, slices, ys, xs, t_fill, nx):
+    """M3 on sparse cells (the numpy form of
+    :func:`fill_time_gaps_true_set`): per grid cell, the ≤ ``t_fill``
+    calendar days strictly between two consecutive True days, on the
+    own slices of those days. Days with no slice (missing from the
+    series) generate nothing."""
+    key = ys.astype(np.int64) * nx + xs
+    order = np.lexsort((slices, key))
+    k, d = key[order], days[slices[order]]
+    gap = d[1:] - d[:-1] - 1
+    (i,) = np.nonzero((k[1:] == k[:-1]) & (gap >= 1) & (gap <= t_fill))
+    g_day, g_key = _runs(d[i] + 1, gap[i]), np.repeat(k[i], gap[i])
+    # a day holds 0 (missing), 1 or, for sub-daily series, more slices
+    (own_idx,) = np.nonzero(own)
+    lo = np.searchsorted(days[own_idx], g_day, "left")
+    cnt = np.searchsorted(days[own_idx], g_day, "right") - lo
+    g_slices = own_idx[_runs(lo, cnt)]
+    g_key = np.repeat(g_key, cnt)
+    return g_slices, (g_key // nx).astype(np.int32), (g_key % nx).astype(np.int32)
+
+
+def _label_cells(slices, ys, xs, nx, connectivity, wrap_x, batch_cells):
+    """Per-slice ids 1..k of cells sorted by slice, by
+    :func:`label_slices_batch` over runs of whole slices capped at
+    ``batch_cells`` rows (ids do not depend on the runs)."""
+    ids = np.empty(len(slices), dtype=np.int32)
+    _, starts = np.unique(slices, return_index=True)
+    starts = np.r_[starts, len(slices)]
+    lo = 0
+    while lo < len(starts) - 1:
+        fit = int(np.searchsorted(starts, starts[lo] + batch_cells, "right")) - 1
+        hi = max(lo + 1, fit)
+        r0, r1 = starts[lo], starts[hi]
+        ids[r0:r1] = label_slices_batch(
+            slices[r0:r1], ys[r0:r1], xs[r0:r1], nx=nx,
+            connectivity=connectivity, wrap_x=wrap_x,
+        )
+        lo = hi
+    return ids
+
+
+def preprocess_block(
+    days, own, slices, ys, xs, *, ny, nx, r_fill, t_fill, wrap_x=True,
+    valid=None, connectivity=8, batch_cells,
+):
+    """The gridded preprocessing chain over one time block (the kernel
+    of ``track.preprocess_extremes``; reference run_preprocess,
+    track.py:1234-1368): close/open(R) → mask → gap fill (≤ ``t_fill``
+    days) → close/open(R // 2) → mask → per-slice labels.
+
+    Arguments follow ``timeblocks.map_time_blocks``: ``days``/``own``
+    per slice, ``slices``/``ys``/``xs`` per True input cell. ``valid``
+    is the dense mask grid of :func:`_masked`. Halo slices pass the
+    first close/open and the mask, then only feed the gap fill; the
+    output is own slices only: ``slices`` plus columns y, x,
+    ``local_id`` (1..k per slice), ``n_cells`` (the cell count of the
+    row's object, on every row) and ``head`` (true on one row per
+    object). Without ``t_fill`` the refill does not run (as in
+    the reference) and there is no halo. ``ny`` is only read when
+    ``r_fill`` > 0. ``batch_cells`` caps each dense stack (grid cells)
+    and labelling run (rows): the caller's
+    ``timeblocks.SLICE_BATCH_CELLS``."""
+    ys = ys.astype(np.int32, copy=False)
+    xs = xs.astype(np.int32, copy=False)
+    if r_fill > 0:
+        slices, ys, xs = _close_open_cells(
+            slices, ys, xs, r_fill, ny, nx, wrap_x, batch_cells
+        )
+    slices, ys, xs = _masked(valid, slices, ys, xs)
+    if t_fill > 0:
+        gs, gy, gx = _gap_cells(days, own, slices, ys, xs, t_fill, nx)
+        mine = own[slices]
+        slices = np.concatenate([slices[mine], gs])
+        order = np.argsort(slices, kind="stable")
+        slices = slices[order]
+        ys = np.concatenate([ys[mine], gy])[order]
+        xs = np.concatenate([xs[mine], gx])[order]
+        if r_fill > 1:
+            slices, ys, xs = _masked(
+                valid,
+                *_close_open_cells(
+                    slices, ys, xs, r_fill // 2, ny, nx, wrap_x, batch_cells
+                ),
+            )
+    ids = _label_cells(slices, ys, xs, nx, connectivity, wrap_x, batch_cells)
+    _, first, inv, counts = np.unique(
+        (slices.astype(np.int64) << 32) + ids,
+        return_index=True, return_inverse=True, return_counts=True,
+    )
+    head = np.zeros(len(slices), dtype=bool)
+    head[first] = True
+    return slices, {
+        "y": ys, "x": xs, "local_id": ids,
+        "n_cells": counts[inv].astype(np.int32), "head": head,
+    }
+
+
 def morph_close_open_blocked(
     true_cells: DataFrame,
     radius: int,
@@ -213,16 +350,12 @@ def morph_close_open_blocked(
     slices as fit ny·nx each into
     :data:`~marex_spark.operators.timeblocks.SLICE_BATCH_CELLS`, at
     least one."""
-    import numpy as np
-
     offsets = disk_offsets(radius)
 
     def close_open(slices, cols):
         g = np.zeros((slices[-1] + 1, ny, nx), dtype=bool)
         g[slices, cols["y"], cols["x"]] = True
-        closed = _erode_np(_dilate_np(g, offsets, wrap_x), offsets, wrap_x)
-        opened = _dilate_np(_erode_np(closed, offsets, wrap_x), offsets, wrap_x)
-        tt, yy, xx = np.nonzero(opened)
+        tt, yy, xx = np.nonzero(_close_open_np(g, offsets, wrap_x))
         return tt, {"y": yy.astype(np.int32), "x": xx.astype(np.int32)}
 
     return timeblocks.map_time_slices(
@@ -509,8 +642,6 @@ def morph_close_open_unstructured(
     parity. The default keeps the engine contract (one-directional
     edge tables welcome).
     """
-    import numpy as np
-
     n_edges = edges.count()
     if n_edges > max_driver_edges:
         raise ValueError(

@@ -1,11 +1,20 @@
-"""Time-slice runner for the per-slice numpy kernels, and the Arrow
-time codec the blocked detect shares with it.
+"""Time-slice and time-block runners for the per-slice numpy kernels,
+and the Arrow time codec the blocked detect shares with them.
 
 Morphology and labelling follow the reference's chunk → function →
 chunk ``apply_ufunc`` contract (track.py:1630-1634, 2007-2046): cells
 hash-partition by time, a numpy kernel runs over whole slices, and the
 time column goes back in its input type. :func:`map_time_slices` is
 that scaffold, written once.
+
+:func:`map_time_blocks` is its multi-day form for kernels that also
+look along the time axis (the fused preprocessing pass, whose gap fill
+spans ``T_fill`` days). Rows go to blocks of :data:`BLOCK_DAYS` epoch
+days; a row within ``halo_days`` of a block edge is also copied into
+the neighbouring block, so a block's kernel sees every day its own
+days depend on. The kernel computes halo days but emits only its own:
+partition-local work plus boundary reconciliation, as in REPOSE
+(ICDE 2021), with the halo as the reconciliation.
 """
 
 from __future__ import annotations
@@ -15,6 +24,9 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from marex_spark.functions.temporal import epoch_day
 
 # Work cap of one kernel call: a slice costs ny·nx in the dense
 # morphology stack, its row count in the sparse kernels. Sized for cache
@@ -22,6 +34,12 @@ from pyspark.sql import DataFrame
 # took 9.7-16.4 s/task with 64 MB stacks vs 1.8-2.6 s at 2 MB, same
 # outputs (OPTIMIZATION_r09.md).
 SLICE_BATCH_CELLS = 2_000_000
+
+# Epoch days per block of :func:`map_time_blocks`. Blocks, not slices,
+# are its unit of hash partitioning and kernel calls: 64 days keep a
+# block's rows small while the halo copies (2·halo_days per block) stay
+# a few percent of the rows.
+BLOCK_DAYS = 64
 
 
 def time_unit(ts_type: pa.DataType) -> tuple[str, bool]:
@@ -106,5 +124,100 @@ def map_time_slices(
     # all slices into one task and serialise the Python kernel
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(parallelism, time_col).mapInArrow(
+        _run, schema=f"{time_col} {time_type}, {schema}"
+    )
+
+
+def map_time_blocks(
+    df: DataFrame,
+    time_col: str,
+    keep_col: str,
+    halo_days: int,
+    kernel: Callable[..., tuple[np.ndarray, dict]],
+    schema: str,
+) -> DataFrame:
+    """Run ``kernel(days, own, slices, cols) -> (slices_out, cols_out)``
+    once per block of :data:`BLOCK_DAYS` epoch days, in one shuffle and
+    one ``mapInArrow`` pass.
+
+    Rows where ``keep_col`` is true are the data: each goes to its own
+    block and to every block whose days lie within ``halo_days`` of its
+    day (at most 3 blocks while ``halo_days`` ≤ :data:`BLOCK_DAYS`).
+    Every other row only makes its time known to its own block, so a
+    block knows all the series' time values on its days, data or not
+    (one distinct over those rows' times, which the optimizer drops
+    when ``keep_col`` is a literal true).
+
+    Per block the kernel gets ``days`` (epoch day of each slice, by
+    ascending time), ``own`` (slice lies in the block rather than its
+    halo), ``slices`` (slice index of each data row, ascending) and
+    ``cols`` (the data rows' other columns as numpy, ``keep_col``
+    excluded). It returns the slice index and the ``schema`` columns of
+    its output rows; the time column is prepended in its input type.
+    Kernels should emit own slices only, or halo rows come out twice."""
+    block = BLOCK_DAYS
+    data_cols = [c for c in df.columns if c not in (time_col, keep_col)]
+    epoch = epoch_day(time_col).cast("long")
+    keep = F.coalesce(F.col(keep_col), F.lit(False))
+    first_blk, last_blk = (
+        F.floor((epoch + d) / F.lit(block)).cast("long")
+        for d in (-halo_days, halo_days)
+    )
+    data = df.filter(keep).select(
+        F.explode(F.sequence(first_blk, last_blk)).alias("_blk"),
+        F.lit(True).alias("_data"),
+        time_col,
+        epoch.cast("int").alias("_day"),
+        *data_cols,
+    )
+    marks = (
+        df.filter(~keep)
+        .select(time_col)
+        .distinct()
+        .select(
+            F.floor(epoch / F.lit(block)).cast("long").alias("_blk"),
+            F.lit(False).alias("_data"),
+            time_col,
+            epoch.cast("int").alias("_day"),
+            *[F.lit(None).cast(df.schema[c].dataType).alias(c) for c in data_cols],
+        )
+    )
+    routed = data.unionByName(marks)
+
+    def _run(batches) -> Iterator[pa.RecordBatch]:
+        blist = [b for b in batches if b.num_rows]
+        if not blist:
+            return
+        tbl = pa.Table.from_batches(blist).combine_chunks()
+        ts_type = tbl.schema.field(time_col).type
+        t = time_to_int64(tbl[time_col])
+        blk = tbl["_blk"].to_numpy()
+        order = np.lexsort((t, blk))
+        t, blk = t[order], blk[order]
+        day = tbl["_day"].to_numpy()[order]
+        data = tbl["_data"].to_numpy()[order]
+        picked = pa.array(order[data])
+        cols = {c: tbl[c].take(picked).to_numpy() for c in data_cols}
+        n_data = np.r_[0, np.cumsum(data)]
+        bounds = np.r_[0, np.nonzero(np.diff(blk))[0] + 1, len(blk)]
+        for r0, r1 in zip(bounds[:-1], bounds[1:]):
+            ut, first, inv = np.unique(t[r0:r1], return_index=True, return_inverse=True)
+            days = day[r0:r1][first].astype(np.int64)
+            own = days // block == blk[r0]
+            d0, d1 = n_data[r0], n_data[r1]
+            out_slices, out = kernel(
+                days, own, inv[data[r0:r1]], {c: v[d0:d1] for c, v in cols.items()}
+            )
+            if not len(out_slices):
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [time_from_int64(ut[out_slices], ts_type)]
+                + [pa.array(v) for v in out.values()],
+                names=[time_col, *out],
+            )
+
+    time_type = df.schema[time_col].dataType.simpleString()
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    return routed.repartition(parallelism, "_blk").mapInArrow(
         _run, schema=f"{time_col} {time_type}, {schema}"
     )

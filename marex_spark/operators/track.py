@@ -48,37 +48,54 @@ def preprocess_extremes(
     mask: DataFrame | None = None,
     drop_first_object: bool = False,
 ) -> DataFrame:
-    """The tracker's run_preprocess (track.py:1234-1368): morphological
-    hole-filling (M1), temporal gap-filling (M3), then the small-object
-    filter (A11+P6) — by area QUARTILE (default) or an ABSOLUTE floor
-    (``area_filter_absolute``, the reference's regional-mode knob;
-    mutually exclusive with a non-zero quartile, and must be positive —
-    reference tests/test_track_edge_cases.py:551-605). Output: cleaned
-    boolean field; rows = input rows ∪ surviving cells. The input may
-    be a dense boolean field OR a sparse True-only set — the chain
-    runs on the True set and temporal gaps are GENERATED, not flipped,
-    so both densities produce the same surviving cells.
+    """The tracker's run_preprocess (track.py:1234-1368) on a grid, as
+    one pass over time blocks. Steps: closing/opening by disk(R)
+    (M1), mask, temporal gap fill (M3), closing/opening by disk(R // 2)
+    on the gap-filled field, mask, per-slice labelling (M4), then the
+    small-object filter (A11+P6). The filter works by area QUARTILE
+    (default) or by an ABSOLUTE floor (``area_filter_absolute``, the
+    reference's regional-mode knob). The two are mutually exclusive
+    unless the quartile is 0, and the floor must be positive (reference
+    tests/test_track_edge_cases.py:551-605).
 
-    ``mask`` (valid (y, x) rows): the reference applies the valid-cell
-    mask AFTER each spatial closing/opening, never to the input —
-    extremes on invalid cells (land) participate in the morphology
-    (bridging gaps, shoring up the opening) and are zeroed afterwards
-    (track.py:1671 is fill_holes' LAST step; data_bin is never
-    pre-masked). Masking the input instead measurably diverges on the
+    The input may be a dense boolean field OR a sparse True-only set:
+    the chain runs on the True cells, and gap days are GENERATED, not
+    flipped, so both densities give the same surviving cells. A gap
+    day must be a time value of the input (any row, True or not);
+    missing calendar days count towards a gap but are never generated.
+
+    ``mask`` (valid (y, x) rows) is collected once into a dense grid.
+    The reference applies it AFTER each closing/opening, never to the
+    input: extremes on invalid cells (land) take part in the
+    morphology and are zeroed afterwards (track.py:1671 is fill_holes'
+    LAST step). Masking the input instead measurably diverges on the
     reference's own fixture (tests/test_reference_parity.py).
 
-    ``return_labels=True`` returns LABELLED surviving cells
-    (time, y, x, obj_id) instead — the area filter already labels the
-    field, so handing its labels to ``track_events(labels=...)``
-    skips tracking's own labelling pass (one full shuffle + kernel
-    pass over all extreme cells saved; only obj-id numbering differs
-    from the two-pass form)."""
+    Plan: ``timeblocks.map_time_blocks`` sends the True cells to blocks
+    of ``timeblocks.BLOCK_DAYS`` days with a ``t_fill``-day halo, and
+    :func:`~marex_spark.operators.morphology.preprocess_block` runs the
+    whole chain per block in one ``mapInArrow`` pass. The halo makes
+    the gap fill exact: a gap of at most ``t_fill`` days never reaches
+    past it. The kernel output is checkpointed, then ONE aggregate over
+    the one-row-per-object heads returns the per-time max local id and
+    the percentile threshold. The driver turns the former into
+    exclusive-cumsum offsets (W6, track.py:2762-2766, over the
+    unfiltered objects, so obj_ids equal the staged chain's). A
+    map-side pass then drops small objects (and, with
+    ``drop_first_object``, obj_id 1, the reference's quirk at
+    track.py:1891-1892) and
+    adds the offsets. At most four Spark jobs run before the result is
+    consumed; nothing O(#objects) reaches the driver.
+
+    ``return_labels=True`` returns the LABELLED surviving cells
+    (time, y, x, obj_id), ready for ``track_events(labels=...)``.
+    Otherwise the output is the cleaned boolean field, whose rows are
+    the input rows ∪ the surviving cells. The staged reference this
+    pass must equal is ``tests/reference/preprocess.py``."""
     from marex_spark.exceptions import ConfigurationError
-    from marex_spark.operators.morphology import (
-        fill_time_gaps_true_set,
-        filter_small_objects,
-        morph_close_open_blocked,
-    )
+    from marex_spark.logging_config import get_logger
+    from marex_spark.operators import timeblocks
+    from marex_spark.operators.morphology import preprocess_block
 
     if area_filter_absolute is not None:
         if area_filter_absolute <= 0:
@@ -95,75 +112,154 @@ def preprocess_extremes(
                     "area_filter_absolute": area_filter_absolute,
                 },
             )
+    if r_fill > 0 and ny <= 0:
+        raise ConfigurationError(
+            "ny is required when r_fill > 0 (dense morphology kernel shape)",
+            details={"ny": ny, "r_fill": r_fill},
+        )
+    # the reference's filter runs even at quartile 0 (threshold = min
+    # area keeps everything): significant only for its first-object
+    # drop (track.py:1891-1892), which applies there too
+    by_quartile = area_filter_absolute is None and (
+        area_quartile > 0 or drop_first_object
+    )
+    labelled = return_labels or by_quartile or area_filter_absolute is not None
+    valid = _dense_mask(mask, ny, nx) if mask is not None else None
+    batch_cells = timeblocks.SLICE_BATCH_CELLS
 
-    # The whole chain runs on the TRUE SET only — closing/opening,
-    # temporal gap GENERATION (fill_time_gaps_true_set: gap rows are
-    # created, not flipped, so a sparse-True input gets the same
-    # temporal closing a dense field does) and the area filter are all
-    # fully determined by the True cells. No full-field joins between
-    # stages (the boolean form paid one per stage); the dense boolean
-    # output is reassembled once at the end when asked for.
-    def _mask(df):
-        if mask is None:
-            return df
-        keys = mask.select("y", "x")
-        return df.join(F.broadcast(keys), ["y", "x"], "leftsemi")
+    def kernel(days, own, slices, cols):
+        return preprocess_block(
+            days, own, slices, cols["y"], cols["x"], ny=ny, nx=nx,
+            r_fill=r_fill, t_fill=t_fill, wrap_x=wrap_x, valid=valid,
+            connectivity=connectivity, batch_cells=batch_cells,
+        )
 
-    d_true = extremes.filter(F.col(extreme_col)).select(time_col, "y", "x")
-    if r_fill > 0:
-        d_true = morph_close_open_blocked(
-            d_true, r_fill, ny, nx, wrap_x, time_col
+    cells = timeblocks.map_time_blocks(
+        extremes.select(time_col, "y", "x", extreme_col),
+        time_col,
+        extreme_col,
+        t_fill,
+        kernel,
+        "y int, x int, local_id int, n_cells int, head boolean",
+    )
+    record = {"block_days": timeblocks.BLOCK_DAYS, "halo_days": t_fill}
+    kept = cells.select(time_col, "y", "x")
+    if labelled:
+        kept, stats = _filter_and_number(
+            cells, time_col, area_quartile if by_quartile else None,
+            area_filter_absolute, drop_first_object,
         )
-    # fill_holes masks at its end even when R=0 skips the morphology
-    d_true = _mask(d_true)
-    if t_fill > 0:
-        d_true = fill_time_gaps_true_set(
-            d_true, t_fill, extremes, time_col, keys=("y", "x")
-        )
-        # re-fill spatial holes opened by the temporal closing with R/2
-        # (track.py:1717-1726), masked again at the stage's end
-        if r_fill > 1:
-            d_true = _mask(
-                morph_close_open_blocked(
-                    d_true, r_fill // 2, ny, nx, wrap_x, time_col
-                )
-            )
-    field = d_true.withColumn(extreme_col, F.lit(True))
-    labels = None
-    if area_filter_absolute is not None:
-        labels = filter_small_objects(
-            field, nx, 0.0, time_col, extreme_col, wrap_x,
-            min_area=area_filter_absolute, return_labels=True,
-            connectivity=connectivity, drop_first_object=drop_first_object,
-        )
-    elif area_quartile > 0 or drop_first_object:
-        # the reference's filter runs even at quartile 0 (threshold =
-        # min area keeps everything) — significant only for its
-        # first-object drop (track.py:1891-1892), which applies there
-        # too
-        labels = filter_small_objects(
-            field, nx, area_quartile, time_col, extreme_col, wrap_x,
-            return_labels=True, connectivity=connectivity,
-            drop_first_object=drop_first_object,
-        )
-    elif return_labels:
-        from marex_spark.operators.label import label_components
-
-        labels = label_components(
-            field, nx=nx, time_col=time_col, extreme_col=extreme_col,
-            wrap_x=wrap_x, connectivity=connectivity,
-        )
+        record.update(stats)
+    get_logger(__name__).debug(
+        "preprocess_extremes: fused time-block pass %s", record, extra=record
+    )
     if return_labels:
-        return labels
-    kept = labels.select(time_col, "y", "x") if labels is not None else d_true
+        return kept
     return (
         extremes.drop(extreme_col)
         .join(
-            kept.withColumn("_t", F.lit(True)), [time_col, "y", "x"], "full"
+            kept.select(time_col, "y", "x", F.lit(True).alias("_t")),
+            [time_col, "y", "x"],
+            "full",
         )
         .withColumn(extreme_col, F.coalesce(F.col("_t"), F.lit(False)))
         .drop("_t")
     )
+
+
+def _dense_mask(mask: DataFrame, ny: int, nx: int):
+    """Valid (y, x) rows → dense bool grid of ``max(ny, max y + 1)``
+    rows, collected once."""
+    import numpy as np
+
+    tbl = mask.select("y", "x").toArrow()
+    ys = tbl["y"].to_numpy().astype(np.int64)
+    xs = tbl["x"].to_numpy().astype(np.int64)
+    valid = np.zeros((max(ny, int(ys.max()) + 1 if len(ys) else 0), nx), dtype=bool)
+    valid[ys, xs] = True
+    return valid
+
+
+def _filter_and_number(
+    cells: DataFrame,
+    time_col: str,
+    quartile: float | None,
+    min_area: float | None,
+    drop_first: bool,
+) -> tuple[DataFrame, dict]:
+    """Labelled block-kernel rows → (surviving (time, y, x, obj_id),
+    record of the pass for the DEBUG log).
+
+    One aggregate over the head rows gives the per-time max local id
+    and, in quartile mode, the percentile of object cell counts (the
+    grand-total row of the rollup; the staged area filter runs the same
+    aggregate). An object's area is its cell count, so ``area >= thr`` is
+    ``n_cells >= thr``."""
+    import logging
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from marex_spark.functions.temporal import epoch_day
+    from marex_spark.logging_config import get_logger
+    from marex_spark.operators import timeblocks
+
+    cells = cells.localCheckpoint(eager=False)
+    heads = cells.filter(F.col("head"))
+    aggs = [
+        F.max("local_id").alias("max_id"),
+        F.max(epoch_day(time_col)).alias("day"),
+    ]
+    thr = None if min_area is None else float(min_area)
+    if quartile is not None:
+        area = F.col("n_cells").cast("double")
+        aggs.append(F.percentile(area, F.lit(quartile)).alias("thr"))
+        per_time = heads.rollup(time_col).agg(*aggs).toArrow()
+        is_total = pc.is_null(per_time[time_col])
+        total = per_time.filter(is_total)
+        per_time = per_time.filter(pc.invert(is_total))
+        thr = total["thr"][0].as_py() if total.num_rows else None
+    else:
+        per_time = heads.groupBy(time_col).agg(*aggs).toArrow()
+    codes = timeblocks.time_to_int64(per_time[time_col])
+    order = np.argsort(codes)
+    codes = codes[order]
+    max_id = per_time["max_id"].to_numpy().astype(np.int64)[order]
+    offsets = np.cumsum(max_id) - max_id
+
+    def number(batches):
+        for b in batches:
+            # a quartile threshold is None only when there are no rows
+            keep = np.ones(b.num_rows, dtype=bool)
+            if thr is not None:
+                keep = b.column("n_cells").to_numpy() >= thr
+            t = timeblocks.time_to_int64(b.column(time_col))
+            obj = b.column("local_id").to_numpy().astype(np.int64)
+            obj += offsets[np.searchsorted(codes, t)]
+            if drop_first:
+                keep &= obj != 1
+            rows = pa.array(np.nonzero(keep)[0])
+            yield pa.RecordBatch.from_arrays(
+                [b.column(c).take(rows) for c in (time_col, "y", "x")]
+                + [pa.array(obj).take(rows)],
+                names=[time_col, "y", "x", "obj_id"],
+            )
+
+    schema = (
+        f"{time_col} {cells.schema[time_col].dataType.simpleString()}, "
+        "y int, x int, obj_id long"
+    )
+    days = per_time["day"].to_numpy()
+    record = {
+        "blocks": len(np.unique(days // timeblocks.BLOCK_DAYS)),
+        "objects": int(max_id.sum()),
+        "area_threshold": thr,
+    }
+    if get_logger(__name__).isEnabledFor(logging.DEBUG):
+        # two extra jobs, only when the record is logged
+        record["objects_kept"] = heads.mapInArrow(number, schema=schema).count()
+    return cells.mapInArrow(number, schema=schema), record
 
 
 @dataclass

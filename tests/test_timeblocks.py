@@ -65,7 +65,8 @@ def mesh(spark, field):
 
 
 def _kernels(field, mesh):
-    """The four per-slice kernels, each on one input."""
+    """The four per-slice kernels and the fused preprocessing block
+    kernel, each on one input."""
     edges, active = mesh
     trues = field.filter("extreme").select("time", "y", "x")
     return {
@@ -74,6 +75,9 @@ def _kernels(field, mesh):
         "grid_labels": label_components(field, nx=NX),
         "mesh_labels": label_components_unstructured(
             active.withColumn("extreme", F.lit(True)), edges
+        ),
+        "preprocess": preprocess_extremes(
+            field, ny=NY, nx=NX, r_fill=2, t_fill=2, return_labels=True
         ),
     }
 
