@@ -14,6 +14,13 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Largest pair graph solved by driver union-find; above it the graph
+# stays distributed (connected_components_distributed /
+# _distributed_roots). Shared by the collecting solver and the merge
+# resolver engines, which hand back their link pairs as a DataFrame
+# past it.
+MAX_DRIVER_PAIRS = 50_000_000
+
 
 def _union_find(pairs: np.ndarray) -> dict[int, int]:
     """Classic union-find with path compression over int64 id pairs."""
@@ -41,7 +48,7 @@ def connected_components_driver(
     all_ids: DataFrame,
     id_col: str = "obj_id",
     compact: bool = True,
-    max_driver_pairs: int = 50_000_000,
+    max_driver_pairs: int | None = None,
     include_singletons: bool = True,
 ) -> DataFrame:
     """(obj_id → event_id) mapping: union-find on the collected pair
@@ -54,10 +61,11 @@ def connected_components_driver(
 
     Scale guard: the pair graph is normally orders of magnitude smaller
     than the cell data (one pair per object transition), but a
-    pathological field can blow it up — above ``max_driver_pairs`` the
-    collect would OOM the driver, so this hands off to the distributed
-    large-star/small-star solver (same mapping, compact=False
-    semantics: root = min member id).
+    pathological field can blow it up — above ``max_driver_pairs``
+    (default :data:`MAX_DRIVER_PAIRS`) the collect would OOM the
+    driver, so this hands off to the distributed large-star/small-star
+    solver (same mapping, compact=False semantics: root = min member
+    id).
 
     ``include_singletons=False`` (compact=False only) returns the
     SPARSE mapping — only ids that appear in a pair — skipping the
@@ -66,7 +74,6 @@ def connected_components_driver(
     reproduces the identity rows the dense mapping would carry. (The
     over-budget fallback may return a superset — identity rows are
     harmless to the coalesce.)"""
-    import pandas as pd
     from pyspark.storagelevel import StorageLevel
 
     if not include_singletons and compact:
@@ -74,13 +81,12 @@ def connected_components_driver(
             "include_singletons=False requires compact=False "
             "(dense_rank needs the full id set)"
         )
-    spark = pairs.sparkSession
     # persist across the size guard so the pair plan executes ONCE
     # (count for the guard, then either the Arrow collect or the
     # distributed solver read the cached rows)
     pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     n_pairs = pairs.count()
-    if n_pairs > max_driver_pairs:
+    if n_pairs > (MAX_DRIVER_PAIRS if max_driver_pairs is None else max_driver_pairs):
         # stay persisted: the iterative solver re-reads the pair graph
         # every round (the caller's session releases it on GC)
         if compact:
@@ -90,15 +96,40 @@ def connected_components_driver(
         return _distributed_roots(pairs, all_ids, id_col)
     pdf = pairs.select("id_t", "id_next").toPandas()  # Arrow transfer
     pairs.unpersist()
-    arr = pdf.to_numpy(dtype=np.int64).reshape(-1, 2)
-    mapping = _union_find(arr)
+    return mapping_from_pairs(
+        pdf.to_numpy(dtype=np.int64).reshape(-1, 2),
+        all_ids,
+        id_col=id_col,
+        compact=compact,
+        include_singletons=include_singletons,
+    )
+
+
+def mapping_from_pairs(
+    pairs: np.ndarray,
+    all_ids: DataFrame,
+    id_col: str = "obj_id",
+    compact: bool = True,
+    include_singletons: bool = True,
+) -> DataFrame:
+    """The driver half of :func:`connected_components_driver`: an int64
+    ``(n, 2)`` id-pair array already on the driver (the collected pair
+    DataFrame, or the merge resolver's link pairs) → the (obj_id →
+    event_id) mapping, with the same ``compact`` and
+    ``include_singletons`` semantics (``include_singletons=False``
+    needs ``compact=False``)."""
+    import pandas as pd
+
+    mapping = _union_find(pairs)
     map_pdf = pd.DataFrame(
         {
             id_col: np.fromiter(mapping.keys(), dtype=np.int64, count=len(mapping)),
             "root": np.fromiter(mapping.values(), dtype=np.int64, count=len(mapping)),
         }
     )
-    map_df = spark.createDataFrame(map_pdf, schema=f"{id_col} long, root long")
+    map_df = all_ids.sparkSession.createDataFrame(
+        map_pdf, schema=f"{id_col} long, root long"
+    )
     if not include_singletons:
         return map_df.select(id_col, F.col("root").alias("event_id"))
     full = (

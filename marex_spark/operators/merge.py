@@ -9,8 +9,12 @@ The per-timestep resolution loop is inherently sequential in time
 kernel runs over the *sparse* labelled cells (only extreme cells,
 id > 0), vectorised with numpy per transition, and only ever needs
 the previous block's last two slices plus the small props dicts.
-Everything before (labelling, morphology) and after (event-graph CC,
-remap, stats) stays distributed. Two engines run that one block
+Everything before (labelling, morphology) and after (remap, stats)
+stays distributed. The kernel also emits the post-resolution link
+graph — the overlap pairs of consecutive final slices, computed from
+the slices it already holds, as the reference links from its
+chunk-local overlaps (track.py:2396-2452, 2876-2883) — so event
+linking needs no Spark overlap join. Two engines run that one block
 kernel (:func:`_resolve_block`), mirroring the reference's two forms:
 
 - :func:`split_merge_events_chunked` — the serial chunk loop
@@ -32,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from marex_spark.logging_config import get_logger
+from marex_spark.operators import components
 
 _log = get_logger(__name__)
 
@@ -64,15 +69,48 @@ def _slice_overlaps(ids_a: dict, ids_b: dict) -> np.ndarray:
     ).astype(np.int64)
 
 
+def _overlap_keep(
+    overlap: np.ndarray, area_a: np.ndarray, area_b: np.ndarray, threshold: float
+) -> np.ndarray:
+    """M8 keep-mask: overlap / min(area_a, area_b) ≥ threshold in
+    float64 (enforce_overlap_threshold, track.py:2506-2552) — the same
+    division form as ``overlap.filter_overlap_fraction``, so resolver
+    and linker decide a boundary pair alike (the multiplied form
+    ``overlap ≥ θ·min`` drops 55/100 at θ = 0.55)."""
+    with np.errstate(divide="ignore"):
+        frac = overlap / np.minimum(area_a, area_b).astype(np.float64)
+    return frac >= threshold
+
+
 def _apply_threshold(pairs: np.ndarray, areas: dict, threshold: float) -> np.ndarray:
-    """M8 gate: overlap ≥ threshold · min(area_a, area_b)
-    (enforce_overlap_threshold, track.py:2506-2552)."""
+    """M8 gate over the resolver's live props: keep pairs with
+    overlap / min(area_a, area_b) ≥ threshold."""
     if len(pairs) == 0 or threshold <= 0:
         return pairs
     a0 = np.array([areas.get(int(i), 0) for i in pairs[:, 0]], dtype=np.float64)
     a1 = np.array([areas.get(int(i), 0) for i in pairs[:, 1]], dtype=np.float64)
-    keep = pairs[:, 2] >= threshold * np.minimum(a0, a1)
-    return pairs[keep]
+    return pairs[_overlap_keep(pairs[:, 2], a0, a1, threshold)]
+
+
+def _link_pairs(slices: list[dict], threshold: float) -> list[np.ndarray]:
+    """The post-resolution link graph of a run of consecutive FINAL
+    slices, one array of rows [id_t, id_next, overlap_cells] per pair
+    of neighbouring slices — what ``overlap_pairs`` + ``object_areas`` +
+    ``filter_overlap_fraction`` compute over the resolved labels, here
+    straight from the resolver's slices. An object's area is its cell
+    count in its own slice (objects live in one timestep); the gate
+    applies only when ``threshold > 0``, as in ``track_events``."""
+    out = []
+    counts = [np.unique(sl["id"], return_counts=True) for sl in slices]
+    for i in range(len(slices) - 1):
+        pairs = _slice_overlaps(slices[i], slices[i + 1])
+        if len(pairs) and threshold > 0:
+            (ua, ca), (ub, cb) = counts[i], counts[i + 1]
+            area_a = ca[np.searchsorted(ua, pairs[:, 0])]
+            area_b = cb[np.searchsorted(ub, pairs[:, 1])]
+            pairs = pairs[_overlap_keep(pairs[:, 2], area_a, area_b, threshold)]
+        out.append(pairs)
+    return out
 
 
 def _centroid(ys: np.ndarray, xs: np.ndarray, nx: int, wrap_x: bool) -> tuple[float, float]:
@@ -918,7 +956,7 @@ def split_merge_events_chunked(
     page_dir: str | None = None,
     mesh_adj: MeshAdj | None = None,
     ny: int = 0,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple:
     """Driver-paged merge resolution — the reference's chunk loop
     (track.py:3377-3420): pull one chunk of whole timesteps holding at
     most :data:`TARGET_BLOCK_CELLS` sparse cells at a time, resolve it
@@ -927,7 +965,15 @@ def split_merge_events_chunked(
     is O(chunk) instead of O(series), and chunk boundaries never change
     the output: it equals resolving the whole series in one block
     (asserted against tests/reference/merge.py in tests/test_merge.py).
-    Returns (relabelled labels, merge ledger) as DataFrames.
+    Returns ``(labels, ledger, link_pairs)``: the relabelled labels and
+    the merge ledger as DataFrames, and the post-resolution link graph
+    — (id_t, id_next) for every object pair overlapping between
+    consecutive final slices, gated by ``overlap_threshold`` like
+    ``overlap.filter_overlap_fraction`` — as an int64 ``(n, 2)`` array,
+    or as a DataFrame when it holds more than
+    ``components.MAX_DRIVER_PAIRS`` pairs. Each page adds its pairs
+    (the carry's last slice → its first slice, then slice → slice), so
+    ``track_events`` links events without rebuilding the overlaps.
 
     ``geometry="grid"`` takes (time, y, x, obj_id) labels: pixel
     centroids, wrapped-Euclidean partitioning. ``geometry="sphere"``
@@ -1039,6 +1085,7 @@ def split_merge_events_chunked(
     )
 
     out_frames: list[DataFrame] = []
+    links: list[np.ndarray] = [np.empty((0, 3), dtype=np.int64)]
     carry: list[tuple] = []  # [(time, slice)] — last two resolved slices
     if resume_state is not None:
         carry = list(resume_state["carry"])
@@ -1135,6 +1182,13 @@ def split_merge_events_chunked(
                 )
             slices, stimes = resolver.build_slices(pdf, time_col)
             _resolve_block(resolver, carry, slices, stimes)
+            links.extend(
+                _link_pairs(
+                    [sl for _, sl in carry[-1:]]
+                    + [slices[i] for i in range(len(stimes))],
+                    overlap_threshold,
+                )
+            )
 
             if grid:
                 chunk_pdf = pd.concat(
@@ -1208,12 +1262,20 @@ def split_merge_events_chunked(
         ledger = ledger.withColumn(
             time_col, F.timestamp_micros(F.col(time_col))
         )
+    link_pairs = np.concatenate(links)[:, :2]
+    if len(link_pairs) > components.MAX_DRIVER_PAIRS:
+        # past the driver union-find budget: track_events hands a
+        # DataFrame to the distributed solver
+        link_pairs = spark.createDataFrame(
+            pd.DataFrame(link_pairs, columns=["id_t", "id_next"]),
+            schema="id_t long, id_next long",
+        )
     if return_state:
         # timestamp carries stay in epoch micros — _to_epoch_micros
         # passes them through unchanged on the next resume
         state = {"carry": list(carry), "next_new_id": int(resolver.next_new_id)}
-        return out_df, ledger, state
-    return out_df, ledger
+        return out_df, ledger, link_pairs, state
+    return out_df, ledger, link_pairs
 
 
 def split_merge_events_parallel(
@@ -1232,7 +1294,7 @@ def split_merge_events_parallel(
     max_driver_cells: int | None = None,
     mesh_edges: DataFrame | None = None,
     ny: int = 0,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple:
     """Wall-clock-parallel merge resolution (the reference's batched
     iteration tier, track.py:3804-4814, re-expressed for Spark).
 
@@ -1270,9 +1332,17 @@ def split_merge_events_parallel(
     partitioning; NN partitioning hop-BFS over ``mesh_edges`` (cell,
     nbr) when given) — same Jacobi structure.
 
+    Returns ``(labels, ledger, link_pairs)`` like
+    :func:`split_merge_events_chunked`. Every full-output pass (round 0
+    and the post-convergence final pass, never a carries-only round)
+    also emits its block's link pairs (the converged carry's last slice
+    → the first slice, then slice → slice); they ride the ledger's one
+    collect and take the same id renumbering.
+
     Each call logs one DEBUG record (logger ``marex_spark.operators.
-    merge``) with the block count, the round count and the stale-block
-    count after each round.
+    merge``) with the block count, the round count, the stale-block
+    count after each round and the link-pair count
+    (``merge_link_pairs``).
     """
     grid = geometry == "grid"
     spark = labels.sparkSession
@@ -1426,6 +1496,14 @@ def split_merge_events_parallel(
                 else {"cell": 0, "lat": 0.0, "lon": 0.0}
             )
 
+        def _repeat_times(tsel: list, lens: list) -> np.ndarray:
+            if time_type.startswith("timestamp"):
+                # datetime64 column, not object: Arrow-serialising an
+                # object column of pd.Timestamp goes element by element
+                # — at 1.75M cells it was most of the full-output pass
+                return np.repeat(pd.DatetimeIndex(tsel).to_numpy(), lens)
+            return np.repeat(np.asarray(tsel, dtype=object), lens)
+
         frames = []
         if stimes:
             # ONE frame for all resolved cells (a frame per timestep
@@ -1440,15 +1518,9 @@ def split_merge_events_parallel(
                 if carries_only
                 else list(range(len(stimes)))
             )
-            lens = [len(slices[i]["id"]) for i in idxs]
-            tsel = [stimes[i] for i in idxs]
-            if time_type.startswith("timestamp"):
-                # datetime64 column, not object: Arrow-serialising an
-                # object column of pd.Timestamp goes element by element
-                # — at 1.75M cells it was most of the full-output pass
-                tvals = np.repeat(pd.DatetimeIndex(tsel).to_numpy(), lens)
-            else:
-                tvals = np.repeat(np.asarray(tsel, dtype=object), lens)
+            tvals = _repeat_times(
+                [stimes[i] for i in idxs], [len(slices[i]["id"]) for i in idxs]
+            )
             cat = {
                 k: np.concatenate([slices[i][k] for i in idxs])
                 for k in (("c1", "c2", "id") if grid else ("key", "c1", "c2", "id"))
@@ -1473,6 +1545,36 @@ def split_merge_events_parallel(
                     }
                 )
             )
+        if stimes and not carries_only:
+            # the link graph of the block's FINAL slices (kind 1, time =
+            # the later slice's): the carry's last slice → the first
+            # slice, then slice → slice. Full-output passes only: the
+            # carry is then the converged predecessor tail (a block
+            # never mutates its carry), so cross-block pairs are exact
+            chain = [sl for _, sl in carry[-1:]] + [
+                slices[i] for i in range(len(stimes))
+            ]
+            per_step = _link_pairs(chain, overlap_threshold)
+            links = np.concatenate([np.empty((0, 3), np.int64), *per_step])
+            if len(links):
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "block": b,
+                            "kind": 1,
+                            "seq": 0,
+                            "k": 0,
+                            time_col: _repeat_times(
+                                stimes[len(stimes) + 1 - len(chain) :],
+                                [len(p) for p in per_step],
+                            ),
+                            **_coords(),
+                            "obj_id": links[:, 0],
+                            "parent": links[:, 1],
+                            "overlap": links[:, 2],
+                        }
+                    )
+                )
         led = resolver.ledger
         for si in range(0 if carries_only else len(led.times)):
             n_par = len(led.parent_ids[si])
@@ -1640,18 +1742,6 @@ def split_merge_events_parallel(
             or not _same_carry(carry_in[b], carry_used[b])
         ]
         stale_log.append(len(stale))
-    _log.debug(
-        "split_merge_events_parallel: %d blocks, %d rounds, stale after "
-        "each round %s",
-        n_blocks,
-        len(stale_log),
-        stale_log,
-        extra={
-            "merge_blocks": n_blocks,
-            "merge_rounds": len(stale_log),
-            "merge_stale": list(stale_log),
-        },
-    )
     if stale:
         # invariant: block b is exact after <= b+1 rounds, so #blocks+1
         # rounds always converge — returning here would silently break
@@ -1687,9 +1777,23 @@ def split_merge_events_parallel(
         cached.append(ffresh)
         out = out.filter(~F.col("block").isin(final_blocks)).unionByName(ffresh)
 
-    # ---- renumber block-local new ids into the serial time-order counter
-    led_pdf = out.filter(F.col("kind") == 2).toPandas()
+    # ---- ONE job collects the ledger and the link graph; block-local
+    # new ids are then renumbered into the serial time-order counter.
+    # A link pair shares >= 1 cell of its later slice, so the pair count
+    # is bounded by the cell count: the driver-budget check costs a job
+    # only when the cells alone exceed the budget
+    links_df = out.filter(F.col("kind") == 1)
+    budget = components.MAX_DRIVER_PAIRS
+    n_links = links_df.count() if n_cells_total > budget else 0
+    over_budget = n_links > budget
+    col_pdf = (
+        out.filter(F.col("kind") >= (2 if over_budget else 1))
+        .select("block", "kind", "seq", "k", time_col, "obj_id", "parent", "overlap")
+        .toPandas()
+    )
+    led_pdf = col_pdf[col_pdf["kind"] == 2]
     led_pdf = led_pdf.sort_values(["block", "seq", "k"]).reset_index(drop=True)
+    link_pdf = col_pdf[col_pdf["kind"] == 1]
     child_arr = led_pdf["obj_id"].to_numpy(np.int64)
     # block offsets are ascending with block, local ids ascending with
     # creation order → ascending sort IS serial creation order
@@ -1708,25 +1812,59 @@ def split_merge_events_parallel(
         out_a[hit] = global_max + 1 + idx_c[hit]
         return out_a
 
-    out_cols = [time_col, *key_cols, "obj_id"]
-    cells_out = out.filter(F.col("kind") == 0).select(*out_cols)
-    if len(created):
-        map_df = F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "old": created,
-                        "new": global_max + 1 + np.arange(len(created)),
-                    }
+    def _renum_df(df: DataFrame, col: str) -> DataFrame:
+        """The same renumbering as a broadcast join on one id column."""
+        if not len(created):
+            return df
+        map_df = spark.createDataFrame(
+            pd.DataFrame(
+                {"_old": created, "_new": global_max + 1 + np.arange(len(created))}
+            ),
+            schema="_old long, _new long",
+        )
+        return (
+            df.join(F.broadcast(map_df), F.col(col) == F.col("_old"), "left")
+            .withColumn(col, F.coalesce("_new", col))
+            .select(*df.columns)
+        )
+
+    cells_out = _renum_df(
+        out.filter(F.col("kind") == 0).select(time_col, *key_cols, "obj_id"),
+        "obj_id",
+    )
+    if over_budget:
+        # stays distributed; checkpointed before the round caches go
+        link_pairs = _renum_df(
+            _renum_df(
+                links_df.select(
+                    F.col("obj_id").alias("id_t"), F.col("parent").alias("id_next")
                 ),
-                schema="old long, new long",
+                "id_t",
+            ),
+            "id_next",
+        ).localCheckpoint()
+    else:
+        link_pairs = np.column_stack(
+            (
+                _renum_arr(link_pdf["obj_id"].to_numpy(np.int64)),
+                _renum_arr(link_pdf["parent"].to_numpy(np.int64)),
             )
         )
-        cells_out = (
-            cells_out.join(map_df, cells_out["obj_id"] == map_df["old"], "left")
-            .withColumn("obj_id", F.coalesce("new", "obj_id"))
-            .select(*out_cols)
-        )
+        n_links = len(link_pairs)
+    _log.debug(
+        "split_merge_events_parallel: %d blocks, %d rounds, stale after "
+        "each round %s, %d link pairs",
+        n_blocks,
+        len(stale_log),
+        stale_log,
+        n_links,
+        extra={
+            "merge_blocks": n_blocks,
+            "merge_rounds": len(stale_log),
+            "merge_stale": list(stale_log),
+            "merge_link_pairs": n_links,
+        },
+    )
 
     ledger = MergeLedger([], [], [], [])
     if len(led_pdf):
@@ -1756,4 +1894,4 @@ def split_merge_events_parallel(
     inp0.unpersist()
     for bc in carry_bcs:
         bc.unpersist()
-    return cells_out, _ledger_df(spark, ledger, time_col, time_type)
+    return cells_out, _ledger_df(spark, ledger, time_col, time_type), link_pairs

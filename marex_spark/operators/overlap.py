@@ -1,6 +1,11 @@
-"""Temporal overlap graph (SURVEY J5 + M8) — the engine's load-bearing
-linking step (reference ``find_overlapping_objects`` track.py:2474-2504,
-overlap threshold track.py:2506-2552).
+"""Temporal overlap graph (SURVEY J5 + M8) in Spark (reference
+``find_overlapping_objects`` track.py:2474-2504, overlap threshold
+track.py:2506-2552): the linking step of no-merge tracking, of
+incremental extension (``track._extend_link``), of
+``rewind_track_run`` and of the queries. Merge-mode tracking does not
+run it: the split/merge resolver's kernel emits the same gated pairs
+from its final slices (``merge._link_pairs``, the same division-form
+gate), and the tests pin the two equal.
 
 Input: labelled field (time, <cell keys>, obj_id) — label_components
 output, which contains ONLY labelled (extreme) cells. Times are

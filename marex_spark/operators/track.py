@@ -1,21 +1,24 @@
 """Tracker orchestration (reference ``tracker(...).run()``,
 track.py:323-491/1162-1232).
 
-v1 implements the no-merge path end-to-end (SURVEY §7.1 milestone):
-label per timestep → temporal overlap graph → event components →
-remap → stats. Merge/split resolution (M9/M10) follows as the
-sequential driver loop documented in SURVEY §7.3.
+No-merge path: label per timestep → temporal overlap graph (Spark,
+operators/overlap.py) → event components → remap → stats. Merge path:
+label → split/merge resolver (operators/merge.py), whose kernel also
+emits the link graph of its final slices → event components → remap
+→ stats.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from marex_spark.operators.components import (
     connected_components_driver,
+    mapping_from_pairs,
     remap_ids,
     remap_ids_sparse,
 )
@@ -323,7 +326,14 @@ def track_events(
     (track.py:3337-3802): multi-parent children are partitioned among
     parents by nearest parent centroid, merges are recorded in the
     ledger (``extras["merge_ledger"]``), and partition-boundary
-    fragments are re-consolidated (M10) before event linking.
+    fragments are re-consolidated (M10) before event linking. Events
+    are linked from the link pairs the resolver kernel emits for its
+    final slices — the pairs, areas and gate ``overlap_pairs`` +
+    ``object_areas`` + ``filter_overlap_fraction`` would compute over
+    its output — so merge mode runs no Spark overlap chain: union-find
+    on the driver, then the remap. Past
+    ``components.MAX_DRIVER_PAIRS`` the pairs stay distributed and go
+    to the distributed solver.
 
     Two resolver engines produce the same labels and ledger:
     ``merge_parallel=True`` (default) resolves time blocks concurrently
@@ -357,6 +367,7 @@ def track_events(
         "overlap_threshold": overlap_threshold,
         "compact_ids": compact_ids,
     }
+    link_pairs = None
     if allow_merging:
         from marex_spark.operators.merge import (
             split_merge_events_chunked,
@@ -364,7 +375,7 @@ def track_events(
         )
 
         if merge_parallel:
-            labels, ledger = split_merge_events_parallel(
+            labels, ledger, link_pairs = split_merge_events_parallel(
                 labels,
                 nx=nx,
                 ny=ny,
@@ -378,7 +389,7 @@ def track_events(
                 max_driver_cells=max_driver_cells,
             )
         else:
-            labels, ledger = split_merge_events_chunked(
+            labels, ledger, link_pairs = split_merge_events_chunked(
                 labels,
                 nx=nx,
                 ny=ny,
@@ -406,26 +417,15 @@ def track_events(
             )
         from marex_spark.operators.overlap import adjacency_pairs
 
-        pairs = adjacency_pairs(
+        link_pairs = adjacency_pairs(
             labels, nx=nx, wrap_x=wrap_x, time_col=time_col,
             connectivity=connectivity,
         )
-    else:
-        pairs = overlap_pairs(labels, keys=("y", "x"), time_col=time_col)
-        if overlap_threshold > 0:
-            areas = object_areas(labels, time_col=time_col)
-            pairs = filter_overlap_fraction(pairs, areas, overlap_threshold)
-
-    if compact_ids:
-        mapping = connected_components_driver(pairs, labels, compact=True)
-        events = remap_ids(labels, mapping)
-    else:
-        # root-id numbering: the sparse mapping + coalescing remap skip
-        # the all-ids distinct pass over the cell table (identical rows)
-        mapping = connected_components_driver(
-            pairs, labels, compact=False, include_singletons=False
+    elif link_pairs is None:
+        link_pairs = _overlap_links(
+            labels, ("y", "x"), time_col, overlap_threshold
         )
-        events = remap_ids_sparse(labels, mapping)
+    events = _link_events(labels, link_pairs, compact_ids)
 
     ts_stats = life = None
     if compute_stats and grid_y is not None and grid_x is not None:
@@ -436,6 +436,39 @@ def track_events(
     return TrackResult(
         events=events, timestep_stats=ts_stats, lifetime_stats=life, extras=extras
     )
+
+
+def _overlap_links(
+    labels: DataFrame, keys: tuple, time_col: str, overlap_threshold: float
+) -> DataFrame:
+    """The Spark link graph (no-merge tracking and extension): overlap
+    pairs between consecutive steps, gated by the overlap fraction when
+    ``overlap_threshold > 0``."""
+    pairs = overlap_pairs(labels, keys=keys, time_col=time_col)
+    if overlap_threshold > 0:
+        areas = object_areas(labels, time_col=time_col)
+        pairs = filter_overlap_fraction(pairs, areas, overlap_threshold)
+    return pairs
+
+
+def _link_events(labels: DataFrame, pairs, compact_ids: bool) -> DataFrame:
+    """Event ids from a link graph: connected components, then the
+    remap. ``pairs`` is an (id_t, id_next) DataFrame, or the merge
+    resolver's int64 ``(n, 2)`` array, already on the driver (union-find
+    with no Spark job). ``compact_ids=False`` uses root-id numbering:
+    the sparse mapping + coalescing remap skip the all-ids distinct
+    pass over the cell table (identical rows)."""
+    if isinstance(pairs, np.ndarray):
+        mapping = mapping_from_pairs(
+            pairs, labels, compact=compact_ids, include_singletons=compact_ids
+        )
+    else:
+        mapping = connected_components_driver(
+            pairs, labels, compact=compact_ids, include_singletons=compact_ids
+        )
+    if compact_ids:
+        return remap_ids(labels, mapping)
+    return remap_ids_sparse(labels, mapping)
 
 
 def _mesh_timestep_stats(events, cell_geo, time_col: str):
@@ -504,6 +537,10 @@ def track_events_unstructured(
 
     ``labels``: pre-labelled (time, cell, obj_id) input (e.g. from the
     mesh area filter) — skips the labelling pass.
+
+    ``allow_merging=True`` links events from the resolver kernel's link
+    pairs, as :func:`track_events` does; no-merge tracking builds the
+    overlap graph in Spark.
     """
     from marex_spark.operators.label import label_components_unstructured
 
@@ -537,7 +574,7 @@ def track_events_unstructured(
         )
 
         if merge_parallel:
-            labels, ledger = split_merge_events_parallel(
+            labels, ledger, link_pairs = split_merge_events_parallel(
                 labels,
                 block_steps=merge_block_steps,
                 overlap_threshold=overlap_threshold,
@@ -552,7 +589,7 @@ def track_events_unstructured(
                 mesh_edges=edges if nn_partitioning else None,
             )
         else:
-            labels, ledger = split_merge_events_chunked(
+            labels, ledger, link_pairs = split_merge_events_chunked(
                 labels,
                 overlap_threshold=overlap_threshold,
                 time_col=time_col,
@@ -572,20 +609,9 @@ def track_events_unstructured(
         # parquet spill) — re-checkpointing here paid a second full
         # materialization of the cell set per tracking run
         extras["merge_ledger"] = ledger
-
-    pairs = overlap_pairs(labels, keys=("cell",), time_col=time_col)
-    if overlap_threshold > 0:
-        areas = object_areas(labels, time_col=time_col)
-        pairs = filter_overlap_fraction(pairs, areas, overlap_threshold)
-
-    if compact_ids:
-        mapping = connected_components_driver(pairs, labels, compact=True)
-        events = remap_ids(labels, mapping)
     else:
-        mapping = connected_components_driver(
-            pairs, labels, compact=False, include_singletons=False
-        )
-        events = remap_ids_sparse(labels, mapping)
+        link_pairs = _overlap_links(labels, ("cell",), time_col, overlap_threshold)
+    events = _link_events(labels, link_pairs, compact_ids)
 
     ts_stats = life = None
     if compute_stats and cell_geo is not None:
@@ -833,7 +859,7 @@ def _extend_resume_merge(
         "carry": [(c_times[i], c_slices[i]) for i in range(len(c_times))],
         "next_new_id": prior_max_id + 1,
     }
-    resolved, new_ledger = split_merge_events_chunked(
+    resolved, new_ledger, _ = split_merge_events_chunked(
         labels_new,
         nx=nx,
         ny=ny,
@@ -889,10 +915,7 @@ def _extend_link(
     cols = [time_col, *keys, "obj_id"]
     combined = boundary.select(*cols).unionByName(labels_new.select(*cols))
 
-    pairs = overlap_pairs(combined, keys=keys, time_col=time_col)
-    if overlap_threshold > 0:
-        areas = object_areas(combined, time_col=time_col)
-        pairs = filter_overlap_fraction(pairs, areas, overlap_threshold)
+    pairs = _overlap_links(combined, keys, time_col, overlap_threshold)
 
     # collapse boundary objects to their prior event id; new ids pass
     # through (broadcast: one slice's objects)

@@ -60,6 +60,14 @@ def get_spark(
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        # Whole-stage codegen cache (default 100 entries): one
+        # tracker run uses more distinct generated classes than that,
+        # so at the default every rerun in a session (Tracker.extend
+        # loops, streaming micro-batches, notebooks, benchmarks)
+        # recompiles them in Janino. A static conf, read at the JVM's
+        # first codegen: it only takes effect on the session that
+        # starts the JVM.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

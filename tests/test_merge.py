@@ -120,7 +120,7 @@ def test_parallel_matches_oneshot(spark, two_blob_field, block_steps):
 
     labels = label_components(two_blob_field, nx=NX)
     one, ledger_one = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
-    par, ledger_par = split_merge_events_parallel(
+    par, ledger_par, _ = split_merge_events_parallel(
         labels, nx=NX, block_steps=block_steps, overlap_threshold=0.5
     )
     a = {(r.time, r.y, r.x, r.obj_id) for r in one.collect()}
@@ -155,11 +155,11 @@ def test_three_tiers_agree_on_random_fields(spark, monkeypatch, seed, density):
     labels = label_components(field, nx=24)
     one, l1 = split_merge_reference(labels, nx=24, overlap_threshold=0.5)
     monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 100)
-    chk, l2 = M.split_merge_events_chunked(
+    chk, l2, _ = M.split_merge_events_chunked(
         labels, nx=24, overlap_threshold=0.5
     )
     assert len(chk.inputFiles()) >= 2  # really paged
-    par, l3 = M.split_merge_events_parallel(
+    par, l3, _ = M.split_merge_events_parallel(
         labels, nx=24, block_steps=5, overlap_threshold=0.5
     )
     a = sorted(map(tuple, one.collect()))
@@ -183,7 +183,7 @@ def test_chunked_matches_oneshot(spark, two_blob_field, monkeypatch):
     labels = label_components(two_blob_field, nx=NX)
     one, ledger_one = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
     monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 500)  # 242 cells/step
-    chk, ledger_chk = M.split_merge_events_chunked(
+    chk, ledger_chk, _ = M.split_merge_events_chunked(
         labels, nx=NX, overlap_threshold=0.5
     )
     assert len(chk.inputFiles()) >= 4
@@ -328,7 +328,7 @@ class TestSerialBudgetGuard:
         with pytest.raises(TrackingError, match="merge_parallel"):
             split_merge_events_chunked(labels, nx=16, max_driver_cells=10)
         # within budget: runs
-        out, _ = split_merge_events_chunked(
+        out, _, _ = split_merge_events_chunked(
             labels, nx=16, max_driver_cells=10**9
         )
         assert out.count() == labels.count()
@@ -359,7 +359,7 @@ def test_parallel_rounds_are_stale_only(spark, two_blob_field):
     log.addHandler(h)
     log.setLevel(logging.DEBUG)
     try:
-        split_merge_events_parallel(
+        _, _, link_pairs = split_merge_events_parallel(
             labels, nx=NX, block_steps=3, overlap_threshold=0.5,
             labels_materialized=True,
         )
@@ -376,6 +376,8 @@ def test_parallel_rounds_are_stale_only(spark, two_blob_field):
     assert all(0 < n < n_blocks for n in stale[:-1]), stale
     # the final stability check found nothing stale
     assert stale[-1] == 0, stale
+    # the record also carries the link-pair count the kernel emitted
+    assert rec.merge_link_pairs == len(link_pairs) > 0
 
 
 # ------------------------------------------------- reference-replay parity
@@ -486,20 +488,20 @@ def test_mesh_nn_hop_bfs_vs_geodesic(spark):
         + [(1, c, 3) for c in range(5)],
         "t long, cell long, obj_id long",
     )
-    out_hop, _ = resolve(mesh_edges=edges)
+    out_hop, *_ = resolve(mesh_edges=edges)
     got = {(r.t, r.cell): r.obj_id for r in out_hop.collect()}
     assert got[(1, 2)] == got[(1, 0)], got   # hop tie -> earlier parent A
     assert got[(1, 3)] == got[(1, 4)]
     assert got[(1, 0)] != got[(1, 3)]
 
-    out_geo, _ = resolve()
+    out_geo, *_ = resolve()
     got2 = {(r.t, r.cell): r.obj_id for r in out_geo.collect()}
     assert got2[(1, 2)] == got2[(1, 3)], got2  # geodesic -> parent B
 
     # max_distance=0 hops: BFS never expands past the seeded overlap
     # cells, so cell 2 takes the centroid fallback (track.py:5227-5238)
     # -> parent B (nearer centroid, lon ~15.5 vs A's ~5)
-    out_fb, _ = resolve(mesh_edges=edges, max_distance=0.0)
+    out_fb, *_ = resolve(mesh_edges=edges, max_distance=0.0)
     got3 = {(r.t, r.cell): r.obj_id for r in out_fb.collect()}
     assert got3[(1, 2)] == got3[(1, 3)], got3
 
@@ -526,7 +528,7 @@ def test_chunked_timestamp_tz_safe(spark, two_blob_field, monkeypatch):
         # a one-step cell budget over 10 steps -> 10 chunks >= 4:
         # pyarrow page fast path engaged
         monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 300)
-        chk, led_chk = M.split_merge_events_chunked(
+        chk, led_chk, _ = M.split_merge_events_chunked(
             labels, nx=NX, overlap_threshold=0.5,
             labels_materialized=True,
         )
@@ -641,7 +643,7 @@ def test_mesh_adj_broadcast_path_identical(spark, monkeypatch):
     ).localCheckpoint()
 
     def run_parallel():
-        out, led = mg.split_merge_events_parallel(
+        out, led, _ = mg.split_merge_events_parallel(
             labels, geometry="sphere", cell_geo=geo, block_steps=3,
             overlap_threshold=0.5, time_col="time",
             nn_partitioning=True, mesh_edges=edges,

@@ -139,6 +139,68 @@ def test_preprocess_runs_at_most_four_jobs(spark):
     assert max(status.getJobIdsForGroup()) - before <= 4
 
 
+def _merging_field(spark):
+    from marex_spark.sources.synthetic import synthetic_extremes_gridded
+
+    return synthetic_extremes_gridded(
+        spark, n_time=12, ny=16, nx=24, density=0.12, seed=11
+    ).localCheckpoint()
+
+
+@pytest.mark.parametrize(
+    "block_steps,max_jobs", [(None, 18), (4, 27)], ids=["one-block", "parallel"]
+)
+def test_merge_tracking_job_count(spark, block_steps, max_jobs):
+    """Merge-mode tracking links events from the resolver kernel's link
+    pairs: labelling, the resolver and the remap, with no Spark overlap
+    / areas / filter / components chain. Measured here: 18 jobs with
+    one block (the chunked engine), 27 with 4-step blocks (the parallel
+    engine, 3 blocks); the overlap chain it replaced cost 15 more in
+    each form."""
+    from marex_spark.operators.track import track_events
+
+    ext = _merging_field(spark)
+    status = spark.sparkContext.statusTracker()
+    before = max(status.getJobIdsForGroup(), default=-1)
+    res = track_events(
+        ext, nx=24, overlap_threshold=0.5, allow_merging=True,
+        compute_stats=False, merge_block_steps=block_steps,
+    )
+    assert res.events.collect()
+    assert max(status.getJobIdsForGroup()) - before <= max_jobs
+
+
+def test_warm_merge_tracking_does_not_recompile(spark):
+    """The session sizes Spark's whole-stage codegen cache past one
+    tracking run's generated classes, so a rerun in the same session
+    compiles (almost) nothing in Janino. At the default 100 entries a
+    warm ``tracker_run`` recompiled ~125 classes every run."""
+    from marex_spark.operators.track import track_events
+    from marex_spark.tracker import tracker
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    ext = _merging_field(spark)
+    gy = spark.range(16).select(F.col("id").cast("int").alias("y"), (F.col("id") * 5.0).alias("lat"))
+    gx = spark.range(24).select(F.col("id").cast("int").alias("x"), (F.col("id") * 15.0).alias("lon"))
+
+    def run():
+        tracker(
+            ext, ny=16, nx=24, R_fill=2, T_fill=2, area_filter_quartile=0.5,
+            allow_merging=True, overlap_threshold=0.5, grid_y=gy, grid_x=gx,
+            coordinate_units="degrees",
+        ).run().lifetime_stats.collect()
+        track_events(
+            ext, nx=24, overlap_threshold=0.5, allow_merging=True,
+            compute_stats=False, merge_block_steps=4,
+        ).events.collect()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    run()
+    first = compiles.getCount()
+    run()
+    assert compiles.getCount() - first <= 5
+
+
 def test_small_dim_joins_broadcast(spark):
     """Star-schema dimension joins pick broadcast strategies."""
     li = load_table(spark, SF, "lineitem")

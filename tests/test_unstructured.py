@@ -81,7 +81,7 @@ def test_unstructured_parallel_matches_serial(spark, ring, two_blob_mesh):
             geometry="sphere", cell_geo=geo,
         )
 
-    def rows(out, ledger):
+    def rows(out, ledger, *_):
         return (
             {(r.time, r.cell, r.obj_id) for r in out.collect()},
             [
@@ -126,7 +126,7 @@ def test_sphere_tiers_agree_on_random_mesh(spark, ring, seed):
         (r.time, tuple(r.parent_ids), tuple(r.child_ids)) for r in df.collect()
     ]
     for block_steps in (4, 14):  # 14 steps: one block -> chunked engine
-        par, l2 = split_merge_events_parallel(
+        par, l2, _ = split_merge_events_parallel(
             labels, block_steps=block_steps, overlap_threshold=0.5,
             geometry="sphere", cell_geo=geo,
         )

@@ -62,7 +62,7 @@ def gate(pairs: np.ndarray, props: dict, thr: float) -> np.ndarray:
     for p, c, o in pairs:
         if p in props and c in props:
             mn = min(props[p][0], props[c][0])
-            if o >= thr * mn:
+            if o / mn >= thr:
                 keep.append((p, c, o))
     return (
         np.array(keep, dtype=np.int64)
