@@ -8,7 +8,9 @@ ONE per-batch kernel (:func:`bloom_counts`) — a bitset built by one is
 probed identically by the others.
 
 Scale shape: the benchmark side is small by definition (an eval set),
-so it collapses to an (m,k)-derived bitset on the driver; the corpus
+so it collapses to an (m,k)-derived bitset on the driver in two Spark
+jobs (:func:`bloom_fit`: one kernel pass emitting distinct shingles
+and their md5 halves, a ``distinct``, one ``toArrow``); the corpus
 side is one ``mapInArrow`` pass (:func:`bloom_probe`) — zero-copy
 shingle spans over the Arrow text buffer, vectorised md5, k probes
 against the bitset packed 8:1 into a broadcast variable, and per-doc
@@ -102,48 +104,91 @@ def shingle_array(text_col, n: int = 5):
     )
 
 
+def shingle_hashes(text, n: int = 5):
+    """The benchmark-side kernel of :func:`bloom_fit`: ``(shingles,
+    h1, h2)`` for the pyarrow string array ``text`` — the distinct
+    n-word shingles of ``split(text, ' ')`` across the whole batch
+    (byte-exact, :func:`dedup_spans` over one group) as a pyarrow
+    large_string array gathered from their spans, and the two 60-bit
+    md5 halves of each (int64, not yet reduced mod m). Spark-free."""
+    import numpy as np
+    import pyarrow as pa
+
+    from marex_spark.operators.md5np import (
+        dedup_spans,
+        halves60,
+        md5_words,
+        shingle_spans,
+        string_spans,
+    )
+
+    data, offsets, valid = string_spans(text)
+    _, starts, lens = shingle_spans(data, offsets, valid, n)
+    w = md5_words(data, starts, lens)
+    keep = dedup_spans(data, np.zeros(len(lens), dtype=np.int64), starts, lens, w)
+    starts, lens = starts[keep], lens[keep]
+    h1, h2 = halves60(w[keep])
+    out_off = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=out_off[1:])
+    gather = np.arange(out_off[-1]) + np.repeat(starts - out_off[:-1], lens)
+    shingles = pa.Array.from_buffers(
+        pa.large_string(),
+        len(lens),
+        [None, pa.py_buffer(out_off), pa.py_buffer(data[gather])],
+    )
+    return shingles, h1, h2
+
+
 def bloom_fit(
     bench_docs: DataFrame, text_col: str = "text", n: int = 5
 ) -> tuple[bytes, int, int]:
     """Fold a benchmark corpus into a Bloom bitset: distinct n-gram
-    shingles → derived (m, k) → k salted probes per shingle → one
-    m-byte '0'/'1' bitset. Returns ``(bits, m, k)`` — ``bits`` is a
-    plain bytes value handed to :func:`bloom_probe` (batch) or to the
-    streaming gate. Two small jobs over the benchmark side only;
-    the corpus is never touched."""
-    sh = (
-        bench_docs.select(
-            F.explode(shingle_array(F.col(text_col), n)).alias("shingle")
-        )
-        .distinct()
-        # materialise the (small) distinct shingle set ONCE: the count
-        # and the position pass below otherwise each re-scan and
-        # re-shingle the benchmark docs (guide §1.2 — two full passes
-        # for one small intermediate)
-        .localCheckpoint()
-    )
-    m, k = bloom_geometry(sh.count())
-    h1, h2 = bloom_hash_cols(F.col("shingle"), m)
-    hs = sh.select(h1.alias("_h1"), h2.alias("_h2"))
-    pos = hs.select(
-        F.explode(
-            F.array(
-                *[
-                    bloom_pos_from_hashes(
-                        F.col("_h1"), F.col("_h2"), i, m
-                    )
-                    for i in range(k)
-                ]
-            )
-        ).alias("p")
-    ).distinct()
-    # vectorised scatter: a real benchmark sets ~10^7 positions
-    # (m=2^24), where a Python per-element loop costs seconds
-    import numpy as np
+    shingles → derived (m, k) → k probes per shingle → one m-byte
+    '0'/'1' bitset. Returns ``(bits, m, k)`` — ``bits`` is a plain
+    bytes value handed to :func:`bloom_probe` (batch) or to the
+    streaming gate. The corpus is never touched.
 
+    Plan: ONE ``mapInArrow`` (:func:`shingle_hashes`) emits each
+    batch's distinct shingles with their md5 halves, a ``distinct`` on
+    the shingle keeps n exact, and one ``toArrow`` brings the (h1, h2)
+    pairs to the driver — two Spark jobs. The driver derives
+    :func:`bloom_geometry` from n and sets the k positions
+    ``(h1 + i·h2) mod m`` in numpy.
+
+    Size: m is the power of two ≥ 10n, so m ≤ 20n. The driver holds
+    the m-byte '0'/'1' form and 16 bytes of hashes per shingle;
+    :func:`bloom_probe` broadcasts m/8 bytes (≤ 2.5 bytes per benchmark
+    shingle). At n = 10^7: m = 2^27, k = 9, a 128 MiB bitset on the
+    driver and a 16 MiB broadcast. Nothing clamps m: past ~10^8
+    shingles (m = 2^30, a 1 GiB driver bitset, 128 MiB per executor)
+    the benchmark no longer fits the small-side design and should be
+    probed by a shingle join instead."""
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pyarrow as pa
+
+    def _shingles(batches) -> Iterator:
+        for batch in batches:
+            sh, h1, h2 = shingle_hashes(batch.column(text_col), n)
+            if len(sh):
+                yield pa.RecordBatch.from_arrays(
+                    [sh, pa.array(h1), pa.array(h2)], names=["shingle", "h1", "h2"]
+                )
+
+    hs = (
+        bench_docs.select(text_col)
+        .mapInArrow(_shingles, schema="shingle string, h1 long, h2 long")
+        .distinct()
+        .select("h1", "h2")
+        .toArrow()
+    )
+    m, k = bloom_geometry(hs.num_rows)
+    h1 = hs.column("h1").to_numpy() % m
+    h2 = hs.column("h2").to_numpy() % m
     bits = np.full(m, ord("0"), dtype=np.uint8)
-    p = pos.toPandas()["p"].to_numpy(dtype=np.int64)
-    bits[p] = ord("1")
+    for i in range(k):
+        bits[(h1 + i * h2) % m] = ord("1")
     return bits.tobytes(), m, k
 
 
@@ -199,8 +244,10 @@ def bloom_probe(
     (batch or streaming) against the '0'/'1' bitset ``bits`` (m =
     ``len(bits)``) — one ``mapInArrow`` running :func:`bloom_counts`
     per Arrow batch. The bitset ships packed 8:1 once as a broadcast
-    variable (m/8 bytes); the plan has no join, no exchange and no
-    state, so on a stream every micro-batch is append-safe."""
+    variable (m/8 bytes, 16 MiB at n = 10^7 benchmark shingles; see
+    :func:`bloom_fit` for the ceiling); the plan has no join, no
+    exchange and no state, so on a stream every micro-batch is
+    append-safe."""
     from collections.abc import Iterator
 
     import numpy as np

@@ -6,7 +6,7 @@ Reference shape: Manku, Jain & Das Sarma, "Detecting Near-Duplicates
 for Web Crawling" (WWW 2007) — the Google production setting is 64-bit
 fingerprints with a hamming-distance gate of 3 and candidate
 generation by exact match on fingerprint SLICES (their permuted-table
-scheme; here the equivalent pigeonhole band join). The r7 verdict
+scheme; here the equivalent pigeonhole band buckets). The r7 verdict
 flagged the previous 16-bit/4-bit-band geometry as quadratic at scale
 (every 4-bit band bucket goes corpus-hot); this module is the 64-bit
 rebuild.
@@ -23,22 +23,27 @@ Scale shape:
   Arrow batch) — token spans over the batch's string buffer, one
   vectorised md5 per word, exact per-doc vote counts. Zero exchanges
   and no word explode; batch and stream run the same kernel.
-- Pair generation: per-band equi-join on 16-bit keys (65,536 values
-  per band × 4 bands). Buckets are only hot where the corpus really
-  contains mass near-duplicates; for those, ``star_cap`` switches the
-  bucket from clique expansion (O(d²) pairs) to hub→member star
-  expansion (O(d) pairs, hub = min id) — union-find canonicalisation
-  connects the identical component either way. The cap condition is
-  ``n <= cap OR a.id = hub``: since the hub is the bucket's minimum id
-  and the join already requires ``a.id < b.id``, star pairs are the
-  hub-anchored subset of the clique, so the capped output is always a
-  subset of the uncapped one.
+- Pair generation: one grouping of the band slices by their 16-bit
+  keys (65,536 values per band × 4 bands), each bucket expanded in id
+  order in place — ONE exchange, then the hamming gate and a
+  ``distinct`` across bands. Buckets are only hot where the corpus
+  really contains mass near-duplicates; for those, ``star_cap``
+  switches the bucket from clique expansion (O(d²) pairs) to
+  hub→member star expansion (O(d) pairs, hub = min id) — union-find
+  canonicalisation connects the identical component either way. The
+  cap condition is ``n <= cap OR a.id = hub``: since the hub is the
+  bucket's minimum id and every pair has ``a.id < b.id``, star pairs
+  are the hub-anchored subset of the clique, so the capped output is
+  always a subset of the uncapped one. A bucket of d members holds
+  O(d) memory in one task whichever form it takes.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from marex_spark.operators.lsh import bucket_pairs
 
 
 def simhash_batch(text, bits: int = 64):
@@ -180,7 +185,7 @@ def simhash_bands(
 ) -> DataFrame:
     """``(doc_id, fp, band, key)`` — one row per fingerprint slice,
     keys extracted sign-safely (shift + AND-mask; bit 63 makes the
-    BIGINT negative). This is both the pair-join input and the static
+    BIGINT negative). This is both the pair-bucket input and the static
     corpus INDEX layout the streaming gate probes (at 100 TB it lives
     as a parquet table keyed by (band, key))."""
     mask = (1 << band_bits) - 1
@@ -215,50 +220,31 @@ def simhash_band_pairs(
     fp_name: str = "simhash",
 ) -> DataFrame:
     """``(doc_a, doc_b, hamming)`` — all pairs at hamming distance ≤
-    ``max_hamming``, generated by the pigeonhole band join (complete
-    by construction when ``bands > max_hamming``) and verified with
-    one xor+bit_count per candidate. ``star_cap`` bounds hot-bucket
-    blowup: buckets above the cap emit only hub-anchored pairs (see
-    module docstring for why the capped output is a subset).
+    ``max_hamming``, generated from the pigeonhole band buckets
+    (complete by construction when ``bands > max_hamming``) and
+    verified with one xor+bit_count per candidate. ``star_cap`` bounds
+    hot-bucket blowup: buckets above the cap emit only hub-anchored
+    pairs (see module docstring for why the capped output is a subset).
 
-    The fingerprint input is ``localCheckpoint``-ed first (r10): the
-    plan references it two or three times (both join sides + the
-    bucket-size aggregate) and exchange reuse does NOT cover it — the
-    1M-doc row's plan showed 6 parquet scans, i.e. the fingerprint
-    computation ran once per reference. The checkpoint is one
-    (id, fp) row per doc — tiny next to the corpus at any scale —
-    and cut the row 9.8 → 6.4 s on its own."""
+    Plan: the band slices, ONE grouping exchange by ``(band, key)``
+    that expands each bucket in id order (operators/lsh.py
+    ``bucket_pairs``; the cap is applied in the same pass, no
+    bucket-size join), the hamming gate, then the ``distinct`` across
+    bands. The fingerprints are read once, so they need no
+    checkpoint."""
     _check_banding(bands, band_bits, max_hamming)
-    fps = fps.localCheckpoint()
     banded = simhash_bands(fps, bands, band_bits, id_col, fp_name)
-    a, b = banded.alias("a"), banded.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    pairs = bucket_pairs(banded, ["band", "key"], ["doc_id", "fp"], star_cap)
+    hamming = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
+    return (
+        pairs.select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            hamming.cast("long").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
-    if star_cap is not None:
-        bsize = banded.groupBy("band", "key").agg(
-            F.count("*").alias("n"), F.min("doc_id").alias("hub")
-        )
-        joined = joined.join(
-            bsize.alias("s"),
-            (F.col("s.band") == F.col("a.band"))
-            & (F.col("s.key") == F.col("a.key")),
-        ).filter(
-            (F.col("s.n") <= star_cap) | (F.col("a.doc_id") == F.col("s.hub"))
-        )
-    cand = joined.select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.fp").alias("ha"),
-        F.col("b.fp").alias("hb"),
-    ).distinct()
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.select(
-        "doc_a", "doc_b", hamming.cast("long").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def simhash_band_pairs_sql(

@@ -344,6 +344,13 @@ def track_events(
     (split_merge_events_chunked; driver memory O(one cell-budgeted
     page), ``max_driver_cells`` caps a page).
     """
+    if link_adjacency and allow_merging:
+        from marex_spark.exceptions import ConfigurationError
+
+        raise ConfigurationError(
+            "link_adjacency applies to no-merge tracking only "
+            "(merge-mode transitions are exact-cell overlap)",
+        )
     if labels is None:
         labels = label_components(
             extremes,
@@ -408,13 +415,6 @@ def track_events(
         extras["merge_ledger"] = ledger
 
     if link_adjacency:
-        if allow_merging:
-            from marex_spark.exceptions import ConfigurationError
-
-            raise ConfigurationError(
-                "link_adjacency applies to no-merge tracking only "
-                "(merge-mode transitions are exact-cell overlap)",
-            )
         from marex_spark.operators.overlap import adjacency_pairs
 
         link_pairs = adjacency_pairs(

@@ -1,10 +1,19 @@
 """Deduplication suite over the `documents` table (training-data pipeline
 operators, SURVEY §7.4): exact hash dedup, n-gram Jaccard near-dup,
-MinHash+LSH banding, SimHash.
+MinHash+LSH banding, SimHash, Bloom decontamination.
 
 Cross-engine determinism: all hashing is md5-based (identical lowercase
 hex in Spark and DuckDB); hex→int via Spark ``conv(…,16,10)`` /
 DuckDB ``CAST('0x…' AS BIGINT)`` on 15 hex chars (fits int64).
+
+The near-dup and decontamination queries run the Arrow text kernels
+(operators/lsh.py, operators/simhash.py, operators/dedup.py): one
+kernel pass per operator plus at most one grouping exchange. MinHash
+bands are map-only; LSH and SimHash pairs group the band rows by
+(band, key) once and expand each bucket in id order (hub→member above
+the star cap), then take the pair ``distinct``; the Bloom fit is one
+kernel pass, a shingle ``distinct`` and one ``toArrow``. The DuckDB
+oracles below replay the same values with joins.
 """
 
 from __future__ import annotations
@@ -12,6 +21,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from marex_spark.functions.decimals import dec_sql
+from marex_spark.operators.lsh import (
+    _BAND_ROWS,
+    _MH_A,
+    _MH_B,
+    _MH_P,
+    _N_HASH,
+    bucket_pairs,
+    minhash_band_rows,
+)
 from marex_spark.queries.registry import register, round6, round6_sql
 from marex_spark.sources.parquet import load_table
 
@@ -20,22 +38,20 @@ from marex_spark.sources.parquet import load_table
 _WORDS_SQL = "string_split(text, ' ')"
 
 
-def _shingles(df, n: int = 3, distinct: bool = True):
-    """n-word shingles per doc (1-based element_at on both sides).
-    ``distinct=True`` is the set semantics Jaccard-style consumers
-    need — it costs a corpus-wide (doc_id, shingle) exchange. Pass
-    ``distinct=False`` when the consumer is invariant to duplicates
-    (idempotent aggregates like MinHash's ``min``): the explode then
-    feeds the next aggregation map-side with NO exchange of its own."""
+def _shingles(df, n: int = 3):
+    """Distinct n-word shingles per doc (1-based element_at on both
+    sides) — the set semantics Jaccard-style consumers need; it costs a
+    corpus-wide (doc_id, shingle) exchange."""
     words = F.split(F.col("text"), " ")
     idx = F.when(
         F.size(words) >= n, F.sequence(F.lit(1), F.size(words) - (n - 1))
     ).otherwise(F.array().cast("array<int>"))
     parts = [F.element_at(F.col("w"), F.col("i") + j) for j in range(n)]
-    out = df.select("doc_id", words.alias("w"), F.explode(idx).alias("i")).select(
-        "doc_id", F.concat_ws(" ", *parts).alias("shingle")
+    return (
+        df.select("doc_id", words.alias("w"), F.explode(idx).alias("i"))
+        .select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
+        .distinct()
     )
-    return out.distinct() if distinct else out
 
 
 def _shingles_sql(n: int = 3) -> str:
@@ -135,17 +151,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 # ----------------------------------------------------------- MinHash + LSH
 
-_N_HASH = 8
-_BAND_ROWS = 2  # 4 bands × 2 rows
-# Universal-hash family over a Mersenne-ish prime: one md5 per shingle
-# (parsed to int64), then the 8 permutations are integer multiply-adds —
-# 8× cheaper than 8 salted md5s of the shingle STRING, and the same
-# arithmetic evaluates identically in Spark and DuckDB (operands stay
-# under 2^62, so neither engine's overflow behaviour is reached).
-_MH_P = 2_147_483_647  # 2^31 - 1
-_MH_A = [1_103_515_245, 22_695_477, 214_013, 69_069, 75, 1_664_525, 48_271, 16_807]
-_MH_B = [12_345, 1, 2_531_011, 362_437, 74, 1_013_904_223, 37, 17]
-
+# The MinHash family and band geometry (_N_HASH, _BAND_ROWS, _MH_P,
+# _MH_A, _MH_B) live with the kernel in operators/lsh.py; the DuckDB
+# replays below are generated from the same constants.
 
 _LSH_PAIRS_SQL = f"""WITH sh AS ({_shingles_sql(3)}),
         si AS (
@@ -172,59 +180,26 @@ _LSH_PAIRS_SQL = f"""WITH sh AS ({_shingles_sql(3)}),
 
 
 def _lsh_bands(docs):
-    """(doc_id, band, band_key) LSH banding table: one md5 per shingle
-    → int64, universal-hash permutations (integer multiply-add mod
-    2^31-1), _BAND_ROWS rows per band. Shared by the clique- and
-    star-expansion candidate generators.
+    """(doc_id, band, band_key) LSH banding table: one ``mapInArrow``
+    running the MinHash kernel (operators/lsh.py
+    ``minhash_bands_batch``) — shingle spans, md5 → int64, the
+    universal-hash minima and the md5 band keys, all per Arrow batch.
+    Map-only: the plan has no exchange. Value-identical to the
+    oracle's replay: same minima, same 'm_{2b},m_{2b+1}' md5 input
+    strings (the JVM expression form is the equality reference in
+    tests/reference/minhash.py)."""
+    return minhash_band_rows(docs, "text", ["doc_id"])
 
-    Shape: ONE map-side-combined aggregation computes all {_N_HASH}
-    signature minima as columns of a single groupBy(doc_id) — no
-    posexplode row blowup before the shuffle and no second
-    per-(doc, band) exchange (the earlier form paid both: 8× the
-    pre-agg rows, then a groupBy(doc_id, h) AND a groupBy(doc_id,
-    band)). Band keys are then pure codegen over the minima columns,
-    and the 4-rows-per-doc band explode happens POST-aggregation.
-    Value-identical to the oracle's two-step replay: same minima,
-    same 'm_{{2b}},m_{{2b+1}}' md5 input strings. The shingles are NOT
-    pre-deduplicated: ``min`` is idempotent, so duplicate shingles
-    cannot change any signature minimum, and skipping the set-building
-    removes the (doc_id, shingle) exchange entirely — the whole
-    banding is scan → project → ONE exchange."""
-    sh = _shingles(docs, 3, distinct=False)
-    si = sh.select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-            % _MH_P
-        ).alias("s"),
-    )
-    mins = si.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("s") * _MH_A[h] + _MH_B[h]) % _MH_P).alias(f"m{h}")
-            for h in range(_N_HASH)
-        ]
-    )
-    n_bands = _N_HASH // _BAND_ROWS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"m{b * _BAND_ROWS + r}").cast("string")
-                            for r in range(_BAND_ROWS)
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return mins.select("doc_id", F.explode(bands).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.band_key").alias("band_key")
-    )
+
+def _lsh_pairs(docs, star_cap=None):
+    """Distinct (doc_a, doc_b) docs sharing a band bucket: the bands,
+    ONE grouping exchange by (band, band_key) that expands each bucket
+    in id order (``bucket_pairs``; hub→member only above ``star_cap``),
+    then the ``distinct`` across bands."""
+    pairs = bucket_pairs(_lsh_bands(docs), ["band", "band_key"], ["doc_id"], star_cap)
+    return pairs.select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).distinct()
 
 
 @register(
@@ -232,25 +207,11 @@ def _lsh_bands(docs):
     f"{_LSH_PAIRS_SQL} SELECT doc_a, doc_b FROM pairs",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH near-dup candidates: banding via _lsh_bands,
-    candidate pairs = docs sharing a band bucket (clique expansion).
-    Banding join scales as O(candidates), not O(n²); the skew-guarded
-    star form is dedup_lsh_star_capped."""
-    docs = load_table(spark, sf_dir, "documents")
-    bands = _lsh_bands(docs)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
+    """MinHash+LSH near-dup candidates: docs sharing a band bucket
+    (clique expansion). Scan → kernel → one grouping exchange → the
+    pair distinct: O(candidates), not O(n²); the skew-guarded star
+    form is dedup_lsh_star_capped."""
+    return _lsh_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # LSH skew guard: a band bucket holding d docs (mass-duplicated
@@ -293,40 +254,11 @@ def dedup_lsh_star_capped(spark, sf_dir):
     the hub connects every member — so the scale path composes with
     dedup_cluster_canonical unchanged; pairwise-Jaccard verification
     pipelines should keep the clique form on the capped buckets they
-    can afford. The cap is deliberately tiny here so the star path is
-    exercised on the test corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    bands = _lsh_bands(docs)
-    bsize = bands.groupBy("band", "band_key").agg(
-        F.count("*").alias("n"), F.min("doc_id").alias("hub")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    small = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .join(
-            bsize.filter(F.col("n") <= _STAR_CAP).alias("s"),
-            (F.col("s.band") == F.col("a.band"))
-            & (F.col("s.band_key") == F.col("a.band_key")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    star = (
-        bsize.filter(F.col("n") > _STAR_CAP)
-        .alias("s")
-        .join(
-            b,
-            (F.col("b.band") == F.col("s.band"))
-            & (F.col("b.band_key") == F.col("s.band_key")),
-        )
-        .filter(F.col("b.doc_id") != F.col("s.hub"))
-        .select(F.col("s.hub").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    return small.unionByName(star).distinct()
+    can afford. The cap is applied inside the same single grouping
+    exchange as the clique form (no bucket-size join). The cap is
+    deliberately tiny here so the star path is exercised on the test
+    corpus."""
+    return _lsh_pairs(load_table(spark, sf_dir, "documents"), _STAR_CAP)
 
 
 # ----------------------------------------------------------------- SimHash
@@ -382,10 +314,10 @@ def dedup_simhash_pairs(spark, sf_dir):
     """SimHash near-dup PAIRS at hamming ≤ 3 over 64-bit fingerprints:
     the pigeonhole guarantees every qualifying pair matches exactly on
     at least one of the 4 × 16-bit bands (4 bands > 3 flips), so
-    candidates come from per-band equi-joins on 65,536-value keys —
-    buckets only go hot where the corpus really contains mass
-    near-dups — and the verify step is one xor+bit_count per
-    candidate. COMPLETE by construction (brute-force-equality tested);
+    candidates come from one grouping by (band, 65,536-value key),
+    each bucket expanded in place — buckets only go hot where the
+    corpus really contains mass near-dups — and the verify step is
+    one xor+bit_count per candidate. COMPLETE by construction (brute-force-equality tested);
     for corpora with mass-duplicated boilerplate use
     dedup_simhash_star_capped, which bounds hot buckets to O(d)
     hub-anchored pairs."""

@@ -126,69 +126,18 @@ def decontaminate_stream(
 def doc_band_keys(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Per-document MinHash-LSH band keys as a MAP-ONLY expression —
-    no groupBy, so it runs on a stream without stateful aggregation.
+    """Per-document MinHash-LSH band keys, map-only — no groupBy, so
+    it runs on a stream without stateful aggregation: every input
+    column passes through, plus ``(band, band_key)``, one row per band.
 
-    Same maths as the batch banding (queries/dedup.py _lsh_bands: md5
-    shingle → int64, universal-hash permutations, _BAND_ROWS rows per
-    band), but folded into nested higher-order functions over the
-    per-row shingle array instead of an explode + groupBy — pinned
-    equal to the batch table in tests/test_streaming.py. Documents
-    too short to shingle produce no rows."""
-    from marex_spark.queries.dedup import _BAND_ROWS, _MH_A, _MH_B, _MH_P, _N_HASH
+    The SAME kernel as the batch banding (queries/dedup.py _lsh_bands:
+    operators/lsh.py ``minhash_bands_batch`` in one ``mapInArrow``), so
+    stream keys equal the batch corpus index's keys by construction
+    (pinned in tests/test_streaming.py). Documents too short to
+    shingle produce no rows."""
+    from marex_spark.operators.lsh import minhash_band_rows
 
-    n = 3
-    ws = F.split(F.col(text_col), " ")
-    shingles = F.array_distinct(
-        F.filter(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0))),
-                lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
-            ),
-            lambda s: F.size(F.split(s, " ")) >= n,
-        )
-    )
-    s_arr = F.transform(
-        shingles,
-        lambda sh: F.conv(F.substring(F.md5(sh), 1, 15), 16, 10).cast("long")
-        % _MH_P,
-    )
-    def _perm(h):
-        # closure, NOT a default arg: a 2-parameter lambda would make
-        # F.transform pass the array index as the second argument
-        return F.array_min(
-            F.transform(s_arr, lambda s: (s * _MH_A[h] + _MH_B[h]) % _MH_P)
-        )
-
-    minhashes = [_perm(h) for h in range(_N_HASH)]
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            mh.cast("string")
-                            for mh in minhashes[
-                                b * _BAND_ROWS : (b + 1) * _BAND_ROWS
-                            ]
-                        ],
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(_N_HASH // _BAND_ROWS)
-        ]
-    )
-    return (
-        df.filter(F.size(shingles) > 0)
-        .select("*", F.explode(bands).alias("_b"))
-        .select(
-            *df.columns,
-            F.col("_b.band").alias("band"),
-            F.col("_b.band_key").alias("band_key"),
-        )
-    )
+    return minhash_band_rows(df, text_col, df.columns)
 
 
 def near_dup_stream(

@@ -1,6 +1,6 @@
 """Equality references for production code paths.
 
-``bloom`` and ``simhash`` are independent JVM-expression
+``bloom``, ``minhash`` and ``simhash`` are independent JVM-expression
 implementations of sketches whose production path is a ``mapInArrow``
 kernel. ``merge`` resolves a whole series as one block, the sequencing
 the chunked and parallel split/merge engines must reproduce. ``label``

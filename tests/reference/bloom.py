@@ -1,5 +1,9 @@
-"""JVM literal-bitset Bloom probe — the reference for
-``marex_spark.operators.dedup.bloom_probe``.
+"""JVM Bloom fit and literal-bitset probe — the references for
+``marex_spark.operators.dedup.bloom_fit`` and ``bloom_probe``.
+
+The fit explodes the benchmark's distinct shingles
+(``shingle_array``), counts them for the geometry, and collects the
+distinct k probe positions.
 
 Shingles are exploded per document (``shingle_array``), each gets ONE
 md5 whose two 60-bit halves are materialised as plain columns, and
@@ -13,11 +17,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from marex_spark.operators.dedup import (
-    bloom_fit,
+    bloom_geometry,
     bloom_hash_cols,
     bloom_pos_from_hashes,
     shingle_array,
 )
+
+
+def bloom_fit_jvm(
+    bench_docs: DataFrame, text_col: str = "text", n: int = 5
+) -> tuple[bytes, int, int]:
+    """``(bits, m, k)`` as ``bloom_fit`` returns them."""
+    import numpy as np
+
+    sh = (
+        bench_docs.select(F.explode(shingle_array(F.col(text_col), n)).alias("shingle"))
+        .distinct()
+        .localCheckpoint()
+    )
+    m, k = bloom_geometry(sh.count())
+    h1, h2 = bloom_hash_cols(F.col("shingle"), m)
+    hs = sh.select(h1.alias("_h1"), h2.alias("_h2"))
+    pos = hs.select(
+        F.explode(
+            F.array(
+                *[bloom_pos_from_hashes(F.col("_h1"), F.col("_h2"), i, m) for i in range(k)]
+            )
+        ).alias("p")
+    ).distinct()
+    bits = np.full(m, ord("0"), dtype=np.uint8)
+    bits[pos.toPandas()["p"].to_numpy(dtype=np.int64)] = ord("1")
+    return bits.tobytes(), m, k
 
 
 def bloom_flag_from_hashes(bits: bytes, k: int, h1, h2):
@@ -66,9 +96,9 @@ def bloom_decontaminate_literal(
     n: int = 5,
     out_col: str = "contamination_bloom",
 ) -> DataFrame:
-    """Reference for ``bloom_decontaminate``: same fit, same output
+    """Reference for ``bloom_decontaminate``: JVM fit, same output
     columns, literal-bitset probe."""
-    bits, _, k = bloom_fit(bench_docs, text_col=text_col, n=n)
+    bits, _, k = bloom_fit_jvm(bench_docs, text_col=text_col, n=n)
     return bloom_counts_literal(docs, bits, k, text_col, id_col, n).withColumn(
         out_col, F.col("n_flagged") / F.col("n_shingles").cast("double")
     )

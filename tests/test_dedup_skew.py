@@ -93,6 +93,19 @@ class TestBloomGeometry:
         m, k = bloom_geometry(1_000_000)
         assert m == 1 << 24 and k == 12
 
+    def test_bitset_size_at_ten_million_shingles(self):
+        """The documented ceiling figures of bloom_fit/bloom_probe,
+        from the geometry alone (no bitset is built): at n = 10^7
+        benchmark shingles m = 2^27 bits, k = 9, and the packed
+        broadcast is m/8 = 16 MiB — at most 2.5 bytes per shingle."""
+        from marex_spark.queries.dedup import bloom_geometry
+
+        n = 10**7
+        m, k = bloom_geometry(n)
+        assert (m, k) == (1 << 27, 9)
+        assert m // 8 == 16 * 2**20
+        assert m // 8 <= 2.5 * n
+
     def test_oracle_sql_derives_same_geometry(self):
         """The bloom_geom CTE must compute the exact (m, k) that
         bloom_geometry() computes, for a range of benchmark sizes —
@@ -158,6 +171,29 @@ class TestBloomGeometry:
             flagged = p if flagged is None else (flagged & p)
         n_fp = probe.filter(flagged).count()
         assert n_fp / 2000 < 0.03, n_fp
+
+
+def test_bloom_fit_equals_jvm_fit(spark):
+    """The one-pass Arrow fit returns the same (bits, m, k) as the JVM
+    explode + distinct + count + positions form, on the fixture's
+    benchmark and on edge-case text (NULL, short, repeated shingles,
+    empty tokens, multibyte)."""
+    from marex_spark.operators.dedup import bloom_fit
+    from tests.reference.bloom import bloom_fit_jvm
+
+    docs = load_table(spark, SF, "documents")
+    bench = docs.filter(F.col("source") == "src0")
+    fit = bloom_fit(bench)
+    assert fit == bloom_fit_jvm(bench)
+    assert fit[0].count(b"1") > 0
+    edge = spark.createDataFrame(
+        [
+            (None,), ("a b",), ("a b c d e",), ("a b c d e a b c d e",),
+            (" lead  double  space x y z ",), ("é❄ ünd é❄ ünd x y z w",),
+        ],
+        "text string",
+    )
+    assert bloom_fit(edge) == bloom_fit_jvm(edge)
 
 
 def test_decontam_bloom_all_tiers_agree(spark):

@@ -1,60 +1,19 @@
-"""The late-r7 one-exchange `_lsh_bands` must be value-identical to
-the original two-step form (posexplode → per-(doc,h) min → per-(doc,
-band) key assembly) on arbitrary corpora — the refactor changed the
-physical shape only. Locks the minima AND the md5 band-key strings."""
+"""The Arrow MinHash banding kernel behind ``_lsh_bands`` must equal
+the JVM expression form (tests/reference/minhash.py) on arbitrary
+corpora — same minima, same md5 band-key strings — and the one-exchange
+bucket expansion must equal the band self-join it replaced."""
 
 from pyspark.sql import functions as F
 
-from marex_spark.queries.dedup import (
-    _BAND_ROWS,
-    _MH_A,
-    _MH_B,
-    _MH_P,
-    _N_HASH,
-    _lsh_bands,
-    _shingles,
-)
-
-
-def _old_lsh_bands(docs):
-    """Literal pre-refactor shape (kept verbatim for the equality lock)."""
-    sh = _shingles(docs, 3)
-    si = sh.select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-            % _MH_P
-        ).alias("s"),
-    )
-    perms = F.array(
-        *[
-            ((F.col("s") * _MH_A[h] + _MH_B[h]) % _MH_P).alias(f"p{h}")
-            for h in range(_N_HASH)
-        ]
-    )
-    hashed = (
-        si.select("doc_id", F.posexplode(perms).alias("h", "hh"))
-        .groupBy("doc_id", "h")
-        .agg(F.min("hh").alias("minhash"))
-    )
-    return hashed.groupBy(
-        "doc_id", (F.col("h") / _BAND_ROWS).cast("long").alias("band")
-    ).agg(
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("h", "minhash"))).minhash,
-                    lambda m: m.cast("string"),
-                ),
-            )
-        ).alias("band_key")
-    )
+from marex_spark.operators.lsh import _BAND_ROWS, _N_HASH, bucket_pairs
+from marex_spark.queries.dedup import _lsh_bands
+from tests.reference.minhash import lsh_bands_jvm
 
 
 def _corpus(spark, n=240):
-    """Deterministic corpus with planted dups, short docs, and a
-    sub-shingle-length doc (2 words → zero shingles)."""
+    """Deterministic corpus with planted dups, short docs, a
+    sub-shingle-length doc (2 words → zero shingles), NULL text and
+    empty tokens."""
     base = spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.concat_ws(
@@ -71,21 +30,68 @@ def _corpus(spark, n=240):
     dup = base.filter(F.pmod("doc_id", F.lit(10)) == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "text"
     )
-    tiny = base.limit(1).select(
-        (F.col("doc_id") + 200000).alias("doc_id"), F.lit("a b").alias("text")
+    edge = spark.createDataFrame(
+        [
+            (200000, "a b"),
+            (200001, None),
+            (200002, " lead  double  x "),
+            (200003, "é❄ ünd é❄ ünd é❄"),
+            (200004, "a b c"),
+        ],
+        "doc_id long, text string",
     )
-    return base.unionByName(dup).unionByName(tiny)
+    return base.unionByName(dup).unionByName(edge)
 
 
-def test_one_exchange_bands_equal_two_step_form(spark):
+def test_kernel_bands_equal_jvm_reference(spark):
     docs = _corpus(spark)
-    new = {(r.doc_id, r.band, r.band_key) for r in _lsh_bands(docs).collect()}
-    old = {(r.doc_id, r.band, r.band_key) for r in _old_lsh_bands(docs).collect()}
-    assert new == old
-    # zero-shingle docs contribute no band rows in either form
-    assert not any(d == 200000 for d, _, _ in new)
+    got = sorted(map(tuple, _lsh_bands(docs).collect()))
+    want = sorted(map(tuple, lsh_bands_jvm(docs).collect()))
+    assert got == want
+    # zero-shingle and NULL docs contribute no band rows
+    assert not any(d in (200000, 200001) for d, _, _ in got)
     # every banded doc carries all N_HASH/BAND_ROWS bands
     per_doc = {}
-    for d, b, _ in new:
+    for d, b, _ in got:
         per_doc.setdefault(d, set()).add(b)
     assert all(v == set(range(_N_HASH // _BAND_ROWS)) for v in per_doc.values())
+
+
+def test_bucket_expansion_equals_band_self_join(spark):
+    """Clique and star-capped bucket expansion against the join forms
+    they replaced: ``a.id < b.id`` on a shared bucket, and with a cap
+    only ``a.id = hub`` in buckets above it. The corpus repeats every
+    text with period 50, so its buckets hold 4, 5, 8 or 10 docs; caps
+    4 and 5 sit on a bucket size (``n == cap`` keeps the clique)."""
+    bands = _lsh_bands(_corpus(spark)).localCheckpoint()
+    a, b = bands.alias("a"), bands.alias("b")
+    joined = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+    size = bands.groupBy("band", "band_key").agg(
+        F.count("*").alias("n"), F.min("doc_id").alias("hub")
+    )
+    sized = joined.join(
+        size.alias("s"),
+        (F.col("s.band") == F.col("a.band")) & (F.col("s.band_key") == F.col("a.band_key")),
+    )
+
+    def pairs(df):
+        return {(r[0], r[1]) for r in df.select("a.doc_id", "b.doc_id").distinct().collect()}
+
+    def expanded(cap):
+        out = bucket_pairs(bands, ["band", "band_key"], ["doc_id"], cap)
+        return {(r[0], r[1]) for r in out.select("a.doc_id", "b.doc_id").distinct().collect()}
+
+    clique = expanded(None)
+    assert clique == pairs(joined) and clique
+    stars = []
+    for cap in (3, 4, 5):
+        star = expanded(cap)
+        capped = sized.filter((F.col("s.n") <= cap) | (F.col("a.doc_id") == F.col("s.hub")))
+        assert star == pairs(capped), cap
+        stars.append(star)
+    assert stars[0] < stars[1] < stars[2] < clique  # every cap fires

@@ -167,3 +167,22 @@ def test_dedup_spans_short_duplicate_at_buffer_end():
         }
         assert kept == set(_ref_shingles(t, 2))
         assert int((keep & (row_idx == i)).sum()) == len(kept)
+
+
+def test_dedup_spans_sort_key_collision_stays_exact():
+    """dedup_spans sorts on one key of the row and 40 digest bits. Fake
+    digests that share those 40 bits but differ below — interleaved so
+    the sort can split a run of equal spans (A, B, A) — must not lose
+    a duplicate: the full-digest sort takes over."""
+    data = np.frombuffer(b"AAAA BBBB", dtype=np.uint8)
+    starts = np.array([0, 5, 0, 5, 0], dtype=np.int64)
+    lens = np.full(5, 4, dtype=np.int64)
+    row_idx = np.zeros(5, dtype=np.int64)
+    a = [7, 0x11000000, 1, 2]
+    b = [7, 0x11000000, 9, 9]  # same row and top 40 bits as a
+    w = np.array([a, b, a, b, a], dtype=np.uint32)
+    keep = dedup_spans(data, row_idx, starts, lens, w)
+    assert sorted(bytes(data[s : s + 4]) for s in starts[keep]) == [b"AAAA", b"BBBB"]
+    # two rows: equal spans in different rows are both kept
+    keep2 = dedup_spans(data, np.array([0, 0, 1, 1, 1]), starts, lens, w)
+    assert keep2.sum() == 4

@@ -610,17 +610,67 @@ def test_theta_sketch_filters_before_distinct_exchange(spark):
     assert max(filt) > max(exch), (filt, exch)
 
 
-def test_lsh_banding_is_single_exchange(spark):
-    """_lsh_bands end-to-end: scan → shingle project → ONE exchange
-    (the groupBy(doc_id) signature aggregation, map-side combined).
-    No (doc_id, shingle) distinct exchange (min is idempotent) and no
-    second per-(doc, band) exchange (band keys are expression work)."""
-    from marex_spark.plans import exchange_count
-    from marex_spark.queries.dedup import _lsh_bands
-    from marex_spark.sources.parquet import load_table
+def test_lsh_bands_map_only_and_pairs_one_grouping(spark):
+    """_lsh_bands is ONE MapInArrow over the scan (shingles, md5,
+    minima and band keys in the kernel): zero exchanges. The pair
+    plans add one grouping exchange by (band, band_key), which expands
+    each bucket in place, plus the pair distinct: two exchanges, with
+    or without the star cap (no self-join, no bucket-size join)."""
+    from marex_spark.plans import exchange_count, plan_string
+    from marex_spark.queries.dedup import (
+        _lsh_bands,
+        dedup_lsh_star_capped,
+        dedup_minhash_lsh,
+    )
 
     bands = _lsh_bands(load_table(spark, SF, "documents"))
-    assert exchange_count(bands) == 1
+    assert exchange_count(bands) == 0
+    assert "MapInArrow" in plan_string(bands)
+    for q in (dedup_minhash_lsh, dedup_lsh_star_capped):
+        pairs = q(spark, SF)
+        plan = plan_string(pairs)
+        assert exchange_count(pairs) == 2, plan[:2000]
+        assert "Join" not in plan, plan[:2000]
+
+
+def test_simhash_pairs_one_grouping_no_checkpoint(spark):
+    """simhash_band_pairs reads the fingerprints once: one grouping
+    exchange by (band, key) plus the pair distinct, no join, and no
+    eager checkpoint job while the plan is built."""
+    from marex_spark.operators.simhash import simhash_band_pairs, simhash_fingerprints
+    from marex_spark.plans import exchange_count, plan_string
+
+    fps = simhash_fingerprints(load_table(spark, SF, "documents"))
+    status = spark.sparkContext.statusTracker()
+    before = max(status.getJobIdsForGroup(), default=-1)
+    for cap in (None, 3):
+        pairs = simhash_band_pairs(fps, star_cap=cap)
+        plan = plan_string(pairs)
+        assert exchange_count(pairs) == 2, plan[:2000]
+        assert "Join" not in plan, plan[:2000]
+        assert plan.count("MapInArrow") == 1, plan[:2000]
+    assert max(status.getJobIdsForGroup(), default=-1) == before
+
+
+def test_text_dedup_job_count(spark):
+    """The three text-dedup calls of the benchmark's text workload —
+    Bloom decontamination, MinHash-LSH pairs, star-capped SimHash
+    pairs — run in at most 12 Spark jobs: one parquet schema job per
+    table read (3), the Bloom fit's mapInArrow + distinct + toArrow
+    (2), the probe (1), and per pair query the grouping and distinct
+    map stages plus the result (3 each, AQE runs each map stage as its
+    own job)."""
+    from marex_spark.operators.simhash import simhash_band_pairs, simhash_fingerprints
+    from marex_spark.queries.dedup import decontam_bloom, dedup_minhash_lsh
+
+    status = spark.sparkContext.statusTracker()
+    before = max(status.getJobIdsForGroup(), default=-1)
+    flagged = decontam_bloom(spark, SF).filter(F.col("n_flagged") > 0).collect()
+    lsh = dedup_minhash_lsh(spark, SF).collect()
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sim = simhash_band_pairs(simhash_fingerprints(docs), star_cap=100).collect()
+    assert flagged and lsh and sim
+    assert max(status.getJobIdsForGroup()) - before <= 12
 
 
 def test_source_overlap_signature_agg_single_exchange(spark):

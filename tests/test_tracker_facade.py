@@ -85,6 +85,19 @@ class TestValidation:
                 unstructured_grid=True, edges=edges, cell_geo=bad_geo,
             )
 
+    def test_link_adjacency_with_merging_raises_before_any_job(self, spark):
+        """The mutual-exclusion check runs before labelling or the
+        resolver: no Spark job starts."""
+        ext = synthetic_extremes_gridded(spark, n_time=4, ny=NY, nx=NX)
+        status = spark.sparkContext.statusTracker()
+        before = max(status.getJobIdsForGroup(), default=-1)
+        with pytest.raises(ConfigurationError, match="link_adjacency"):
+            track_events(
+                ext, nx=NX, allow_merging=True, link_adjacency=True,
+                compute_stats=False,
+            )
+        assert max(status.getJobIdsForGroup(), default=-1) == before
+
     def test_regional_needs_units(self, spark):
         ext = synthetic_extremes_gridded(spark, n_time=4, ny=NY, nx=NX)
         with pytest.raises(ConfigurationError, match="coordinate_units"):
