@@ -724,28 +724,26 @@ def _run_bench(sf, timings, errors, note, holder) -> None:
         errors["__merge_warmup__"] = f"{type(e).__name__}: {e}"
         note(f"merge warmup: ERROR {type(e).__name__}")
 
-    def _merge_bench(parallel: bool) -> int:
+    def _merge_bench() -> int:
         from marex_spark.operators.track import track_events
 
         ext = spark.read.parquet(merge_ext_path)
         res = track_events(
             ext, nx=merge_nx["nx"], overlap_threshold=0.5, compute_stats=False,
-            allow_merging=True, merge_parallel=parallel,
+            allow_merging=True,
         )
         res.events.write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()
         return 0
 
-    guarded("track_merge_chunked", lambda: _merge_bench(False))
-    guarded("track_merge_parallel", lambda: _merge_bench(True))
+    guarded("track_merge_chunked", _merge_bench)
 
     # the capstone-class row (SCALE.md "90-year merge-mode tracking"
     # scaled to the bench budget): a 10x-longer daily series through
-    # the SAME scan → labelling → stale-only-Jacobi-parallel resolver →
-    # renumber pipeline. This is the number that demonstrates the
-    # 100x-safe design round over round — wall-clock approaches one
-    # block sweep as executors grow, rounds stay 2-3 regardless of
-    # series length.
+    # the SAME scan → labelling → driver-paged resolver → link pipeline
+    # as track_merge_chunked. The row keeps its name so rounds stay
+    # comparable; it times the one resolver engine over the longer
+    # series (more pages, so the parquet page spill engages).
     merge10_path = f"{tmp}/marex_bench_merge_ext10_sf{sf}"
     merge10_nx = {"nx": 0}
 
@@ -777,7 +775,7 @@ def _run_bench(sf, timings, errors, note, holder) -> None:
         ext = spark.read.parquet(merge10_path)
         res = track_events(
             ext, nx=merge10_nx["nx"], overlap_threshold=0.5,
-            compute_stats=False, allow_merging=True, merge_parallel=True,
+            compute_stats=False, allow_merging=True,
         )
         res.events.write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()

@@ -59,7 +59,7 @@ def __getattr__(name):
         "morph_close_open_blocked": "marex_spark.operators.morphology",
         "track_events": "marex_spark.operators.track",
         "track_events_unstructured": "marex_spark.operators.track",
-        "split_merge_events_parallel": "marex_spark.operators.merge",
+        "split_merge_events": "marex_spark.operators.merge",
         "asof_join": "marex_spark.operators.asof",
         "range_join_binned": "marex_spark.operators.asof",
         "ingest_zarr_gridded": "marex_spark.sources.zarr",

@@ -8,21 +8,23 @@ The per-timestep resolution loop is inherently sequential in time
 (timestep t's labels depend on t-1's post-partitioning labels); its
 kernel runs over the *sparse* labelled cells (only extreme cells,
 id > 0), vectorised with numpy per transition, and only ever needs
-the previous block's last two slices plus the small props dicts.
+the previous page's last two slices plus the small props dicts.
 Everything before (labelling, morphology) and after (remap, stats)
 stays distributed. The kernel also emits the post-resolution link
 graph — the overlap pairs of consecutive final slices, computed from
 the slices it already holds, as the reference links from its
 chunk-local overlaps (track.py:2396-2452, 2876-2883) — so event
-linking needs no Spark overlap join. Two engines run that one block
-kernel (:func:`_resolve_block`), mirroring the reference's two forms:
+linking needs no Spark overlap join.
 
-- :func:`split_merge_events_chunked` — the serial chunk loop
-  (track.py:3377-3420): pages cell-budgeted chunks onto the driver;
-  also the resume path of incremental extension;
-- :func:`split_merge_events_parallel` — the batched iteration tier
-  (track.py:3804-4814): time blocks resolved concurrently on the
-  executors with a Jacobi carry fixpoint (the default).
+One engine runs that kernel (:func:`_resolve_block`):
+:func:`split_merge_events`, the reference's serial chunk loop
+(track.py:3377-3420). It pages cell-budgeted runs of whole timesteps
+onto the driver (at most :data:`TARGET_BLOCK_CELLS` sparse cells per
+page) and is also the resume path of incremental extension. The
+reference's batched iteration tier (track.py:3804-4814) has no
+counterpart here: a Jacobi block form over the same kernel was slower
+than the paged loop on every input measured (up to 1.19M cells at 4
+cores; long series at many cores were not compared, ROADMAP item 2).
 """
 
 from __future__ import annotations
@@ -57,8 +59,7 @@ def _slice_overlaps(ids_a: dict, ids_b: dict) -> np.ndarray:
     pb = ids_b["id"][ib]
     # encode pairs via compact per-slice indices, NOT raw ids: raw-id
     # encoding (pa * max_id + pb) overflows int64 once ids exceed
-    # ~3e9 — which both a 100 TB label space and the parallel tier's
-    # block-local id namespaces do
+    # ~3e9, which a 100 TB label space does
     ua, ia_inv = np.unique(pa, return_inverse=True)
     ub, ib_inv = np.unique(pb, return_inverse=True)
     m = len(ub)
@@ -299,8 +300,8 @@ def _collect_mesh_adj(
 
         raise TrackingError(
             f"mesh adjacency has {n_edges:,} edges — collecting it to "
-            f"the driver (budget {limit:,}) would capture a multi-GB "
-            "CSR in every resolver task; partition the mesh or raise "
+            f"the driver (budget {limit:,}) would build a multi-GB "
+            "CSR there; partition the mesh or raise "
             "marex_spark.operators.merge.MESH_ADJ_EDGE_BUDGET if the "
             "driver really has the memory",
             details={"n_edges": int(n_edges), "budget": int(limit)},
@@ -457,21 +458,14 @@ def _partition_nn_mesh_hops(
     return assign[child_cells]
 
 
-# Driver-materialisation budget for one page of the CHUNKED engine
-# (~40 bytes/sparse cell in pandas → 50M cells ≈ 2 GB, a sane driver
-# ceiling). A page exceeds TARGET_BLOCK_CELLS only when a single
-# timestep does, so this guards against one giant step. The parallel
-# engine (the default) never materialises more than one block per
-# executor task and has no such bound.
+# Driver-materialisation ceiling for one page (~40 bytes/sparse cell in
+# pandas → 50M cells ≈ 2 GB). Pages hold whole timesteps, so a page
+# exceeds TARGET_BLOCK_CELLS only when a single timestep does: this
+# guards against one giant step.
 SERIAL_CELL_BUDGET = 50_000_000
 
-# Mesh CSRs above this ship as a Spark broadcast variable instead of a
-# task-closure capture (once per executor vs once per task serialize).
-_MESH_ADJ_BCAST_BYTES = 8 << 20
-
-# Sparse-cell budget of one resolver block: the chunked engine's page
-# size and the cap on auto-sized parallel blocks — the per-task (or
-# per-page) materialisation bound (~40 bytes/cell in pandas → ~80 MB).
+# Sparse-cell budget of one driver page: the engine's memory bound
+# (~40 bytes/cell in pandas → ~80 MB).
 TARGET_BLOCK_CELLS = 2_000_000
 
 
@@ -482,11 +476,9 @@ def _guard_serial_cells(n_cells: int, budget: int | None, what: str) -> None:
 
         raise TrackingError(
             f"{what} would page {n_cells:,} sparse cells onto the "
-            f"driver at once (budget {limit:,}) — use the distributed-"
-            "parallel resolver instead (track_events(..., "
-            "merge_parallel=True) / split_merge_events_parallel), or "
-            "raise max_driver_cells explicitly if this driver really "
-            "has the memory",
+            f"driver at once (budget {limit:,}). Pages hold whole "
+            "timesteps, so a single timestep is over the budget; raise "
+            "max_driver_cells if this driver really has the memory",
             details={"n_cells": int(n_cells), "budget": int(limit)},
         )
 
@@ -828,8 +820,8 @@ class _Resolver:
 def _resolve_block(resolver: "_Resolver", carry: list, slices: dict, stimes: list) -> None:
     """Resolve one contiguous block of timesteps against a carry (the
     previous block's last two post-resolution slices, already emitted).
-    This is the chunk-boundary sequencing shared by the chunked and
-    parallel drivers (reference chunk loop, track.py:3377-3420):
+    This is the chunk-boundary sequencing of the reference's chunk loop
+    (track.py:3377-3420), run once per driver page:
 
     - consolidation (M10) needs t-1 mutable, so it is skipped when t-1
       is the carry — the previous block's end-of-block pass (below)
@@ -838,8 +830,9 @@ def _resolve_block(resolver: "_Resolver", carry: list, slices: dict, stimes: lis
       (end-of-chunk rule, track.py:3602-3615).
     """
     for _, csl in carry:
-        resolver.register_slice(csl)  # no-op recompute under the chunked
-        # driver (same values); required for a fresh per-block resolver
+        # same values between pages; required for a resumed carry,
+        # which a fresh resolver has never seen
+        resolver.register_slice(csl)
     for ti in range(len(stimes)):
         resolver.register_slice(slices[ti])
     seq = carry + [(stimes[i], slices[i]) for i in range(len(stimes))]
@@ -873,28 +866,11 @@ def _ledger_df(spark, ledger: MergeLedger, time_col: str, time_type: str) -> Dat
     )
 
 
-_EXIT_PATHS: set[str] = set()
-
-
-def _cleanup_at_exit(path: str) -> None:
-    """Reclaim a spill directory at interpreter exit (the resolved
-    chunks' parquet files stay referenced by the returned lazy reader
-    for the rest of the session)."""
-    import atexit
-    import shutil
-
-    if not _EXIT_PATHS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _EXIT_PATHS]
-        )
-    _EXIT_PATHS.add(path)
-
-
 def _to_epoch_micros(t, sess_tz: str) -> int:
     """One resume-carry time value → int64 epoch micros. Naive wall
     times are interpreted in the SESSION timezone (what toPandas
     produces); tz-aware values convert exactly; ints pass through
-    (a carry from a previous chunked run is already converted).
+    (already epoch micros).
 
     DST edges resolve the way the JVM does when Spark parses a naive
     wall time: an AMBIGUOUS fall-back hour takes the EARLIER offset
@@ -913,19 +889,24 @@ def _to_epoch_micros(t, sess_tz: str) -> int:
 
 
 def _write_chunk_parquet(
-    pdf: pd.DataFrame, out_path: str, j: int, time_col: str
+    pdf: pd.DataFrame, j: int, out_uri: str, out_local: str | None, fs, jpath
 ) -> None:
     """Driver-side parquet write of one resolved chunk (pyarrow, no
     Spark job — so no multi-MB task closures). Timestamps normalise to
     microseconds (Spark's parquet default; ns columns would need the
     legacy nanos flag) and integer columns widen to int64 so the read
-    schema matches the input labels' exactly."""
+    schema matches the input labels' exactly. ``out_local`` is the
+    output directory's local path when it lives on the driver's own
+    filesystem; otherwise the file is written to a local temp file and
+    copied to ``out_uri`` through the Hadoop FileSystem ``fs``
+    (``jpath``: the JVM ``Path`` class), so the executors read it where
+    Spark's own files live."""
     import os
+    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(out_path, exist_ok=True)
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
     arrays = []
     for name, col in zip(tbl.column_names, tbl.columns):
@@ -935,10 +916,24 @@ def _write_chunk_parquet(
             col = col.cast(pa.int64())
         arrays.append(col)
     tbl = pa.table(dict(zip(tbl.column_names, arrays)))
-    pq.write_table(tbl, os.path.join(out_path, f"chunk-{j:05d}.parquet"))
+    name = f"chunk-{j:05d}.parquet"
+    if out_local is not None:
+        os.makedirs(out_local, exist_ok=True)
+        pq.write_table(tbl, os.path.join(out_local, name))
+        return
+    fd, tmp = tempfile.mkstemp(suffix=".parquet")
+    os.close(fd)
+    try:
+        pq.write_table(tbl, tmp)
+        fs.copyFromLocalFile(
+            True, True, jpath(f"file://{tmp}"), jpath(f"{out_uri}/{name}")
+        )
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
-def split_merge_events_chunked(
+def split_merge_events(
     labels: DataFrame,
     nx: int = 0,
     overlap_threshold: float = 0.5,
@@ -949,7 +944,6 @@ def split_merge_events_chunked(
     max_iter_per_step: int = 10,
     labels_materialized: bool = False,
     resume_state: dict | None = None,
-    return_state: bool = False,
     geometry: str = "grid",
     cell_geo: DataFrame | None = None,
     max_driver_cells: int | None = None,
@@ -958,13 +952,17 @@ def split_merge_events_chunked(
     ny: int = 0,
 ) -> tuple:
     """Driver-paged merge resolution — the reference's chunk loop
-    (track.py:3377-3420): pull one chunk of whole timesteps holding at
+    (track.py:3377-3420): pull one page of whole timesteps holding at
     most :data:`TARGET_BLOCK_CELLS` sparse cells at a time, resolve it
-    against the carry (the previous chunk's last two post-resolution
-    slices + the props dicts), emit the chunk, advance. Driver memory
-    is O(chunk) instead of O(series), and chunk boundaries never change
+    against the carry (the previous page's last two post-resolution
+    slices + the props dicts), emit the page, advance. Driver memory
+    is O(page) instead of O(series), and page boundaries never change
     the output: it equals resolving the whole series in one block
     (asserted against tests/reference/merge.py in tests/test_merge.py).
+    A page holds more than the budget only when one timestep does, and
+    past ``max_driver_cells`` (default :data:`SERIAL_CELL_BUDGET`) the
+    call fails before anything is paged.
+
     Returns ``(labels, ledger, link_pairs)``: the relabelled labels and
     the merge ledger as DataFrames, and the post-resolution link graph
     — (id_t, id_next) for every object pair overlapping between
@@ -982,31 +980,39 @@ def split_merge_events_chunked(
     the hop-BFS over ``mesh_adj`` when given (max_distance in HOPS),
     else geodesic nearest-member (max_distance in degrees).
 
-    Resumability: the complete sequencing state between chunks is
-    (carry slices, id counter) — the same fact the parallel tier's
-    fresh per-block resolvers rely on. ``return_state=True`` appends
-    that state dict (``{"carry": [(time, slice)...], "next_new_id"}``)
-    to the return tuple; passing it back as ``resume_state`` continues
+    Resumability: the complete sequencing state between pages is
+    (carry slices, id counter). ``resume_state``
+    (``{"carry": [(time, slice)...], "next_new_id"}``) continues
     resolution over strictly later timesteps as if the loop had never
     stopped — the incremental append path (extend_track_events).
 
-    The per-chunk time-range filter re-executes the ``labels`` plan once
-    per chunk, so the plan is localCheckpoint'ed here unless the caller
+    The per-page time-range filter re-executes the ``labels`` plan once
+    per page, so the plan is localCheckpoint'ed here unless the caller
     declares it already materialised (``labels_materialized=True``,
     e.g. track_events passes label_components' checkpointed output) —
     otherwise a direct caller with a raw labelling plan would silently
-    recompute the whole labelling per chunk.
+    recompute the whole labelling per page.
 
-    Paging is partition-pruned: with ≥4 chunks the sparse labels are
-    spilled ONCE to parquet partitioned by chunk index, and each page
-    fetch reads only its own chunk directory. Filtering the in-memory
-    labels per chunk instead would scan every label partition per
-    chunk — at production density that is hundreds of chunks × the
-    full partition count in scheduled tasks, the dominant cost of the
-    loop. ``page_dir`` roots the spill (default: the local tmp
-    dir — pass a shared-FS scratch path on a real cluster, same
-    contract as ``Tracker.temp_dir``); the directory is deleted before
-    returning."""
+    Paging is partition-pruned: with ≥4 pages the sparse labels are
+    spilled ONCE to parquet partitioned by page index, and each page
+    fetch reads only its own directory. Filtering the in-memory labels
+    per page instead would scan every label partition per page — at
+    production density that is hundreds of pages × the full partition
+    count in scheduled tasks, the dominant cost of the loop.
+    The page spill and the resolved pages live under ``page_dir``
+    (default: the tmp dir's path), resolved through the Hadoop
+    FileSystem like any Spark path: a bare path lands on the session's
+    default filesystem (``fs.defaultFS``), the one every executor
+    reads on a cluster. The driver reads and writes them with pyarrow
+    directly when that filesystem is its local one, and copies each
+    resolved page through the FileSystem otherwise. The spill is
+    deleted before returning; the resolved pages are the returned lazy
+    reader's files, deleted when the JVM exits.
+
+    Each call logs one DEBUG record (logger
+    ``marex_spark.operators.merge``) with the page count
+    (``merge_pages``), the sparse cell count (``merge_cells``) and the
+    link-pair count (``merge_link_pairs``)."""
     grid = geometry == "grid"
     spark = labels.sparkSession
     if not grid:
@@ -1067,7 +1073,7 @@ def split_merge_events_chunked(
         _guard_serial_cells(
             sum(counts[a:b]),
             max_driver_cells,
-            f"split_merge_events_chunked (chunk at {times[a]})",
+            f"split_merge_events (page at {times[a]})",
         )
     resolver = _Resolver(
         nx=nx,
@@ -1111,18 +1117,25 @@ def split_merge_events_chunked(
     ]
     n_chunks = len(chunk_spans)
     pages = None
-    page_path = None
+    page_path = page_local = None
     import os as _os
     import tempfile
     import uuid
 
-    root = page_dir or tempfile.gettempdir()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    jroot = jpath(page_dir or tempfile.gettempdir())
+    fs = jroot.getFileSystem(spark._jsc.hadoopConfiguration())
+    jroot = fs.makeQualified(jroot)
+    root = jroot.toString()
+    local_root = jroot.toUri().getPath() if fs.getScheme() == "file" else None
     # resolved chunks leave the driver as parquet FILES (pyarrow,
-    # driver-side write; one distributed read + localCheckpoint at the
-    # end) — never as createDataFrame task closures: a full chunk is
-    # tens of MB, and closure-shipping it per task draws TaskSetManager
-    # "very large task" warnings and real scheduler pressure at scale
-    out_path = f"{root}/marex_chunk_out_{uuid.uuid4().hex}"
+    # driver-side write; one distributed lazy read at the end) — never
+    # as createDataFrame task closures: a full chunk is tens of MB, and
+    # closure-shipping it per task draws TaskSetManager "very large
+    # task" warnings and real scheduler pressure at scale
+    out_name = f"marex_chunk_out_{uuid.uuid4().hex}"
+    out_path = f"{root}/{out_name}"
+    out_local = local_root and f"{local_root}/{out_name}"
     if n_chunks >= 4:
         from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -1130,7 +1143,9 @@ def split_merge_events_chunked(
         for j, (a, b) in enumerate(chunk_spans):
             for i in range(a, b):
                 chunk_of[i] = j
-        page_path = f"{root}/marex_chunk_pages_{uuid.uuid4().hex}"
+        page_name = f"marex_chunk_pages_{uuid.uuid4().hex}"
+        page_path = f"{root}/{page_name}"
+        page_local = local_root and f"{local_root}/{page_name}"
         ctab = spark.createDataFrame(
             [(t, chunk_of[i]) for i, t in enumerate(times)],
             schema=StructType(
@@ -1150,19 +1165,17 @@ def split_merge_events_chunked(
     try:
         for j, (a, b) in enumerate(chunk_spans):
             chunk_times = times[a:b]
-            if pages is not None and _os.path.isdir(
-                f"{page_path}/__chunk={j}"
-            ):
+            if page_local and _os.path.isdir(f"{page_local}/__chunk={j}"):
                 # the pages are driver-consumed: read the chunk's own
                 # partition directory with pyarrow directly — zero
                 # Spark jobs per chunk (a filter+toPandas paid ~0.3 s
                 # of stage latency × #chunks, the loop's dominant cost
-                # at bench scale). Non-local page_dir (shared FS on a
-                # real cluster) falls through to the Spark read below.
+                # at bench scale). A spill on a non-local filesystem
+                # (a cluster's shared one) takes the Spark read below.
                 import pyarrow.parquet as _pq
 
                 pdf = (
-                    _pq.read_table(f"{page_path}/__chunk={j}")
+                    _pq.read_table(f"{page_local}/__chunk={j}")
                     .to_pandas()[cols]
                 )
             elif pages is not None:
@@ -1219,7 +1232,7 @@ def split_merge_events_chunked(
                     ],
                     ignore_index=True,
                 )
-            _write_chunk_parquet(chunk_pdf, out_path, j, time_col)
+            _write_chunk_parquet(chunk_pdf, j, out_path, out_local, fs, jpath)
             out_frames.append(j)
             carry = [(stimes[i], slices[i]) for i in range(len(stimes))][-2:]
 
@@ -1233,10 +1246,10 @@ def split_merge_events_chunked(
         ]
         if out_frames:
             # the LAZY reader is the output: downstream consumers scan
-            # the spill files directly (with pushdown), no extra
-            # materialisation pass; the files are reclaimed at process
-            # exit (_cleanup_at_exit), like any Spark scratch dir
-            _cleanup_at_exit(out_path)
+            # the page files directly (with pushdown), no extra
+            # materialisation pass; the files are reclaimed when the
+            # JVM exits, like any Spark scratch dir
+            fs.deleteOnExit(jpath(out_path))
             out_df = spark.read.schema(schema).parquet(out_path)
         else:
             out_df = labels.limit(0).select(*empty_cols)
@@ -1248,13 +1261,10 @@ def split_merge_events_chunked(
     finally:
         doomed = [page_path]
         if not locals().get("ok"):
-            doomed.append(_os.path.exists(out_path) and out_path)
+            doomed.append(out_path)
         for path in doomed:
             if path:
-                jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-                jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
-                    jpath, True
-                )
+                fs.delete(jpath(path), True)
     ledger = _ledger_df(
         spark, resolver.ledger, time_col, "long" if is_ts else time_type
     )
@@ -1263,635 +1273,23 @@ def split_merge_events_chunked(
             time_col, F.timestamp_micros(F.col(time_col))
         )
     link_pairs = np.concatenate(links)[:, :2]
-    if len(link_pairs) > components.MAX_DRIVER_PAIRS:
+    n_links = len(link_pairs)
+    if n_links > components.MAX_DRIVER_PAIRS:
         # past the driver union-find budget: track_events hands a
         # DataFrame to the distributed solver
         link_pairs = spark.createDataFrame(
             pd.DataFrame(link_pairs, columns=["id_t", "id_next"]),
             schema="id_t long, id_next long",
         )
-    if return_state:
-        # timestamp carries stay in epoch micros — _to_epoch_micros
-        # passes them through unchanged on the next resume
-        state = {"carry": list(carry), "next_new_id": int(resolver.next_new_id)}
-        return out_df, ledger, link_pairs, state
-    return out_df, ledger, link_pairs
-
-
-def split_merge_events_parallel(
-    labels: DataFrame,
-    nx: int = 0,
-    block_steps: int | None = None,
-    overlap_threshold: float = 0.5,
-    wrap_x: bool = True,
-    time_col: str = "time",
-    nn_partitioning: bool = False,
-    max_distance: float | None = None,
-    max_iter_per_step: int = 10,
-    labels_materialized: bool = False,
-    geometry: str = "grid",
-    cell_geo: DataFrame | None = None,
-    max_driver_cells: int | None = None,
-    mesh_edges: DataFrame | None = None,
-    ny: int = 0,
-) -> tuple:
-    """Wall-clock-parallel merge resolution (the reference's batched
-    iteration tier, track.py:3804-4814, re-expressed for Spark).
-
-    The time axis splits into blocks of ``block_steps``; every block is
-    resolved *concurrently* as one ``applyInPandas`` group running the
-    identical block kernel the chunked driver uses (``_resolve_block``),
-    with carry-in = the previous block's last two post-resolution
-    slices. Because block b's true carry isn't known until b-1 is
-    resolved, the driver iterates Jacobi-style: round r feeds every
-    block the carry produced in round r-1, until all carries reach a
-    fixpoint (block 0 is exact after round 1, block b after ≤ b+1
-    rounds, so ≤ #blocks rounds — in practice 2-3, because a block's
-    resolution rarely changes its final two slices). Per round the
-    driver holds only the carries and ledgers (small); the cells stay
-    distributed. The cell set pays ONE range exchange total (cached
-    partitioned by block); carries ride a per-round broadcast, so
-    every round — including stale re-resolution rounds — is a bare
-    filter of that cache with zero further exchanges. Stale rounds
-    additionally emit ONLY each block's two carry slices (the sole
-    rows any later round consumes) instead of re-materialising whole
-    blocks through Arrow; the re-resolved blocks' full frames come
-    from one post-convergence final pass, re-run against the exact
-    carries they were last resolved with (deterministic kernel ⇒
-    byte-identical frames).
-    Block-local new ids live in disjoint namespaces
-    (``global_max + 1 + block·2^33``) and are renumbered afterwards in
-    (block, creation-order) order — exactly the serial counter's time
-    order — so output and ledger equal resolving the whole series as
-    one block (asserted against tests/reference/merge.py in
-    tests/test_merge.py and tests/test_unstructured.py). A series that
-    fits one block goes to :func:`split_merge_events_chunked` instead.
-
-    ``geometry="sphere"`` runs the unstructured-mesh form (input
-    (time, cell, obj_id) + ``cell_geo`` (cell, lat, lon); haversine
-    partitioning; NN partitioning hop-BFS over ``mesh_edges`` (cell,
-    nbr) when given) — same Jacobi structure.
-
-    Returns ``(labels, ledger, link_pairs)`` like
-    :func:`split_merge_events_chunked`. Every full-output pass (round 0
-    and the post-convergence final pass, never a carries-only round)
-    also emits its block's link pairs (the converged carry's last slice
-    → the first slice, then slice → slice); they ride the ledger's one
-    collect and take the same id renumbering.
-
-    Each call logs one DEBUG record (logger ``marex_spark.operators.
-    merge``) with the block count, the round count, the stale-block
-    count after each round and the link-pair count
-    (``merge_link_pairs``).
-    """
-    grid = geometry == "grid"
-    spark = labels.sparkSession
-    labels_raw = labels
-    if not grid:
-        if cell_geo is None:
-            from marex_spark.exceptions import TrackingError
-
-            raise TrackingError(
-                "geometry='sphere' needs cell_geo",
-                details={"expected_columns": "(cell, lat, lon)"},
-            )
-        labels = labels.select(time_col, "cell", "obj_id").join(
-            F.broadcast(cell_geo.select("cell", "lat", "lon")), "cell"
-        )
-        labels_materialized = False  # the geo join is a new plan
-    if not labels_materialized:
-        labels = labels.localCheckpoint()
-    # ONE pre-pass job: per-time cell counts + running max id give the
-    # distinct times, the total cell count, AND global_max together
-    # (they used to be three separate jobs — distinct().collect(),
-    # count(), agg(max) — each paying the fixed stage latency).
-    time_stats = (
-        labels.groupBy(time_col)
-        .agg(F.count(F.lit(1)).alias("_n"), F.max("obj_id").alias("_mx"))
-        .collect()
-    )
-    time_stats.sort(key=lambda r: r[0])
-    times = [r[0] for r in time_stats]
-    n_cells_total = int(sum(r["_n"] for r in time_stats))
-    global_max = int(
-        max((r["_mx"] for r in time_stats if r["_mx"] is not None), default=0)
-    )
-    time_type = labels.schema[time_col].dataType.simpleString()
-    if block_steps is None and times:
-        # AUTO block size, two binding constraints:
-        # - parallelism: ~one block per core keeps every round's
-        #   kernel wave full while minimising per-block fixed costs
-        #   (task scheduling, Arrow framing, carry bookkeeping) — on a
-        #   sparse series those fixed costs dominate and fewer, longer
-        #   blocks measured ~35% faster than 64-step blocks at sf0.1;
-        # - memory: a block materialises its cells in ONE kernel, so
-        #   steps-per-block caps at TARGET_BLOCK_CELLS / avg cells per
-        #   step — at production density this bound takes over and
-        #   blocks stay task-memory-sized (and numerous, which also
-        #   restores cluster-wide parallelism).
-        par = max(1, spark.sparkContext.defaultParallelism)
-        avg = max(1.0, n_cells_total / len(times))
-        bs_mem = max(1, int(TARGET_BLOCK_CELLS / avg))
-        block_steps = max(1, min(max(64, -(-len(times) // par)), bs_mem))
-    elif block_steps is None:
-        block_steps = 64
-    n_blocks = max(1, -(-len(times) // block_steps))
-    # hop-BFS NN adjacency: small meshes ride in the block-kernel
-    # closure (the same ship-the-edge-list pattern as mesh
-    # morphology); past _MESH_ADJ_BCAST_BYTES the CSR ships ONCE per
-    # executor as a Spark broadcast variable instead of once per task
-    # serialization — a 10⁷-edge mesh is ~160 MB of closure otherwise
-    mesh_adj = (
-        _collect_mesh_adj(mesh_edges, cell_geo)
-        if (not grid and nn_partitioning and mesh_edges is not None)
-        else None
-    )
-    if n_blocks <= 1:
-        # one block has no carry to iterate on: the chunked engine
-        # resolves it with no Jacobi round
-        return split_merge_events_chunked(
-            labels if grid else labels_raw,
-            nx=nx,
-            overlap_threshold=overlap_threshold,
-            wrap_x=wrap_x,
-            time_col=time_col,
-            nn_partitioning=nn_partitioning,
-            max_distance=max_distance,
-            max_iter_per_step=max_iter_per_step,
-            labels_materialized=True,
-            geometry=geometry,
-            cell_geo=cell_geo,
-            max_driver_cells=max_driver_cells,
-            mesh_adj=mesh_adj,
-            ny=ny,
-        )
-
-    block_of = {t: i // block_steps for i, t in enumerate(times)}
-    carry_times = set()  # last two times of every non-final block
-    for b in range(n_blocks - 1):
-        carry_times.update(times[: (b + 1) * block_steps][-2:])
-    blocks_df = F.broadcast(
-        spark.createDataFrame(
-            [(t, b) for t, b in block_of.items()],
-            schema=f"{time_col} {time_type}, block long",
-        )
-    )
-    stride = 1 << 33  # global_max computed in the pre-pass above
-    mesh_adj_bc = None
-    if mesh_adj is not None and mesh_adj.nbytes() > _MESH_ADJ_BCAST_BYTES:
-        mesh_adj_bc = spark.sparkContext.broadcast(mesh_adj)
-        mesh_adj = None
-
-    coord_cols = ["y", "x"] if grid else ["cell", "lat", "lon"]
-    coord_schema = "y long, x long" if grid else "cell long, lat double, lon double"
-    # NOT checkpointed: this plan is executed exactly once, as the
-    # child of the single range exchange cached as `inp0` below —
-    # every resolution round reads that cache, never this join.
-    cells_b = labels.select(time_col, *coord_cols, "obj_id").join(
-        blocks_df, time_col
-    )
-
-    out_schema = (
-        f"block long, kind int, seq long, k long, {time_col} {time_type}, "
-        f"{coord_schema}, obj_id long, parent long, overlap long"
-    )
-
-    def _block_kernel_core(
-        b: int,
-        cells_pdf: pd.DataFrame,
-        carry_pdf: pd.DataFrame | None,
-        carries_only: bool = False,
-    ) -> pd.DataFrame:
-        resolver = _Resolver(
-            nx=nx,
-            wrap_x=wrap_x,
-            overlap_threshold=overlap_threshold,
-            max_iter_per_step=max_iter_per_step,
-            grid=grid,
-            nn_partitioning=nn_partitioning,
-            max_distance=max_distance,
-            mesh_adj=(
-                mesh_adj_bc.value if mesh_adj_bc is not None else mesh_adj
-            ),
-            ny=ny,
-        )
-        resolver.next_new_id = global_max + 1 + b * stride
-        carry = []
-        if carry_pdf is not None and len(carry_pdf):
-            cslices, ctimes = resolver.build_slices(carry_pdf, time_col)
-            carry = [(ctimes[i], cslices[i]) for i in range(len(ctimes))]
-        slices, stimes = resolver.build_slices(cells_pdf, time_col)
-        _resolve_block(resolver, carry, slices, stimes)
-
-        def _coords(sl=None):
-            if grid:
-                return (
-                    {"y": sl["c1"], "x": sl["c2"]}
-                    if sl is not None
-                    else {"y": 0, "x": 0}
-                )
-            return (
-                {"cell": sl["key"], "lat": sl["c1"], "lon": sl["c2"]}
-                if sl is not None
-                else {"cell": 0, "lat": 0.0, "lon": 0.0}
-            )
-
-        def _repeat_times(tsel: list, lens: list) -> np.ndarray:
-            if time_type.startswith("timestamp"):
-                # datetime64 column, not object: Arrow-serialising an
-                # object column of pd.Timestamp goes element by element
-                # — at 1.75M cells it was most of the full-output pass
-                return np.repeat(pd.DatetimeIndex(tsel).to_numpy(), lens)
-            return np.repeat(np.asarray(tsel, dtype=object), lens)
-
-        frames = []
-        if stimes:
-            # ONE frame for all resolved cells (a frame per timestep
-            # plus a concat cost ~40% of the kernel at 300+ steps).
-            # carries_only rounds (r10) emit JUST the block's last two
-            # post-resolution slices — the only rows any later round
-            # consumes — so intermediate rounds stop re-materialising
-            # whole blocks through Arrow (guide §2.3/§8: move the
-            # lightweight proxy between rounds, the heavy bytes once).
-            idxs = (
-                list(range(max(0, len(stimes) - 2), len(stimes)))
-                if carries_only
-                else list(range(len(stimes)))
-            )
-            tvals = _repeat_times(
-                [stimes[i] for i in idxs], [len(slices[i]["id"]) for i in idxs]
-            )
-            cat = {
-                k: np.concatenate([slices[i][k] for i in idxs])
-                for k in (("c1", "c2", "id") if grid else ("key", "c1", "c2", "id"))
-            }
-            cells_cols = (
-                {"y": cat["c1"], "x": cat["c2"]}
-                if grid
-                else {"cell": cat["key"], "lat": cat["c1"], "lon": cat["c2"]}
-            )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "block": b,
-                        "kind": 0,
-                        "seq": 0,
-                        "k": 0,
-                        time_col: tvals,
-                        **cells_cols,
-                        "obj_id": cat["id"],
-                        "parent": 0,
-                        "overlap": 0,
-                    }
-                )
-            )
-        if stimes and not carries_only:
-            # the link graph of the block's FINAL slices (kind 1, time =
-            # the later slice's): the carry's last slice → the first
-            # slice, then slice → slice. Full-output passes only: the
-            # carry is then the converged predecessor tail (a block
-            # never mutates its carry), so cross-block pairs are exact
-            chain = [sl for _, sl in carry[-1:]] + [
-                slices[i] for i in range(len(stimes))
-            ]
-            per_step = _link_pairs(chain, overlap_threshold)
-            links = np.concatenate([np.empty((0, 3), np.int64), *per_step])
-            if len(links):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "block": b,
-                            "kind": 1,
-                            "seq": 0,
-                            "k": 0,
-                            time_col: _repeat_times(
-                                stimes[len(stimes) + 1 - len(chain) :],
-                                [len(p) for p in per_step],
-                            ),
-                            **_coords(),
-                            "obj_id": links[:, 0],
-                            "parent": links[:, 1],
-                            "overlap": links[:, 2],
-                        }
-                    )
-                )
-        led = resolver.ledger
-        for si in range(0 if carries_only else len(led.times)):
-            n_par = len(led.parent_ids[si])
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "block": b,
-                        "kind": 2,
-                        "seq": si,
-                        "k": np.arange(n_par, dtype=np.int64),
-                        time_col: led.times[si],
-                        **_coords(),
-                        "obj_id": led.child_ids[si],
-                        "parent": led.parent_ids[si],
-                        "overlap": led.areas[si],
-                    }
-                )
-            )
-        if frames:
-            return pd.concat(frames, ignore_index=True)
-        empty = np.array([], dtype=np.int64)
-        empty_coords = (
-            {"y": empty, "x": empty}
-            if grid
-            else {"cell": empty, "lat": empty.astype(float), "lon": empty.astype(float)}
-        )
-        return pd.DataFrame(
-            {
-                "block": empty,
-                "kind": empty.astype(np.int32),
-                "seq": empty,
-                "k": empty,
-                time_col: pd.to_datetime([]),
-                **empty_coords,
-                "obj_id": empty,
-                "parent": empty,
-                "overlap": empty,
-            }
-        )
-
-    def _mk_round_kernel(carry_bc, carries_only: bool = False):
-        """Distributed-round kernel: cells arrive as the group rows,
-        the (small) carries ride a per-round broadcast keyed by block —
-        so the per-round input plan is a bare filter of the cached
-        partitioned cell set, with no carry union and no exchange.
-        ``carries_only`` rounds return just the block's last two
-        post-resolution slices (see _block_kernel_core)."""
-
-        def _k(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf["block"].iloc[0])
-            return _block_kernel_core(
-                b, pdf, carry_bc.value.get(b), carries_only=carries_only
-            )
-
-        return _k
-
-    key_cols = ["y", "x"] if grid else ["cell"]
-
-    def _carry_key(pdf: pd.DataFrame):
-        return sorted(
-            zip(pdf[time_col], *[pdf[c] for c in key_cols], pdf["obj_id"])
-        )
-
-    # Seed every block's carry with the UNRESOLVED last-two slices of
-    # its predecessor: a block's resolution rarely changes its own tail,
-    # so the seed is usually already the fixpoint. Round 1 then resolves
-    # all blocks against near-true carries, and each later round
-    # re-resolves ONLY the blocks whose carry-in actually changed
-    # ("stale") — typically none, so the common case is ONE full round
-    # plus a cheap stability check instead of two full rounds. The
-    # convergence argument is unchanged: a block is re-resolved whenever
-    # its desired carry differs from the one it was last resolved with,
-    # so at the fixpoint every block has been resolved against the true
-    # chain (block 0 exact after round 1, block b after <= b+1 rounds).
-    seed_cols = [time_col, *coord_cols, "obj_id", "block"]
-    # ONE range exchange for the whole resolution, persisted: every
-    # round's kernel input is a bare filter of this cached partitioned
-    # table (RangePartitioning(block) satisfies applyInPandas'
-    # clustering through a filter, so rounds >= 1 run with ZERO
-    # exchanges and no repeated boundary-sampling scan — the A/B that
-    # motivated this measured ~3-6.5 s of fixed cost per stale round
-    # in the shuffle-per-round form).
-    from pyspark.storagelevel import StorageLevel
-
-    n_part = max(n_blocks, spark.sparkContext.defaultParallelism)
-    inp0 = cells_b.repartitionByRange(n_part, "block").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if carry_times:
-        # first action: materialises the cache AND collects the seeds
-        seed_pdf = (
-            inp0.filter(F.col(time_col).isin(list(carry_times)))
-            .select(*seed_cols)
-            .toPandas()
-        )
-    else:
-        seed_pdf = pd.DataFrame(columns=seed_cols)
-    carry_in: dict[int, pd.DataFrame | None] = {0: None}
-    for b in range(n_blocks - 1):
-        g = seed_pdf[seed_pdf["block"] == b][[time_col, *coord_cols, "obj_id"]]
-        carry_in[b + 1] = g if len(g) else None
-    _UNRESOLVED = object()
-    carry_used: dict[int, object] = {b: _UNRESOLVED for b in range(n_blocks)}
-
-    def _same_carry(a, b):
-        if a is None or b is None:
-            return a is None and b is None
-        return _carry_key(a) == _carry_key(b)
-
-    stale = list(range(n_blocks))
-    # POST-round stale counts: entry r is how many blocks round r+1
-    # re-resolves, so [3, 1, 0] means rounds processed [all, 3, 1]
-    stale_log: list[int] = []
-    # blocks re-resolved in a carries-only stale round: their full
-    # frames are re-materialised ONCE by the post-convergence final pass
-    ever_stale: set[int] = set()
-    carry_bcs: list = []
-    for rnd in range(n_blocks + 1):
-        if not stale:
-            break
-        # a bare filter of the cached partitioned cells (no exchange —
-        # RangePartitioning(block) survives the filter and satisfies
-        # the groupBy clustering, plan-checked in tests), carries ride
-        # a per-round broadcast
-        inp = inp0 if rnd == 0 else inp0.filter(F.col("block").isin(stale))
-        carry_bc = spark.sparkContext.broadcast(
-            {b: carry_in[b] for b in stale if carry_in[b] is not None}
-        )
-        carry_bcs.append(carry_bc)
-        if rnd == 0:
-            round0 = fresh = (
-                inp.groupBy("block")
-                .applyInPandas(_mk_round_kernel(carry_bc), schema=out_schema)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-        else:
-            # stale rounds: only the carries are ever consumed between
-            # rounds, so the kernel emits JUST each block's last two
-            # post-resolution slices — the round's one job collects
-            # them directly, with no full-output Arrow pass and no
-            # persist (the full re-materialisation measured ~1.5-2 s of
-            # each 2.5 s stale round at sf0.1; the re-resolved blocks'
-            # full frames come from the post-convergence final pass
-            # below, byte-identical because the kernel is deterministic
-            # in (cells, carry)).
-            ever_stale.update(stale)
-            fresh = inp.groupBy("block").applyInPandas(
-                _mk_round_kernel(carry_bc, carries_only=True),
-                schema=out_schema,
-            )
-        for b in stale:
-            carry_used[b] = carry_in[b]
-        if carry_times:
-            co = fresh.filter(
-                (F.col("kind") == 0) & F.col(time_col).isin(list(carry_times))
-            ).toPandas()
-            for b in stale:
-                if b + 1 < n_blocks:
-                    g = co[co["block"] == b][[time_col, *coord_cols, "obj_id"]]
-                    carry_in[b + 1] = g if len(g) else None
-        stale = [
-            b
-            for b in range(n_blocks)
-            if carry_used[b] is _UNRESOLVED
-            or not _same_carry(carry_in[b], carry_used[b])
-        ]
-        stale_log.append(len(stale))
-    if stale:
-        # invariant: block b is exact after <= b+1 rounds, so #blocks+1
-        # rounds always converge — returning here would silently break
-        # the equal-to-one-block-resolution contract
-        from marex_spark.exceptions import ProcessingError
-
-        raise ProcessingError(
-            "parallel merge resolution did not converge",
-            details={"rounds": len(stale_log), "n_blocks": n_blocks},
-        )
-
-    # post-convergence final pass: blocks re-resolved in a carries-only
-    # stale round are re-resolved ONCE against the exact carry each was
-    # last resolved with (carry_used) and replace their round-0 frames
-    final_blocks = sorted(ever_stale)
-    out = round0
-    cached = [round0]
-    if final_blocks:
-        final_bc = spark.sparkContext.broadcast(
-            {
-                b: carry_used[b]
-                for b in final_blocks
-                if carry_used[b] is not None
-            }
-        )
-        carry_bcs.append(final_bc)
-        ffresh = (
-            inp0.filter(F.col("block").isin(final_blocks))
-            .groupBy("block")
-            .applyInPandas(_mk_round_kernel(final_bc), schema=out_schema)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        cached.append(ffresh)
-        out = out.filter(~F.col("block").isin(final_blocks)).unionByName(ffresh)
-
-    # ---- ONE job collects the ledger and the link graph; block-local
-    # new ids are then renumbered into the serial time-order counter.
-    # A link pair shares >= 1 cell of its later slice, so the pair count
-    # is bounded by the cell count: the driver-budget check costs a job
-    # only when the cells alone exceed the budget
-    links_df = out.filter(F.col("kind") == 1)
-    budget = components.MAX_DRIVER_PAIRS
-    n_links = links_df.count() if n_cells_total > budget else 0
-    over_budget = n_links > budget
-    col_pdf = (
-        out.filter(F.col("kind") >= (2 if over_budget else 1))
-        .select("block", "kind", "seq", "k", time_col, "obj_id", "parent", "overlap")
-        .toPandas()
-    )
-    led_pdf = col_pdf[col_pdf["kind"] == 2]
-    led_pdf = led_pdf.sort_values(["block", "seq", "k"]).reset_index(drop=True)
-    link_pdf = col_pdf[col_pdf["kind"] == 1]
-    child_arr = led_pdf["obj_id"].to_numpy(np.int64)
-    # block offsets are ascending with block, local ids ascending with
-    # creation order → ascending sort IS serial creation order
-    created = np.unique(child_arr)
-    created = created[created > global_max]
-
-    def _renum_arr(a: np.ndarray) -> np.ndarray:
-        """created[i] → global_max+1+i, everything else unchanged
-        (vectorised form of the old per-element dict .get loop)."""
-        if not len(created) or not len(a):
-            return a
-        idx = np.searchsorted(created, a)
-        idx_c = np.minimum(idx, len(created) - 1)
-        hit = created[idx_c] == a
-        out_a = a.copy()
-        out_a[hit] = global_max + 1 + idx_c[hit]
-        return out_a
-
-    def _renum_df(df: DataFrame, col: str) -> DataFrame:
-        """The same renumbering as a broadcast join on one id column."""
-        if not len(created):
-            return df
-        map_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"_old": created, "_new": global_max + 1 + np.arange(len(created))}
-            ),
-            schema="_old long, _new long",
-        )
-        return (
-            df.join(F.broadcast(map_df), F.col(col) == F.col("_old"), "left")
-            .withColumn(col, F.coalesce("_new", col))
-            .select(*df.columns)
-        )
-
-    cells_out = _renum_df(
-        out.filter(F.col("kind") == 0).select(time_col, *key_cols, "obj_id"),
-        "obj_id",
-    )
-    if over_budget:
-        # stays distributed; checkpointed before the round caches go
-        link_pairs = _renum_df(
-            _renum_df(
-                links_df.select(
-                    F.col("obj_id").alias("id_t"), F.col("parent").alias("id_next")
-                ),
-                "id_t",
-            ),
-            "id_next",
-        ).localCheckpoint()
-    else:
-        link_pairs = np.column_stack(
-            (
-                _renum_arr(link_pdf["obj_id"].to_numpy(np.int64)),
-                _renum_arr(link_pdf["parent"].to_numpy(np.int64)),
-            )
-        )
-        n_links = len(link_pairs)
     _log.debug(
-        "split_merge_events_parallel: %d blocks, %d rounds, stale after "
-        "each round %s, %d link pairs",
-        n_blocks,
-        len(stale_log),
-        stale_log,
+        "split_merge_events: %d pages, %d cells, %d link pairs",
+        n_chunks,
+        sum(counts),
         n_links,
         extra={
-            "merge_blocks": n_blocks,
-            "merge_rounds": len(stale_log),
-            "merge_stale": list(stale_log),
+            "merge_pages": n_chunks,
+            "merge_cells": sum(counts),
             "merge_link_pairs": n_links,
         },
     )
-
-    ledger = MergeLedger([], [], [], [])
-    if len(led_pdf):
-        child_ren = _renum_arr(child_arr)
-        parent_ren = _renum_arr(led_pdf["parent"].to_numpy(np.int64))
-        areas_arr = led_pdf["overlap"].to_numpy(np.int64)
-        keys = led_pdf[["block", "seq"]].to_numpy(np.int64)
-        brk = np.flatnonzero(np.any(np.diff(keys, axis=0) != 0, axis=1)) + 1
-        starts = np.concatenate(([0], brk))
-        ends = np.concatenate((brk, [len(led_pdf)]))
-        tvals = led_pdf[time_col]
-        for s, e in zip(starts, ends):
-            ledger.times.append(tvals.iloc[s])
-            ledger.child_ids.append(child_ren[s:e])
-            ledger.parent_ids.append(parent_ren[s:e])
-            ledger.areas.append(areas_arr[s:e])
-    # Materialise the output NOW, then release the round caches: the
-    # final round's persisted `out` and the `cells_b` checkpoint would
-    # otherwise stay resident for the whole session, accumulating
-    # cached blocks across repeated calls (ADVICE r2; the same concern
-    # DetectResult.unpersist addresses in detect.py). The eager
-    # checkpoint cuts lineage, so dropping the references lets the
-    # ContextCleaner reclaim cells_b too.
-    cells_out = cells_out.localCheckpoint()
-    for df in cached:
-        df.unpersist()
-    inp0.unpersist()
-    for bc in carry_bcs:
-        bc.unpersist()
-    return cells_out, _ledger_df(spark, ledger, time_col, time_type), link_pairs
+    return out_df, ledger, link_pairs

@@ -292,7 +292,6 @@ def track_events(
     nn_partitioning: bool = False,
     max_distance: float | None = None,
     merge_parallel: bool = True,
-    merge_block_steps: int | None = None,
     compact_ids: bool = False,
     labels: DataFrame | None = None,
     cell_areas: DataFrame | None = None,
@@ -335,14 +334,12 @@ def track_events(
     ``components.MAX_DRIVER_PAIRS`` the pairs stay distributed and go
     to the distributed solver.
 
-    Two resolver engines produce the same labels and ledger:
-    ``merge_parallel=True`` (default) resolves time blocks concurrently
-    on the executors with a Jacobi carry fixpoint
-    (split_merge_events_parallel; ``merge_block_steps`` sets the block
-    size, ``None`` auto-sizes it from parallelism and a per-block cell
-    budget); ``merge_parallel=False`` runs the driver-paged chunk loop
-    (split_merge_events_chunked; driver memory O(one cell-budgeted
-    page), ``max_driver_cells`` caps a page).
+    The resolver is :func:`marex_spark.operators.merge.split_merge_events`,
+    the reference's chunk loop paged through driver memory: at most
+    ``merge.TARGET_BLOCK_CELLS`` sparse cells per page, and
+    ``max_driver_cells`` caps a page (a page only exceeds the budget
+    when one timestep does). ``merge_parallel`` has no effect; it is
+    accepted so existing callers keep working.
     """
     if link_adjacency and allow_merging:
         from marex_spark.exceptions import ConfigurationError
@@ -376,41 +373,22 @@ def track_events(
     }
     link_pairs = None
     if allow_merging:
-        from marex_spark.operators.merge import (
-            split_merge_events_chunked,
-            split_merge_events_parallel,
-        )
+        from marex_spark.operators.merge import split_merge_events
 
-        if merge_parallel:
-            labels, ledger, link_pairs = split_merge_events_parallel(
-                labels,
-                nx=nx,
-                ny=ny,
-                block_steps=merge_block_steps,
-                overlap_threshold=overlap_threshold,
-                wrap_x=wrap_x,
-                time_col=time_col,
-                nn_partitioning=nn_partitioning,
-                max_distance=max_distance,
-                labels_materialized=True,
-                max_driver_cells=max_driver_cells,
-            )
-        else:
-            labels, ledger, link_pairs = split_merge_events_chunked(
-                labels,
-                nx=nx,
-                ny=ny,
-                overlap_threshold=overlap_threshold,
-                wrap_x=wrap_x,
-                time_col=time_col,
-                nn_partitioning=nn_partitioning,
-                max_distance=max_distance,
-                labels_materialized=True,  # label_components checkpoints
-                max_driver_cells=max_driver_cells,
-            )
-        # both engines return MATERIALIZED labels (the parallel
-        # engine's cells_out localCheckpoint, the chunked engine's
-        # parquet spill) — re-checkpointing here paid a second full
+        labels, ledger, link_pairs = split_merge_events(
+            labels,
+            nx=nx,
+            ny=ny,
+            overlap_threshold=overlap_threshold,
+            wrap_x=wrap_x,
+            time_col=time_col,
+            nn_partitioning=nn_partitioning,
+            max_distance=max_distance,
+            labels_materialized=True,  # checkpointed above
+            max_driver_cells=max_driver_cells,
+        )
+        # the resolver returns MATERIALIZED labels (its parquet spill)
+        # — re-checkpointing here would pay a second full
         # materialization of the cell set per tracking run
         extras["merge_ledger"] = ledger
 
@@ -522,8 +500,6 @@ def track_events_unstructured(
     allow_merging: bool = False,
     nn_partitioning: bool = False,
     max_distance: float | None = None,
-    merge_parallel: bool = True,
-    merge_block_steps: int | None = None,
     compact_ids: bool = False,
     labels: DataFrame | None = None,
     max_driver_cells: int | None = None,
@@ -538,8 +514,13 @@ def track_events_unstructured(
     ``labels``: pre-labelled (time, cell, obj_id) input (e.g. from the
     mesh area filter) — skips the labelling pass.
 
-    ``allow_merging=True`` links events from the resolver kernel's link
-    pairs, as :func:`track_events` does; no-merge tracking builds the
+    ``allow_merging=True`` resolves splits and merges with the
+    sphere form of the driver-paged resolver
+    (:func:`marex_spark.operators.merge.split_merge_events`; haversine
+    partitioning, and with ``nn_partitioning`` a hop-BFS over
+    ``edges``, ``max_distance`` in hops), then links events from the
+    resolver kernel's link pairs, as :func:`track_events` does;
+    ``max_driver_cells`` caps a page. No-merge tracking builds the
     overlap graph in Spark.
     """
     from marex_spark.operators.label import label_components_unstructured
@@ -569,45 +550,26 @@ def track_events_unstructured(
             )
         from marex_spark.operators.merge import (
             _collect_mesh_adj,
-            split_merge_events_chunked,
-            split_merge_events_parallel,
+            split_merge_events,
         )
 
-        if merge_parallel:
-            labels, ledger, link_pairs = split_merge_events_parallel(
-                labels,
-                block_steps=merge_block_steps,
-                overlap_threshold=overlap_threshold,
-                time_col=time_col,
-                nn_partitioning=nn_partitioning,
-                max_distance=max_distance,
-                geometry="sphere",
-                cell_geo=cell_geo,
-                max_driver_cells=max_driver_cells,
-                # reference hop-BFS NN (partition_nn_unstructured):
-                # max_distance is in HOPS on the mesh path
-                mesh_edges=edges if nn_partitioning else None,
-            )
-        else:
-            labels, ledger, link_pairs = split_merge_events_chunked(
-                labels,
-                overlap_threshold=overlap_threshold,
-                time_col=time_col,
-                nn_partitioning=nn_partitioning,
-                max_distance=max_distance,
-                geometry="sphere",
-                cell_geo=cell_geo,
-                max_driver_cells=max_driver_cells,
-                mesh_adj=(
-                    _collect_mesh_adj(edges, cell_geo)
-                    if nn_partitioning
-                    else None
-                ),
-            )
-        # both engines return MATERIALIZED labels (the parallel
-        # engine's cells_out localCheckpoint, the chunked engine's
-        # parquet spill) — re-checkpointing here paid a second full
-        # materialization of the cell set per tracking run
+        labels, ledger, link_pairs = split_merge_events(
+            labels,
+            overlap_threshold=overlap_threshold,
+            time_col=time_col,
+            nn_partitioning=nn_partitioning,
+            max_distance=max_distance,
+            geometry="sphere",
+            cell_geo=cell_geo,
+            max_driver_cells=max_driver_cells,
+            # reference hop-BFS NN (partition_nn_unstructured):
+            # max_distance is in HOPS on the mesh path
+            mesh_adj=(
+                _collect_mesh_adj(edges, cell_geo)
+                if nn_partitioning
+                else None
+            ),
+        )
         extras["merge_ledger"] = ledger
     else:
         link_pairs = _overlap_links(labels, ("cell",), time_col, overlap_threshold)
@@ -682,11 +644,12 @@ def extend_track_events(
     made with a global area QUARTILE froze that quantile — extension
     keeps it (pass ``area_filter_absolute`` workflows for exactness).
 
-    ``allow_merging=True`` extends a split/merge run: the chunked
-    resolver (split_merge_events_chunked, paged by its cell budget)
-    resumes from (carry = the prior run's last two resolved slices,
-    rebuilt from ``prior_events``; id counter past the prior max),
-    which is the complete between-chunk sequencing state. The
+    ``allow_merging=True`` extends a split/merge run: the driver-paged
+    resolver (:func:`marex_spark.operators.merge.split_merge_events`,
+    the same engine a full run uses) resumes from (carry = the prior
+    run's last two resolved slices, rebuilt from ``prior_events``; id
+    counter past the prior max), which is the complete between-page
+    sequencing state. The
     resulting partition STRUCTURE and ledger match a from-scratch run,
     but id VALUES are a consistent relabelling rather than numerically
     identical — a full recompute reseeds its id counter from the
@@ -805,7 +768,7 @@ def _extend_resume_merge(
     the resolver carry from the prior run's last two resolved slices
     (prior events ARE the post-resolution labels, put back into the
     resolver's slice layout by the same build_slices pass), resume the
-    chunked resolver over the new labels only, and append the new
+    resolver over the new labels only, and append the new
     ledger after the prior one with dense merge ids.
     ``cell_geo=None`` selects grid geometry; a (cell, lat, lon) table
     selects the sphere form. Returns (resolved labels, ledger)."""
@@ -813,7 +776,7 @@ def _extend_resume_merge(
     from marex_spark.operators.merge import (
         _Resolver,
         _collect_mesh_adj,
-        split_merge_events_chunked,
+        split_merge_events,
     )
 
     grid = cell_geo is None
@@ -859,7 +822,7 @@ def _extend_resume_merge(
         "carry": [(c_times[i], c_slices[i]) for i in range(len(c_times))],
         "next_new_id": prior_max_id + 1,
     }
-    resolved, new_ledger, _ = split_merge_events_chunked(
+    resolved, new_ledger, _ = split_merge_events(
         labels_new,
         nx=nx,
         ny=ny,
@@ -1015,10 +978,11 @@ def extend_track_events_unstructured(
     to prior event ids; min-root numbering reproduces the full
     recompute).
 
-    ``allow_merging=True`` resumes the sphere-geometry chunked resolver
-    (split_merge_events_chunked, paged by its cell budget) from the
-    prior run's last two resolved slices (joined with
-    ``cell_geo``, which is required) — same structural-parity contract
+    ``allow_merging=True`` resumes the sphere form of the driver-paged
+    resolver (:func:`marex_spark.operators.merge.split_merge_events`,
+    the same engine a full run uses) from the prior run's last two
+    resolved slices (joined with ``cell_geo``, which is required) —
+    same structural-parity contract
     as the gridded merge extension (id values are a consistent
     relabelling, partition structure and ledger match a from-scratch
     run)."""

@@ -62,8 +62,8 @@ _PRIORITY = [
     # scan-pushdown path and the tracking/event-graph component path):
     "s1_scan_pushdown",
     "trk_m7_connected_components",
-    # Tier 4 — the full 24-row r5-stale cohort (the rows the r8 plan
-    # deferred; after this window no registry row is staler than r6):
+    # Tier 4 — the r5-stale cohort (the rows the r8 plan deferred, 22
+    # left of 24; after this window no registry row is staler than r6):
     "j5_temporal_selfjoin",
     "j9_explode_scatter",
     "mm_scene_cuts",
@@ -80,15 +80,15 @@ _PRIORITY = [
     "trk_extendu_incremental",
     "trk_j9_merge_ledger",
     "trk_j9u_merge_ledger",
-    "trk_m9_parallel",
     "trk_m9_split_merge",
-    "trk_m9u_parallel",
     "w1_rolling_mean",
     "w2_circular_doy_window",
     "w6_cumsum_offset",
     "w7_cdf_cumsum",
     "wr_topk_per_group",
-    # Tier 5 — oldest r6 rows, alphabetical head (14 slots to 50):
+    # Tier 5 — oldest r6 rows, alphabetical head (16 slots to 50; two
+    # refilled when the parallel-resolver twins of trk_m9_split_merge
+    # and trk_m9u_split_merge left the registry):
     "a12_max_count_distinct",
     "a13_first_last_presence",
     "a1_doy_climatology",
@@ -103,9 +103,11 @@ _PRIORITY = [
     "f3_linear_detrend",
     "f7_conditional",
     "f9_clip",
+    "j2_doy_threshold_join",
+    "j3_broadcast_threshold",
     # ---- r10 window plan (remainder rule): the remaining r6 rows
-    # (j2_doy_threshold_join, j3_broadcast_threshold, j4_std_normalise,
-    # j6_property_lookup, j8_id_remap, m11_circular_centroid,
+    # (j4_std_normalise, j6_property_lookup, j8_id_remap,
+    # m11_circular_centroid,
     # p1_mask_filter, p2_finite_filter, p3_validation_audit,
     # p5_time_slice, p6_anti_join, p7_positive_id_cleanup,
     # p8_dtype_casts, s2_netcdf_scan, s6_catalog_scan, so2_except,

@@ -741,27 +741,7 @@ def trk_m9_split_merge(spark, sf_dir):
     base = _bool_grid(spark, sf_dir).withColumn("extreme", F.lit(True))
     res = track_events(
         base, nx=NXG, time_col="d", overlap_threshold=_M9_THR,
-        compute_stats=False, allow_merging=True, merge_parallel=False,
-    )
-    return _m9_lifetime(res)
-
-
-@register("trk_m9_parallel", _M9_SQL)
-def trk_m9_parallel(spark, sf_dir):
-    """Wall-clock-parallel split/merge tier (the reference's batched
-    iteration mode, track.py:3804-4814): time-blocks resolved
-    concurrently as applyInPandas groups, Jacobi carry fixpoint,
-    output exactly equal to the serial resolver (also pinned by
-    tests/test_merge.py::test_parallel_matches_oneshot) — so the SAME
-    full-replay oracle gates it. Small block_steps so several blocks +
-    carry rounds engage even on the small fixture."""
-    from marex_spark.operators.track import track_events
-
-    base = _bool_grid(spark, sf_dir).withColumn("extreme", F.lit(True))
-    res = track_events(
-        base, nx=NXG, time_col="d", overlap_threshold=_M9_THR,
         compute_stats=False, allow_merging=True,
-        merge_parallel=True, merge_block_steps=8,
     )
     return _m9_lifetime(res)
 
@@ -1062,22 +1042,7 @@ def trk_m9u_split_merge(spark, sf_dir):
     res = track_events_unstructured(
         ext, edges, cell_geo=geo, time_col="d",
         overlap_threshold=_M9_THR, allow_merging=True,
-        merge_parallel=False, compute_stats=False,
-    )
-    return _m9u_lifetime(res)
-
-
-@register("trk_m9u_parallel", _M9U_SQL)
-def trk_m9u_parallel(spark, sf_dir):
-    """The parallel (Jacobi time-block) tier on the mesh — pinned equal
-    to the serial resolver by tests; the same replay oracle gates it."""
-    from marex_spark.operators.track import track_events_unstructured
-
-    ext, edges, geo = _m9u_inputs(spark, sf_dir)
-    res = track_events_unstructured(
-        ext, edges, cell_geo=geo, time_col="d",
-        overlap_threshold=_M9_THR, allow_merging=True,
-        merge_parallel=True, merge_block_steps=8, compute_stats=False,
+        compute_stats=False,
     )
     return _m9u_lifetime(res)
 
@@ -1093,7 +1058,7 @@ def trk_j9u_merge_ledger(spark, sf_dir):
     res = track_events_unstructured(
         ext, edges, cell_geo=geo, time_col="d",
         overlap_threshold=_M9_THR, allow_merging=True,
-        merge_parallel=False, compute_stats=False,
+        compute_stats=False,
     )
     ledger = res.extras["merge_ledger"]
     return ledger.select(
@@ -1131,23 +1096,7 @@ def trk_m9nn_split_merge(spark, sf_dir):
     base = _bool_grid(spark, sf_dir).withColumn("extreme", F.lit(True))
     res = track_events(
         base, nx=NXG, ny=NYG, time_col="d", overlap_threshold=_M9_THR,
-        compute_stats=False, allow_merging=True, merge_parallel=False,
-        nn_partitioning=True, max_distance=_M9NN_DIST,
-    )
-    return _m9_lifetime(res)
-
-
-@register("trk_m9nn_parallel", _M9NN_SQL)
-def trk_m9nn_parallel(spark, sf_dir):
-    """NN mode through the parallel Jacobi tier — same replay oracle
-    (tiers are pinned output-equal)."""
-    from marex_spark.operators.track import track_events
-
-    base = _bool_grid(spark, sf_dir).withColumn("extreme", F.lit(True))
-    res = track_events(
-        base, nx=NXG, ny=NYG, time_col="d", overlap_threshold=_M9_THR,
         compute_stats=False, allow_merging=True,
-        merge_parallel=True, merge_block_steps=8,
         nn_partitioning=True, max_distance=_M9NN_DIST,
     )
     return _m9_lifetime(res)

@@ -119,7 +119,6 @@ class Tracker:
     time_col: str = "time"
     extreme_col: str = "extreme"
     connectivity: int = 8
-    merge_parallel: bool = True
     compact_ids: bool = False
     checkpoint: str | None = None  # 'save' | 'load' | None (track.py:138,342)
     temp_dir: str | None = None
@@ -792,7 +791,6 @@ class Tracker:
                 allow_merging=self.allow_merging,
                 nn_partitioning=self.nn_partitioning,
                 max_distance=self.max_distance,
-                merge_parallel=self.merge_parallel,
                 compact_ids=self.compact_ids,
                 labels=labels,
             )
@@ -812,7 +810,6 @@ class Tracker:
             allow_merging=self.allow_merging,
             nn_partitioning=self.nn_partitioning,
             max_distance=self.max_distance,
-            merge_parallel=self.merge_parallel,
             compact_ids=self.compact_ids,
             labels=labels,
             cell_areas=self.cell_areas if self.grid_resolution is None else None,

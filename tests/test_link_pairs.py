@@ -5,19 +5,21 @@ slices and ``track_events`` links events from them; no-merge tracking,
 extension and rewind link through ``overlap_pairs`` +
 ``object_areas`` + ``filter_overlap_fraction``. Both must give the same
 pairs, and the same events with ids, over the engine's own output
-labels — for both engines, grid and sphere, with and without the
+labels — paged and in one page, grid and sphere, with and without the
 overlap gate (θ = 0.55 is where the multiplied gate form used to drop
 pairs the divided form keeps)."""
 
 from __future__ import annotations
 
 import datetime
+import logging
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 import marex_spark.operators.merge as M
+from marex_spark.logging_config import get_logger
 from marex_spark.operators import components
 from marex_spark.operators.track import (
     _link_events,
@@ -35,9 +37,7 @@ THETAS = [0.0, 0.5, 0.55]
 @pytest.fixture(scope="module")
 def grid_labels(spark):
     """Two 11×11 blobs drifting together (collision ~t=8): the extreme
-    cells of tests/test_merge.py's ``two_blob_field``, on which
-    ``test_parallel_rounds_are_stale_only`` pins a stale round at
-    ``block_steps=3`` — so the final pass's pairs replace round 0's."""
+    cells of tests/test_merge.py's ``two_blob_field``."""
     from marex_spark.operators.label import label_components
 
     rows = []
@@ -71,18 +71,45 @@ def sphere_labels(spark):
     return field, labels, edges, geo
 
 
-def _engine(labels, geometry, parallel, theta, geo=None):
-    """(output labels, link pairs) from one engine run."""
+def _set_pages(monkeypatch, pages, step_cells):
+    """The resolver's page budget for the ``pages`` parameter: one step
+    per page ("chunked": every step boundary is a page boundary), or
+    the default budget, the whole series in one page ("whole")."""
+    if pages == "chunked":
+        monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", step_cells)
+
+
+def _engine(labels, geometry, pages, theta, geo=None):
+    """(output labels, link pairs) from one resolver run; also checks
+    the run's DEBUG record against the pages and the pairs."""
     kw = dict(overlap_threshold=theta)
     if geometry == "grid":
         kw.update(nx=NX)
     else:
         kw.update(geometry="sphere", cell_geo=geo)
-    if parallel:
-        out, _, pairs = M.split_merge_events_parallel(labels, block_steps=3, **kw)
-    else:
-        out, _, pairs = M.split_merge_events_chunked(labels, **kw)
-        assert len(out.inputFiles()) >= 4  # really paged
+    records: list[logging.LogRecord] = []
+
+    class _Cap(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    log = get_logger("marex_spark.operators.merge")
+    h = _Cap(level=logging.DEBUG)
+    prev_level = log.level
+    log.addHandler(h)
+    log.setLevel(logging.DEBUG)
+    try:
+        out, _, pairs = M.split_merge_events(labels, **kw)
+    finally:
+        log.removeHandler(h)
+        log.setLevel(prev_level)
+    (rec,) = [r for r in records if hasattr(r, "merge_pages")]
+    n_files = len(out.inputFiles())
+    assert rec.merge_pages == n_files
+    assert (n_files >= 4) if pages == "chunked" else (n_files == 1)
+    assert rec.merge_cells == labels.count()
+    n_pairs = len(pairs) if isinstance(pairs, np.ndarray) else pairs.count()
+    assert rec.merge_link_pairs == n_pairs > 0
     return out, pairs
 
 
@@ -107,47 +134,47 @@ def _check(out, pairs, keys, theta, events):
 
 
 @pytest.mark.parametrize("theta", THETAS)
-@pytest.mark.parametrize("parallel", [True, False], ids=["parallel", "chunked"])
-def test_grid_link_pairs_equal_overlap_chain(spark, grid_labels, monkeypatch, parallel, theta):
+@pytest.mark.parametrize("pages", ["chunked", "whole"])
+def test_grid_link_pairs_equal_overlap_chain(spark, grid_labels, monkeypatch, pages, theta):
     field, labels = grid_labels
-    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 250)  # 242 cells/step
-    out, pairs = _engine(labels, "grid", parallel, theta)
+    _set_pages(monkeypatch, pages, 250)  # 242 cells/step
+    out, pairs = _engine(labels, "grid", pages, theta)
     res = track_events(
         field, nx=NX, labels=labels, overlap_threshold=theta, compute_stats=False,
-        allow_merging=True, merge_parallel=parallel, merge_block_steps=3,
+        allow_merging=True,
     )
     _check(out, pairs, ("y", "x"), theta, res.events)
 
 
 @pytest.mark.parametrize("theta", THETAS)
-@pytest.mark.parametrize("parallel", [True, False], ids=["parallel", "chunked"])
-def test_sphere_link_pairs_equal_overlap_chain(spark, sphere_labels, monkeypatch, parallel, theta):
+@pytest.mark.parametrize("pages", ["chunked", "whole"])
+def test_sphere_link_pairs_equal_overlap_chain(spark, sphere_labels, monkeypatch, pages, theta):
     field, labels, edges, geo = sphere_labels
-    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 20)  # 18 cells/step
-    out, pairs = _engine(labels, "sphere", parallel, theta, geo=geo)
+    _set_pages(monkeypatch, pages, 20)  # 18 cells/step
+    out, pairs = _engine(labels, "sphere", pages, theta, geo=geo)
     res = track_events_unstructured(
         field, edges, geo, labels=labels, overlap_threshold=theta, compute_stats=False,
-        allow_merging=True, merge_parallel=parallel, merge_block_steps=3,
+        allow_merging=True,
     )
     _check(out, pairs, ("cell",), theta, res.events)
 
 
-@pytest.mark.parametrize("parallel", [True, False], ids=["parallel", "chunked"])
-def test_over_budget_link_pairs_stay_distributed(spark, grid_labels, monkeypatch, parallel):
-    """Past ``MAX_DRIVER_PAIRS`` the engines hand back the pairs as a
+@pytest.mark.parametrize("pages", ["chunked", "whole"])
+def test_over_budget_link_pairs_stay_distributed(spark, grid_labels, monkeypatch, pages):
+    """Past ``MAX_DRIVER_PAIRS`` the resolver hands back the pairs as a
     DataFrame and ``track_events`` links through the distributed
     solver: same pairs, same events."""
     field, labels = grid_labels
-    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 250)
-    out, pairs = _engine(labels, "grid", parallel, 0.5)
+    _set_pages(monkeypatch, pages, 250)
+    out, pairs = _engine(labels, "grid", pages, 0.5)
     monkeypatch.setattr(components, "MAX_DRIVER_PAIRS", 3)
-    out2, pairs_df = _engine(labels, "grid", parallel, 0.5)
+    out2, pairs_df = _engine(labels, "grid", pages, 0.5)
     assert not isinstance(pairs_df, np.ndarray)
     assert {(r.id_t, r.id_next) for r in pairs_df.collect()} == set(map(tuple, pairs.tolist()))
     assert sorted(out2.collect()) == sorted(out.collect())
     res = track_events(
         field, nx=NX, labels=labels, overlap_threshold=0.5, compute_stats=False,
-        allow_merging=True, merge_parallel=parallel, merge_block_steps=3,
+        allow_merging=True,
     )
     monkeypatch.setattr(components, "MAX_DRIVER_PAIRS", 10**9)
     chain = _link_events(out, _overlap_links(out, ("y", "x"), "time", 0.5), False)

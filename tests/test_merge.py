@@ -108,39 +108,10 @@ def test_pieces_follow_parents_before_collision(spark, two_blob_field):
         ), (t, lon)
 
 
-@pytest.mark.parametrize("block_steps", [3, 4])
-def test_parallel_matches_oneshot(spark, two_blob_field, block_steps):
-    """The Jacobi time-block engine must converge to exactly the
-    whole-series (one-shot) resolution's labels and ledger, including
-    new-id numbering (the collision at t=8 straddles or lands inside a
-    block depending on block_steps, exercising both carry paths)."""
-    from marex_spark.operators.label import label_components
-    from marex_spark.operators.merge import split_merge_events_parallel
-    from tests.reference.merge import split_merge_reference
-
-    labels = label_components(two_blob_field, nx=NX)
-    one, ledger_one = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
-    par, ledger_par, _ = split_merge_events_parallel(
-        labels, nx=NX, block_steps=block_steps, overlap_threshold=0.5
-    )
-    a = {(r.time, r.y, r.x, r.obj_id) for r in one.collect()}
-    b = {(r.time, r.y, r.x, r.obj_id) for r in par.collect()}
-    assert a == b
-    la = [
-        (r.time, tuple(r.parent_ids), tuple(r.child_ids), tuple(r.overlap_areas))
-        for r in ledger_one.collect()
-    ]
-    lb = [
-        (r.time, tuple(r.parent_ids), tuple(r.child_ids), tuple(r.overlap_areas))
-        for r in ledger_par.collect()
-    ]
-    assert la == lb
-
-
 @pytest.mark.parametrize("seed,density", [(3, 0.05), (11, 0.12), (29, 0.2)])
 def test_three_tiers_agree_on_random_fields(spark, monkeypatch, seed, density):
-    """The whole-series reference, the chunked engine (paged into
-    several chunks) and the parallel engine must agree exactly on
+    """The whole-series reference, the resolver paged into several
+    pages and the resolver in one page must agree exactly on
     unstructured random fields too — clumpy noise produces empty
     timesteps, singletons, simultaneous merges and splits that the
     analytic two-blob fixture never exercises."""
@@ -154,17 +125,14 @@ def test_three_tiers_agree_on_random_fields(spark, monkeypatch, seed, density):
     )
     labels = label_components(field, nx=24)
     one, l1 = split_merge_reference(labels, nx=24, overlap_threshold=0.5)
+    whole, l3, _ = M.split_merge_events(labels, nx=24, overlap_threshold=0.5)
+    assert len(whole.inputFiles()) == 1  # one page
     monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 100)
-    chk, l2, _ = M.split_merge_events_chunked(
-        labels, nx=24, overlap_threshold=0.5
-    )
+    chk, l2, _ = M.split_merge_events(labels, nx=24, overlap_threshold=0.5)
     assert len(chk.inputFiles()) >= 2  # really paged
-    par, l3, _ = M.split_merge_events_parallel(
-        labels, nx=24, block_steps=5, overlap_threshold=0.5
-    )
     a = sorted(map(tuple, one.collect()))
     assert a == sorted(map(tuple, chk.collect()))
-    assert a == sorted(map(tuple, par.collect()))
+    assert a == sorted(map(tuple, whole.collect()))
     led = lambda df: [  # noqa: E731
         (r.time, tuple(r.parent_ids), tuple(r.child_ids), tuple(r.overlap_areas))
         for r in df.collect()
@@ -183,7 +151,7 @@ def test_chunked_matches_oneshot(spark, two_blob_field, monkeypatch):
     labels = label_components(two_blob_field, nx=NX)
     one, ledger_one = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
     monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 500)  # 242 cells/step
-    chk, ledger_chk, _ = M.split_merge_events_chunked(
+    chk, ledger_chk, _ = M.split_merge_events(
         labels, nx=NX, overlap_threshold=0.5
     )
     assert len(chk.inputFiles()) >= 4
@@ -193,6 +161,59 @@ def test_chunked_matches_oneshot(spark, two_blob_field, monkeypatch):
     la = [(r.time, tuple(r.parent_ids), tuple(r.child_ids)) for r in ledger_one.collect()]
     lb = [(r.time, tuple(r.parent_ids), tuple(r.child_ids)) for r in ledger_chk.collect()]
     assert la == lb
+
+
+def test_pages_live_on_the_default_filesystem(
+    spark, two_blob_field, monkeypatch, tmp_path
+):
+    """The page spill and the resolved pages go through the Hadoop
+    FileSystem that resolves the tmp dir's path — on a cluster, the
+    shared default filesystem — not the driver's own disk. Under a
+    ``viewfs://`` default filesystem that mounts the tmp dir on another
+    directory, the output's files are ``viewfs://`` paths and the
+    output equals the reference; a driver-local write leaves that read
+    without its files."""
+    import tempfile
+    import uuid
+
+    import marex_spark.operators.merge as M
+    from marex_spark.operators.label import label_components
+    from tests.reference.merge import split_merge_reference
+
+    def cells(df):
+        return {(r.time, r.y, r.x, r.obj_id) for r in df.collect()}
+
+    def track():
+        res = track_events(
+            two_blob_field, nx=NX, overlap_threshold=0.5,
+            compute_stats=False, allow_merging=True,
+        )
+        return {tuple(r) for r in res.events.collect()}
+
+    labels = label_components(two_blob_field, nx=NX)
+    ref, _ = split_merge_reference(labels, nx=NX, overlap_threshold=0.5)
+    events = track()
+    conf = spark._jsc.hadoopConfiguration()
+    mount = f"marex{uuid.uuid4().hex[:8]}"
+    default_fs = conf.get("fs.defaultFS")
+    conf.set(
+        f"fs.viewfs.mounttable.{mount}.link.{tempfile.gettempdir()}",
+        tmp_path.as_uri(),
+    )
+    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 500)  # 242 cells/step
+    conf.set("fs.defaultFS", f"viewfs://{mount}/")
+    try:
+        out, _, _ = M.split_merge_events(labels, nx=NX, overlap_threshold=0.5)
+        files = out.inputFiles()
+        got = cells(out)
+        viewfs_events = track()
+    finally:
+        conf.set("fs.defaultFS", default_fs)
+    assert len(files) >= 4
+    assert all(f.startswith(f"viewfs://{mount}/") for f in files)
+    assert list(tmp_path.glob("marex_chunk_out_*"))
+    assert got == cells(ref)
+    assert viewfs_events == events
 
 
 class TestMaxDistance:
@@ -310,8 +331,8 @@ def test_merge_fixture_centroid_paths_and_identity(spark, two_blob_field):
 
 
 class TestSerialBudgetGuard:
-    """The chunked engine fails fast (typed error naming the parallel
-    engine) instead of OOMing the driver mid-collect."""
+    """The resolver fails fast (typed error naming ``max_driver_cells``)
+    instead of OOMing the driver mid-collect."""
 
     def _labels(self, spark):
         from marex_spark.operators.label import label_components
@@ -322,62 +343,16 @@ class TestSerialBudgetGuard:
 
     def test_chunked_over_budget_fails_fast(self, spark):
         from marex_spark.exceptions import TrackingError
-        from marex_spark.operators.merge import split_merge_events_chunked
+        from marex_spark.operators.merge import split_merge_events
 
         labels = self._labels(spark)
-        with pytest.raises(TrackingError, match="merge_parallel"):
-            split_merge_events_chunked(labels, nx=16, max_driver_cells=10)
+        with pytest.raises(TrackingError, match="max_driver_cells"):
+            split_merge_events(labels, nx=16, max_driver_cells=10)
         # within budget: runs
-        out, _, _ = split_merge_events_chunked(
+        out, _, _ = split_merge_events(
             labels, nx=16, max_driver_cells=10**9
         )
         assert out.count() == labels.count()
-
-
-def test_parallel_rounds_are_stale_only(spark, two_blob_field):
-    """The seeded Jacobi loop must NOT re-resolve every block every
-    round: after round 1 (all blocks, seeded carries), later rounds
-    touch only blocks whose carry-in changed — pinned via the per-call
-    DEBUG record so the scale property can't silently regress. The
-    fixture must really run a stale round, or this pins nothing."""
-    import logging
-
-    from marex_spark.logging_config import get_logger
-    from marex_spark.operators.label import label_components
-    from marex_spark.operators.merge import split_merge_events_parallel
-
-    records: list[logging.LogRecord] = []
-
-    class _Cap(logging.Handler):
-        def emit(self, record):
-            records.append(record)
-
-    labels = label_components(two_blob_field, nx=NX)
-    log = get_logger("marex_spark.operators.merge")
-    h = _Cap(level=logging.DEBUG)
-    prev_level = log.level
-    log.addHandler(h)
-    log.setLevel(logging.DEBUG)
-    try:
-        _, _, link_pairs = split_merge_events_parallel(
-            labels, nx=NX, block_steps=3, overlap_threshold=0.5,
-            labels_materialized=True,
-        )
-    finally:
-        log.removeHandler(h)
-        log.setLevel(prev_level)
-    (rec,) = [r for r in records if hasattr(r, "merge_stale")]
-    n_blocks = 4  # 10 steps / 3
-    assert rec.merge_blocks == n_blocks
-    stale = rec.merge_stale
-    assert rec.merge_rounds == len(stale)
-    assert stale[0] >= 1, stale  # at least one stale round ran
-    # every stale round re-resolves strictly fewer than all blocks
-    assert all(0 < n < n_blocks for n in stale[:-1]), stale
-    # the final stability check found nothing stale
-    assert stale[-1] == 0, stale
-    # the record also carries the link-pair count the kernel emitted
-    assert rec.merge_link_pairs == len(link_pairs) > 0
 
 
 # ------------------------------------------------- reference-replay parity
@@ -462,14 +437,15 @@ def test_mesh_nn_hop_bfs_vs_geodesic(spark):
     table is supplied: a chain mesh 0-1-2-3-4 whose cell 2 sits
     geodesically nearer parent B's member but one hop from BOTH parents
     goes to parent A (earlier parent wins equal hop counts), while the
-    geodesic fallback (no edges) assigns it to B. Two timesteps fit one
-    block, so the parallel engine hands them to the chunked engine."""
-    from marex_spark.operators.merge import split_merge_events_parallel
+    geodesic fallback (no edges) assigns it to B."""
+    from marex_spark.operators.merge import _collect_mesh_adj, split_merge_events
 
-    def resolve(**kw):
-        return split_merge_events_parallel(
+    def resolve(mesh_edges=None, **kw):
+        return split_merge_events(
             labels, geometry="sphere", cell_geo=geo, overlap_threshold=0.5,
-            time_col="t", nn_partitioning=True, **kw,
+            time_col="t", nn_partitioning=True,
+            mesh_adj=None if mesh_edges is None else _collect_mesh_adj(mesh_edges, geo),
+            **kw,
         )
 
     # lon: cell 2 at 22 deg — geodesically nearer cell 3 (30) than 1 (10)
@@ -507,7 +483,7 @@ def test_mesh_nn_hop_bfs_vs_geodesic(spark):
 
 
 def test_chunked_timestamp_tz_safe(spark, two_blob_field, monkeypatch):
-    """Non-UTC session timezone: the chunked engine's parquet spill
+    """Non-UTC session timezone: the resolver's parquet spill
     paths must not shift timestamp time columns (toPandas yields
     session-local wall times, pyarrow reads Spark INT96 as UTC wall —
     mixing them shifted output by the tz offset). Times ride the spill
@@ -528,7 +504,7 @@ def test_chunked_timestamp_tz_safe(spark, two_blob_field, monkeypatch):
         # a one-step cell budget over 10 steps -> 10 chunks >= 4:
         # pyarrow page fast path engaged
         monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 300)
-        chk, led_chk, _ = M.split_merge_events_chunked(
+        chk, led_chk, _ = M.split_merge_events(
             labels, nx=NX, overlap_threshold=0.5,
             labels_materialized=True,
         )
@@ -604,59 +580,6 @@ def test_nn_grid_block_window_wraps_y():
         grid=True, nx=8, wrap_x=False, block=2, cap2=64.0, ny=8,
     )
     assert far_x[0] == 49.0
-
-
-def test_mesh_adj_broadcast_path_identical(spark, monkeypatch):
-    """Past _MESH_ADJ_BCAST_BYTES the parallel tier ships the mesh CSR
-    as a Spark broadcast variable instead of a task-closure capture;
-    forcing the threshold to 0 must leave the output and ledger
-    byte-identical to the closure path."""
-    import datetime as _dt
-
-    import marex_spark.operators.merge as mg
-
-    n_cell = 60
-    edges = spark.createDataFrame(
-        [(c, (c + 1) % n_cell) for c in range(n_cell)]
-        + [((c + 1) % n_cell, c) for c in range(n_cell)],
-        "cell long, nbr long",
-    )
-    geo = spark.createDataFrame(
-        [(c, 0.0, c * 6.0) for c in range(n_cell)],
-        "cell long, lat double, lon double",
-    )
-    t0 = _dt.datetime(2021, 1, 1)
-    rows = []
-    for t in range(12):
-        c0 = (3 * t) % n_cell
-        c1 = (30 - 2 * t) % n_cell
-        for c in range(n_cell):
-            if min(abs(c - c0), n_cell - abs(c - c0)) <= 3 or min(
-                abs(c - c1), n_cell - abs(c - c1)
-            ) <= 3:
-                rows.append((t0 + _dt.timedelta(days=t), c, True))
-    ext = spark.createDataFrame(rows, "time timestamp, cell long, extreme boolean")
-    from marex_spark.operators.label import label_components_unstructured
-
-    labels = label_components_unstructured(
-        ext, edges, time_col="time"
-    ).localCheckpoint()
-
-    def run_parallel():
-        out, led, _ = mg.split_merge_events_parallel(
-            labels, geometry="sphere", cell_geo=geo, block_steps=3,
-            overlap_threshold=0.5, time_col="time",
-            nn_partitioning=True, mesh_edges=edges,
-        )
-        return (
-            sorted(map(tuple, out.select("time", "cell", "obj_id").collect())),
-            sorted(map(tuple, led.collect())),
-        )
-
-    closure = run_parallel()
-    monkeypatch.setattr(mg, "_MESH_ADJ_BCAST_BYTES", 0)
-    broadcast = run_parallel()
-    assert closure == broadcast
 
 
 def test_to_epoch_micros_dst_edges():

@@ -147,16 +147,12 @@ def _merging_field(spark):
     ).localCheckpoint()
 
 
-@pytest.mark.parametrize(
-    "block_steps,max_jobs", [(None, 18), (4, 27)], ids=["one-block", "parallel"]
-)
-def test_merge_tracking_job_count(spark, block_steps, max_jobs):
+def test_merge_tracking_job_count(spark):
     """Merge-mode tracking links events from the resolver kernel's link
     pairs: labelling, the resolver and the remap, with no Spark overlap
-    / areas / filter / components chain. Measured here: 18 jobs with
-    one block (the chunked engine), 27 with 4-step blocks (the parallel
-    engine, 3 blocks); the overlap chain it replaced cost 15 more in
-    each form."""
+    / areas / filter / components chain. Measured here: 15 jobs (the
+    Jacobi block engine this resolver replaced took 27 with 4-step
+    blocks; the overlap chain the link pairs replaced cost 15 more)."""
     from marex_spark.operators.track import track_events
 
     ext = _merging_field(spark)
@@ -164,10 +160,34 @@ def test_merge_tracking_job_count(spark, block_steps, max_jobs):
     before = max(status.getJobIdsForGroup(), default=-1)
     res = track_events(
         ext, nx=24, overlap_threshold=0.5, allow_merging=True,
-        compute_stats=False, merge_block_steps=block_steps,
+        compute_stats=False,
     )
     assert res.events.collect()
-    assert max(status.getJobIdsForGroup()) - before <= max_jobs
+    assert max(status.getJobIdsForGroup()) - before <= 15
+
+
+def _merge_tracker(spark, ext):
+    from marex_spark.tracker import tracker
+
+    gy = spark.range(16).select(F.col("id").cast("int").alias("y"), (F.col("id") * 5.0).alias("lat"))
+    gx = spark.range(24).select(F.col("id").cast("int").alias("x"), (F.col("id") * 15.0).alias("lon"))
+    return tracker(
+        ext, ny=16, nx=24, R_fill=2, T_fill=2, area_filter_quartile=0.5,
+        allow_merging=True, overlap_threshold=0.5, grid_y=gy, grid_x=gx,
+        coordinate_units="degrees",
+    )
+
+
+def test_warm_merge_tracker_run_job_count(spark):
+    """A warm merge-mode ``tracker(...).run()`` with stats: the fused
+    preprocessing, the driver-paged resolver, the link remap and the
+    stats tail in 14 Spark jobs, measured here."""
+    ext = _merging_field(spark)
+    _merge_tracker(spark, ext).run().lifetime_stats.collect()  # warm-up
+    status = spark.sparkContext.statusTracker()
+    before = max(status.getJobIdsForGroup(), default=-1)
+    assert _merge_tracker(spark, ext).run().lifetime_stats.collect()
+    assert max(status.getJobIdsForGroup()) - before <= 14
 
 
 def test_warm_merge_tracking_does_not_recompile(spark):
@@ -176,22 +196,15 @@ def test_warm_merge_tracking_does_not_recompile(spark):
     compiles (almost) nothing in Janino. At the default 100 entries a
     warm ``tracker_run`` recompiled ~125 classes every run."""
     from marex_spark.operators.track import track_events
-    from marex_spark.tracker import tracker
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
     ext = _merging_field(spark)
-    gy = spark.range(16).select(F.col("id").cast("int").alias("y"), (F.col("id") * 5.0).alias("lat"))
-    gx = spark.range(24).select(F.col("id").cast("int").alias("x"), (F.col("id") * 15.0).alias("lon"))
 
     def run():
-        tracker(
-            ext, ny=16, nx=24, R_fill=2, T_fill=2, area_filter_quartile=0.5,
-            allow_merging=True, overlap_threshold=0.5, grid_y=gy, grid_x=gx,
-            coordinate_units="degrees",
-        ).run().lifetime_stats.collect()
+        _merge_tracker(spark, ext).run().lifetime_stats.collect()
         track_events(
             ext, nx=24, overlap_threshold=0.5, allow_merging=True,
-            compute_stats=False, merge_block_steps=4,
+            compute_stats=False,
         ).events.collect()
 
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()

@@ -62,24 +62,22 @@ def test_unstructured_merging_preserves_identities(spark, ring, two_blob_mesh):
     assert len(ledger[0].parent_ids) == 2
 
 
-def test_unstructured_parallel_matches_serial(spark, ring, two_blob_mesh):
-    """The Jacobi time-block engine in sphere geometry must reproduce
-    the serial resolution exactly (labels + ledger), with small blocks
-    so carries cross the collision. Serial = one block over all 13
-    steps, which the parallel engine hands to the chunked engine; both
-    must also equal the whole-series reference."""
+def test_unstructured_paged_matches_reference(spark, ring, two_blob_mesh, monkeypatch):
+    """The sphere-geometry resolver must reproduce the whole-series
+    reference exactly (labels + ledger), in one page and paged two
+    steps at a time so carries cross the collision."""
+    import marex_spark.operators.merge as M
     from marex_spark.operators.label import label_components_unstructured
-    from marex_spark.operators.merge import split_merge_events_parallel
     from tests.reference.merge import split_merge_reference
 
     edges, geo = ring
     labels = label_components_unstructured(two_blob_mesh, edges).localCheckpoint()
 
-    def run(block_steps):
-        return split_merge_events_parallel(
-            labels, block_steps=block_steps, overlap_threshold=0.5,
-            geometry="sphere", cell_geo=geo,
+    def run():
+        out, ledger, _ = M.split_merge_events(
+            labels, overlap_threshold=0.5, geometry="sphere", cell_geo=geo,
         )
+        return out, ledger
 
     def rows(out, ledger, *_):
         return (
@@ -91,20 +89,22 @@ def test_unstructured_parallel_matches_serial(spark, ring, two_blob_mesh):
         )
 
     ref = rows(*split_merge_reference(labels, cell_geo=geo, overlap_threshold=0.5))
-    assert rows(*run(13)) == ref
-    assert rows(*run(4)) == ref
+    assert rows(*run()) == ref
+    monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", 40)  # 18 cells/step
+    out, ledger = run()
+    assert len(out.inputFiles()) >= 4  # really paged
+    assert rows(out, ledger) == ref
 
 
 @pytest.mark.parametrize("seed", [5, 17])
-def test_sphere_tiers_agree_on_random_mesh(spark, ring, seed):
-    """Sphere whole-series reference vs the parallel engine (4-step
-    blocks) vs its single-block chunked fallback (block_steps >= T) on
-    random clumpy mesh activity — beyond the structured colliding-blob
-    path."""
+def test_sphere_tiers_agree_on_random_mesh(spark, ring, seed, monkeypatch):
+    """Sphere whole-series reference vs the resolver in one page and
+    paged a few steps at a time, on random clumpy mesh activity —
+    beyond the structured colliding-blob path."""
     import datetime as _dt
 
+    import marex_spark.operators.merge as M
     from marex_spark.operators.label import label_components_unstructured
-    from marex_spark.operators.merge import split_merge_events_parallel
     from tests.reference.merge import split_merge_reference
 
     edges, geo = ring
@@ -125,13 +125,14 @@ def test_sphere_tiers_agree_on_random_mesh(spark, ring, seed):
     led = lambda df: [  # noqa: E731
         (r.time, tuple(r.parent_ids), tuple(r.child_ids)) for r in df.collect()
     ]
-    for block_steps in (4, 14):  # 14 steps: one block -> chunked engine
-        par, l2, _ = split_merge_events_parallel(
-            labels, block_steps=block_steps, overlap_threshold=0.5,
-            geometry="sphere", cell_geo=geo,
+    for budget, min_pages in ((M.TARGET_BLOCK_CELLS, 1), (60, 4)):
+        monkeypatch.setattr(M, "TARGET_BLOCK_CELLS", budget)
+        out, l2, _ = M.split_merge_events(
+            labels, overlap_threshold=0.5, geometry="sphere", cell_geo=geo,
         )
+        assert len(out.inputFiles()) >= min_pages
         assert sorted(map(tuple, one.collect())) == sorted(
-            map(tuple, par.collect())
+            map(tuple, out.collect())
         )
         assert led(l1) == led(l2)
 
@@ -241,14 +242,14 @@ def test_unstructured_merge_extension_idfree_parity(spark, ring, two_blob_mesh):
     edges, geo = ring
     full = track_events_unstructured(
         two_blob_mesh, edges, geo, overlap_threshold=0.5,
-        compute_stats=False, allow_merging=True, merge_parallel=False,
+        compute_stats=False, allow_merging=True,
     )
     times = sorted(r[0] for r in two_blob_mesh.select("time").distinct().collect())
     cutoff = times[8]  # split BEFORE the ~t=10 collision
     prior = track_events_unstructured(
         two_blob_mesh.filter(F.col("time") <= F.lit(cutoff)),
         edges, geo, overlap_threshold=0.5,
-        compute_stats=False, allow_merging=True, merge_parallel=False,
+        compute_stats=False, allow_merging=True,
     )
     extd = extend_track_events_unstructured(
         prior.events,

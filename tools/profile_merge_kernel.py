@@ -1,7 +1,8 @@
-"""cProfile of ONE parallel-merge block kernel (the per-round unit of
-track_merge_parallel_10x): labels one block's worth of timesteps of
-the 30-year synthetic SST fixture, pulls them to pandas, and runs
-_resolve_block locally under cProfile.
+"""cProfile of the split/merge block kernel (``merge._resolve_block``,
+the unit the driver-paged resolver runs once per page): labels the
+first ``block_steps`` timesteps of the 30-year synthetic SST fixture
+(the track_merge_parallel_10x bench row's series), pulls them to
+pandas, and runs _resolve_block on them locally under cProfile.
 
 Usage: python tools/profile_merge_kernel.py [block_steps]
 """
